@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
@@ -88,8 +88,9 @@ final class InvertedIndex private (
   /** [[search]] over a raw query STRING, tokenized with the index's own
     * tokenizer — the natural entry point for CJK queries, where the user
     * types `中文分词` and the bigram terms are an indexing detail. The
-    * tokenization is one 1-row Spark job (the identical Catalyst
-    * expression the build used — no driver reimplementation to drift).
+    * tokenization evaluates the identical Catalyst expression the build
+    * used (no driver reimplementation to drift) on the driver, with no
+    * Spark job.
     */
   def searchText(query: String, k: Int,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -160,9 +161,9 @@ final class InvertedIndex private (
     * behavior, correct except for the one-batch stats lag.
     */
   private def postingsOf(terms: Seq[String], st: InvStats): DataFrame = {
-    // The query's buckets: ≤ |terms| values, computed with the same hash
-    // expression the build used, in ONE tiny job (bounded by the query,
-    // never the corpus).
+    // The query's buckets: ≤ |terms| values, computed on the driver with
+    // the same hash expression the build used (bounded by the query, never
+    // the corpus).
     val buckets = bucketsOf(spark, terms.distinct, st.nbuckets)
     // The pinned-vs-live decision is made ONCE per search (snapshot loaded
     // and validated a single time): a per-bucket fallback could mix the
@@ -697,15 +698,23 @@ object InvertedIndex {
 
   /** Tokenize a raw query string with the given tokenizer, in array order
     * (split order for latin; per-run bigram order for Han — what
-    * [[InvertedIndex.phraseSearch]] needs). One 1-row Spark job evaluating
-    * the IDENTICAL Catalyst expressions the build used.
+    * [[InvertedIndex.phraseSearch]] needs), evaluating the IDENTICAL
+    * Catalyst expressions the build used — see [[evalOnDriver]].
     */
   private[graft] def queryTerms(spark: SparkSession, query: String,
       tokenizer: String): Seq[String] = {
     val toks = if (tokenizer == Mixed) mixedTokens(lit(query))
       else filter(split(lower(lit(query)), "[^a-z]+"), t => length(t) >= 3)
-    spark.range(1).select(toks.as("t")).first().getSeq[String](0).toList
+    evalOnDriver(spark, toks).getSeq[String](0).toList
   }
+
+  /** `cols` evaluated over a one-row local relation. The optimizer folds a
+    * projection over a local relation on the driver, so this runs no
+    * Spark job.
+    */
+  private def evalOnDriver(spark: SparkSession, cols: Column*): Row =
+    spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil))
+      .select(cols: _*).first()
 
   /** Per-(doc,term) BM25 contribution in integer micro-units. Spelled
     * operation-for-operation like the q110 oracle SQL so both engines walk
@@ -718,15 +727,14 @@ object InvertedIndex {
     floor(idf * (tf * lit(k1 + 1.0)) / denom * lit(1e6) + lit(0.5)).cast("long")
   }
 
-  /** Distinct sorted bucket ids of `terms` — one 1-row job for the whole
-    * set, evaluating the identical Catalyst xxhash64 the build hashed
-    * with (no driver-side reimplementation to drift).
+  /** Distinct sorted bucket ids of `terms`, evaluating the identical
+    * Catalyst xxhash64 the build hashed with (no driver-side
+    * reimplementation to drift) — see [[evalOnDriver]].
     */
-  private def bucketsOf(spark: SparkSession, terms: Seq[String],
+  private[graft] def bucketsOf(spark: SparkSession, terms: Seq[String],
       nb: Int): Seq[Long] =
-    spark.range(1)
-      .select(terms.map(t => pmod(xxhash64(lit(t)), lit(nb.toLong))): _*)
-      .first().toSeq.map(_.asInstanceOf[Long]).distinct.sorted
+    evalOnDriver(spark, terms.map(t => pmod(xxhash64(lit(t)), lit(nb.toLong))): _*)
+      .toSeq.map(_.asInstanceOf[Long]).distinct.sorted
 
   private val indexSchema = StructType(Seq(
     StructField("bucket", LongType, nullable = false),

@@ -3,10 +3,12 @@ package graft.operators
 import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig}
 import graft.queries.PipelineQueries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** A PERSISTED IVF (inverted-file) ANN index, stored as a MergeTree table:
   * the marriage of the engine's two halves. q28 demonstrates the IVF query
@@ -19,13 +21,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   *     land each cluster as its own part of a ColumnarMergeTree ordered by
   *     cluster id. Centroids persist as a parquet sidecar under the table
   *     dir (`_centroids/` — invisible to the part manifest).
-  *   - search: rank centroids per query (a broadcast-sized cross join),
-  *     keep nprobe per query, then scan ONLY the probed clusters via
-  *     `rangeScan(cid, cid)` — which is driver-side manifest part pruning,
-  *     so the engine reads nprobe/nlist of the corpus from disk, exactly
-  *     what an inverted file is for. The probed-cid set is ≤ nlist values
-  *     (collected to the driver — bounded by the quantizer size, never by
-  *     the corpus or query count).
+  *   - search: the quantizer is fixed after build, so the instance holds
+  *     it (≤ nlist rows, read once). Each search collects its query batch
+  *     and ranks the centroids per query on the driver with the same
+  *     cosine/r6 expressions, keeping nprobe per query; the probe, a local
+  *     (qid, qv, cid) relation, broadcasts onto a scan of ONLY the probed
+  *     clusters via `rangeScan(cid, cid)` — which is driver-side manifest
+  *     part pruning, so the engine reads nprobe/nlist of the corpus from
+  *     disk, exactly what an inverted file is for. The driver holds
+  *     |queries|·nlist values, bounded by the query batch and the
+  *     quantizer, never by the corpus.
   *
   * Scale posture: the index table partitions/compacts/recovers like any
   * other MergeTree table (background merges keep cluster parts healthy as
@@ -35,22 +40,20 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
 final class IvfIndex private (
     val spark: SparkSession,
     val table: ColumnarMergeTree,
-    val path: String) {
+    val path: String,
+    quantizer: Array[Row]) {
 
   import IvfIndex._
 
-  private def centroids: DataFrame =
-    spark.read.parquet(s"$path/_centroids")
-
-  /** Quantizer size (centroid count) — one read of the tiny sidecar. */
-  lazy val nlist: Int = centroids.count().toInt
+  /** Quantizer size (centroid count). */
+  val nlist: Int = quantizer.length
 
   /** Vector dimensionality the index was built on — one centroid row.
     * Serve faces validate query vectors against it: the cosine expression
     * documents equal lengths as the embedding pipeline's contract, which
     * ad-hoc (SQL-literal) queries don't get for free.
     */
-  lazy val dim: Int = centroids.select(col("cv")).first().getSeq[Double](0).size
+  lazy val dim: Int = quantizer.head.getSeq[Double](1).size
 
   /** Top-k neighbours per query vector, probing `nprobe` clusters.
     * `queries`: (qid: Long, qv: array<double>). Output:
@@ -58,22 +61,12 @@ final class IvfIndex private (
     */
   def search(queries: DataFrame, k: Int, nprobe: Int,
              excludeSelf: Boolean = true): DataFrame = {
-    val c = centroids
-    val pw = Window.partitionBy(col("qid")).orderBy(col("psim").desc, col("cid"))
-    val probe = queries.crossJoin(broadcast(c))
-      .select(col("qid"), col("qv"), col("cid"),
-        r6(cosine(col("qv"), col("cv"))).as("psim"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    // Probed clusters across the whole query batch: ≤ nlist values.
-    val cids = probe.select(col("cid")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val probedVectors = probedScan(cids)
+    val (probe, cids) = probeOf(localQueries(queries), nprobe)
     // The probe set is query-batch-sized (|queries| · nprobe rows) while
     // the probed vectors side scales with the corpus: broadcast the small
     // side explicitly — stats-blind estimation must never shuffle the
     // corpus rows into a sort-merge join here.
-    val scored = probedVectors
+    val scored = probedScan(cids)
       .join(broadcast(probe), Seq("cid"))
       // excludeSelf compares qid against vec_id — correct when queries ARE
       // corpus rows (the q23/q28 workload); pass false when query ids live
@@ -81,11 +74,62 @@ final class IvfIndex private (
       // number silently vanishes from that query's results.
       .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
       .select(col("qid"), col("vec_id"), r6(cosine(col("qv"), col("v"))).as("sim"))
+    topK(scored, k)
+  }
+
+  /** The query batch's (qid, qv) rows, collected once into a local
+    * relation: every later use (probe ranking, the broadcast probe, the
+    * ADC lookup tables) then reads driver memory, not the source again.
+    */
+  private def localQueries(queries: DataFrame): DataFrame = {
+    val q = queries.select(col("qid"), col("qv"))
+    spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+  }
+
+  /** The probe of a local query batch, planned on the driver: each
+    * query's `nprobe` best clusters by r6(cosine(qv, cv)) descending, ties
+    * to the lower cid, as a local (qid, qv, cid) relation, plus the sorted
+    * distinct probed cids. The pair scores are a projection over a local
+    * relation, which the optimizer evaluates on the driver, so ranking
+    * runs no Spark job. When every list is probed (nprobe ≥ nlist — exact
+    * mode) there is nothing to rank and each query probes every cid.
+    */
+  private def probeOf(q: DataFrame, nprobe: Int): (DataFrame, Array[Long]) = {
+    val qs = q.collect().toSeq
+    val probes: Seq[Row] =
+      if (nprobe >= nlist)
+        for (r <- qs; c <- quantizer) yield Row(r.get(0), r.get(1), c.getLong(0))
+      else {
+        val pairs = for (r <- qs; c <- quantizer)
+          yield Row(r.get(0), r.get(1), c.getLong(0), c.get(1))
+        val scored = spark.createDataFrame(pairs.asJava,
+            q.schema.add(probeCid).add(quantizerSchema("cv")))
+          .select(col("qid"), col("qv"), col("cid"),
+            r6(cosine(col("qv"), col("cv"))).as("psim"))
+          .collect().toSeq
+        // SQL's `psim DESC, cid` per qid: nulls last, then lower cid.
+        val order = Ordering.Tuple3(Ordering.Boolean,
+          Ordering.Double.TotalOrdering.reverse, Ordering.Long)
+        scored.groupBy(_.get(0)).valuesIterator.flatMap(_.sortBy(r =>
+            (r.isNullAt(3), if (r.isNullAt(3)) 0.0 else r.getDouble(3),
+              r.getLong(2)))(order).take(nprobe))
+          .map(r => Row(r.get(0), r.get(1), r.getLong(2))).toSeq
+      }
+    (spark.createDataFrame(probes.asJava, q.schema.add(probeCid)),
+      probes.map(_.getLong(2)).distinct.sorted.toArray)
+  }
+
+  /** Per-query top-k of (qid, vec_id, sim) rows, ordered by (qid, rnk).
+    * The filtered ranks are k per query, so one partition holds them and
+    * sorting it adds no range-sampling job; the partial WindowGroupLimit
+    * still runs before the exchange.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid"), col("rnk"), col("vec_id"), col("sim"))
-      .orderBy(col("qid"), col("rnk"))
+      .coalesce(1).sortWithinPartitions(col("qid"), col("rnk"))
   }
 
   /** Scan of exactly the probed clusters: the sorted cid set coalesces
@@ -136,13 +180,8 @@ final class IvfIndex private (
     // Exact cosine is evaluated HERE and only here — on shortlist rows
     // (adcShortlist's output is capped at |queries|·shortlist by its
     // row_number filter; the spec pins that bound).
-    val exact = short.select(col("qid"), col("vec_id"),
-      r6(cosine(col("qv"), col("v"))).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
-    exact.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), col("sim"))
-      .orderBy(col("qid"), col("rnk"))
+    topK(short.select(col("qid"), col("vec_id"),
+      r6(cosine(col("qv"), col("v"))).as("sim")), k)
   }
 
   /** The ADC stage of [[searchAdc]]: (qid, qv, vec_id, v) of the
@@ -154,21 +193,14 @@ final class IvfIndex private (
       shortlist: Int, excludeSelf: Boolean = true): DataFrame = {
     val cb = pqCodebooks.getOrElse(throw new IllegalStateException(
       s"no PQ codebooks at $path — build with IvfIndex.buildAdc"))
-    val c = centroids
-    val pw = Window.partitionBy(col("qid")).orderBy(col("psim").desc, col("cid"))
-    val probe = queries.crossJoin(broadcast(c))
-      .select(col("qid"), col("qv"), col("cid"),
-        r6(cosine(col("qv"), col("cv"))).as("psim"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cids = probe.select(col("cid")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val probed = probedScan(cids)
-    // The query's m×k lookup table is computed ONCE on the broadcast side;
-    // per probed row the approximate score is m array lookups (pq_adc).
-    val qlut = queries.select(col("qid"),
+    val q = localQueries(queries)
+    val (probe, cids) = probeOf(q, nprobe)
+    // The query's m×k lookup table is computed ONCE, on the driver (a
+    // projection over the local query relation); per probed row the
+    // approximate score is m array lookups (pq_adc).
+    val qlut = q.select(col("qid"),
       call_function("pq_lut", col("qv"), typedLit(cb.cb)).as("lut"))
-    val scored = probed.join(broadcast(probe), Seq("cid"))
+    val scored = probedScan(cids).join(broadcast(probe), Seq("cid"))
       .join(broadcast(qlut), Seq("qid"))
       // see search(): self-exclusion is only meaningful when query ids
       // share the corpus id space
@@ -190,22 +222,8 @@ final class IvfIndex private (
     * rebuilding when drift matters.
     */
   def append(vectors: DataFrame): Unit = {
-    val c = centroids
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    val assigned = vectors.select(col("vec_id"), col("v"))
-      .crossJoin(broadcast(c))
-      .select(col("vec_id"), col("v"), col("cid"),
-        r6(cosine(col("v"), col("cv"))).as("csim"))
-      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
-      .select(col("cid"), col("vec_id"), col("v"))
-    // An ADC index also encodes the batch against the FIXED codebooks
-    // (quantizers don't retrain on append — the IVF contract above), so
-    // appended rows ADC-score exactly like built ones.
-    val rows = pqCodebooks match {
-      case Some(cb) => assigned.withColumn("code",
-        call_function("pq_encode", col("v"), typedLit(cb.cb)))
-      case None => assigned
-    }
+    val rows = assignRows(vectors, quantizerFrame(spark, quantizer),
+      pqCodebooks)
     // ONE partitioned-ingest job lands one part per touched cluster, and
     // the batch publishes in one manifest update (all-or-nothing).
     table.insertBatch(rows)
@@ -440,17 +458,11 @@ object IvfIndex {
     val train = e.filter(col("vec_id") % trainMod === 0)
     val c = (1 to lloydIters).foldLeft(c0)((cc, _) =>
       PipelineQueries.lloydStep(train, cc))
-    val aw = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
-    val assigned = e.crossJoin(broadcast(c))
-      .select(col("vec_id"), col("v"), col("cid"),
-        r6(cosine(col("v"), col("cv"))).as("csim"))
-      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
-      .select(col("cid"), col("vec_id"), col("v"))
-    val rows = pq match {
-      case Some(cb) => assigned.withColumn("code",
-        call_function("pq_encode", col("v"), typedLit(cb.cb)))
-      case None => assigned
-    }
+    // The quantizer is ≤ nl rows: collect it once, so the assignment, the
+    // sidecar and the returned instance all hold the same centroids.
+    val quantizer = c.select(col("cid"), col("cv")).collect().sortBy(_.getLong(0))
+    val cl = quantizerFrame(spark, quantizer)
+    val rows = assignRows(e, cl, pq)
     // PARTITION BY cid: ONE partitioned-ingest job lands one part per live
     // cluster (a part's [minKey, maxKey] is one cid, so a probe's
     // rangeScan(cid, cid) prunes to exactly that part). The per-cluster
@@ -463,11 +475,48 @@ object IvfIndex {
       orderBy = Seq("cid"), MergeTreeConfig(maxParts = 2 * nl),
       partitionBy = Some("cid"))
     t.insertBatch(rows)
-    c.select(col("cid"), col("cv")).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/_centroids")
+    cl.coalesce(1).write.mode("overwrite").parquet(s"$path/_centroids")
     pq.foreach(cb => writePq(path, cb))
-    new IvfIndex(spark, t, path)
+    new IvfIndex(spark, t, path, quantizer)
   }
+
+  /** (cid, vec_id, v[, code]) index rows for a vector batch: each vector
+    * goes to its nearest centroid of `c` (ties to the lower cid), and an
+    * ADC index also encodes it against its codebooks. Build and append
+    * share it, so appended rows land exactly like built ones.
+    */
+  private def assignRows(vectors: DataFrame, c: DataFrame,
+      pq: Option[ProductQuantizer.PqCodebooks]): DataFrame = {
+    val aw = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid"))
+    val assigned = vectors.select(col("vec_id"), col("v"))
+      .crossJoin(broadcast(c))
+      .select(col("vec_id"), col("v"), col("cid"),
+        r6(cosine(col("v"), col("cv"))).as("csim"))
+      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
+      .select(col("cid"), col("vec_id"), col("v"))
+    pq match {
+      case Some(cb) => assigned.withColumn("code",
+        call_function("pq_encode", col("v"), typedLit(cb.cb)))
+      case None => assigned
+    }
+  }
+
+  /** The centroid sidecar's layout: (cid, cv), one row per list. */
+  private val quantizerSchema = StructType(Seq(
+    StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+
+  /** The probe relation's cluster column. */
+  private val probeCid = StructField("cid", LongType, nullable = false)
+
+  private def quantizerFrame(spark: SparkSession, quantizer: Array[Row]): DataFrame =
+    spark.createDataFrame(quantizer.toSeq.asJava, quantizerSchema)
+
+  /** The centroid sidecar's rows in cid order — the one read of
+    * `_centroids` an opened instance makes.
+    */
+  private def readQuantizer(spark: SparkSession, path: String): Array[Row] =
+    spark.read.schema(quantizerSchema).parquet(s"$path/_centroids")
+      .collect().sortBy(_.getLong(0))
 
   /** Codebooks sidecar I/O (`_pq.json`) — atomic swap like the inverted
     * index's stats file.
@@ -520,9 +569,9 @@ object IvfIndex {
         s"ANN index at $path has a torn update (ids: " +
           s"${java.nio.file.Files.readString(intent)}): re-run the update " +
           s"from its inputs or rebuild, then remove $UpdateIntentFile")
-    val nl = spark.read.parquet(s"$path/_centroids").count().toInt
-    val cfg = MergeTreeConfig(maxParts = 2 * math.max(1, nl))
-    new IvfIndex(spark, ColumnarMergeTree.open(spark, path, cfg), path)
+    val quantizer = readQuantizer(spark, path)
+    val cfg = MergeTreeConfig(maxParts = 2 * math.max(1, quantizer.length))
+    new IvfIndex(spark, ColumnarMergeTree.open(spark, path, cfg), path, quantizer)
   }
 
   /** Marker bracketing update's two manifest commits; see [[IvfIndex.update]]. */

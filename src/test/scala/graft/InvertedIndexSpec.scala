@@ -299,6 +299,62 @@ class InvertedIndexSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(counter)
   }
 
+  /** Spark jobs started while `f` runs on this thread (its job group). */
+  private def jobsOf(f: => Any): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try f finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(500) // listener events post asynchronously
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("index probes run at most 3 Spark jobs; query hashing and tokenizing run none") {
+    import spark.implicits._
+    val terms = Seq("dup", "vector", "merge")
+    val nb = idx.nbuckets
+    // Query-sized inputs are evaluated on the driver: the same Catalyst
+    // expressions the build used, over a one-row local relation.
+    var buckets = Seq.empty[Long]
+    assert(jobsOf { buckets = InvertedIndex.bucketsOf(spark, terms, nb) } == 0)
+    val hashed = terms.map(t => Seq(t).toDF("t")
+      .select(pmod(xxhash64(col("t")), lit(nb.toLong))).first().getLong(0))
+    assert(buckets == hashed.distinct.sorted)
+    var latin = Seq.empty[String]
+    assert(jobsOf { latin = InvertedIndex.queryTerms(
+      spark, "Dup, vector of MERGE", InvertedIndex.Latin) } == 0)
+    assert(latin == Seq("dup", "vector", "merge"))
+    var mixed = Seq.empty[String]
+    assert(jobsOf { mixed = InvertedIndex.queryTerms(
+      spark, "spark 中文分词", InvertedIndex.Mixed) } == 0)
+    assert(mixed == Seq("spark", "中文", "文分", "分词"))
+    val bm25 = jobsOf(idx.search(terms, k = 10).collect())
+    assert(bm25 <= 3, s"BM25 search ran $bm25 jobs")
+    // IVF: the quantizer lives in the instance and a local query batch is
+    // ranked on the driver, so only the probed-list scoring runs jobs.
+    graft.functions.GraftFunctions.register(spark)
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val ivf = graft.operators.IvfIndex.build(spark, vecs,
+      java.nio.file.Files.createTempDirectory("ivf_jobs_").toString, nlist = 8)
+    val qv = vecs.filter(col("vec_id") === 0).first().getSeq[Double](1)
+    val q = Seq((0L, qv)).toDF("qid", "qv")
+    val ann = jobsOf(ivf.search(q, k = 10, nprobe = 3, excludeSelf = false).collect())
+    assert(ann <= 3, s"IVF search ran $ann jobs")
+    ivf.table.shutdown()
+  }
+
   test("multilingual tokenizer: Han bigrams per run, isolated chars, mixed script") {
     import spark.implicits._
     // REAL CJK fixtures (the parquet testdata is 100% ASCII — even its

@@ -2,7 +2,8 @@ package graft
 
 import graft.operators.IvfIndex
 import graft.queries.PipelineQueries
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -192,6 +193,72 @@ class IvfIndexSpec extends AnyFunSuite {
       .collect().toSeq
     assert(aa == bb, s"post-race ADC search must equal rebuild:\n$aa\nvs\n$bb")
     idx.table.shutdown(); rebuilt.table.shutdown()
+  }
+
+  /** The crossJoin + row_number spelling search() replaced, kept as the
+    * reference: centroids read from the sidecar and ranked per query by a
+    * window over the query × centroid cross join, the probed lists
+    * scored, and the top-k globally sorted.
+    */
+  private def referenceSearch(idx: IvfIndex, q: DataFrame, k: Int,
+      nprobe: Int, excludeSelf: Boolean): DataFrame = {
+    def cosine(a: Column, b: Column) = call_function("cosine_similarity", a, b)
+    def r6(c: Column) = floor(c * lit(1e6) + lit(0.5)).cast("double") / 1e6
+    val c = spark.read.parquet(s"${idx.path}/_centroids")
+    val pw = Window.partitionBy(col("qid")).orderBy(col("psim").desc, col("cid"))
+    val probe = q.crossJoin(broadcast(c))
+      .select(col("qid"), col("qv"), col("cid"),
+        r6(cosine(col("qv"), col("cv"))).as("psim"))
+      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nprobe)
+      .select(col("qid"), col("qv"), col("cid"))
+    val scored = idx.table.scan().join(broadcast(probe), Seq("cid"))
+      .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
+      .select(col("qid"), col("vec_id"), r6(cosine(col("qv"), col("v"))).as("sim"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("qid"), col("rnk"), col("vec_id"), col("sim"))
+      .orderBy(col("qid"), col("rnk"))
+  }
+
+  test("driver-side probe == the crossJoin + row_number reference, ties included") {
+    def same(idx: IvfIndex, q: DataFrame, nprobe: Int, ex: Boolean): Unit = {
+      val got = idx.search(q, k = 10, nprobe, ex).collect().toSeq
+      val want = referenceSearch(idx, q, 10, nprobe, ex).collect().toSeq
+      assert(got.nonEmpty && got == want,
+        s"nprobe=$nprobe excludeSelf=$ex:\n$got\nvs\n$want")
+    }
+    // The 5-query parquet-backed batch on the testdata index, ranked,
+    // partial and exact (every list) probes.
+    val idx = IvfIndex.build(spark, vectors,
+      Files.createTempDirectory("ivf_ref_").toString, nlist = 8)
+    for (nprobe <- Seq(1, 3, 8, 20); ex <- Seq(true, false))
+      same(idx, queries, nprobe, ex)
+    idx.table.shutdown()
+    // Centroid ties: with no Lloyd step the centroids are vectors 0-3, the
+    // unit axes x, y, z and -x. Query 100 sits exactly between x and y,
+    // query 101 between x, y and z, so nprobe = 1 must take cid 0 and
+    // nprobe = 2 cids 0 and 1. Queries 4 and 9 are corpus rows, which
+    // excludeSelf drops from their own results.
+    import spark.implicits._
+    val axes = Seq(Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0), Seq(0.0, 0.0, 1.0),
+      Seq(-1.0, 0.0, 0.0))
+    val corpus = axes.zipWithIndex.map { case (v, i) => (i.toLong, v) } ++
+      (4 until 40).map { i =>
+        val a = axes(i % 4); val j = 0.05 * (i / 4)
+        (i.toLong, Seq(a(0) + j, a(1) + j / 2, a(2) + j / 3))
+      }
+    val tie = IvfIndex.build(spark, corpus.toDF("vec_id", "v"),
+      Files.createTempDirectory("ivf_tie_").toString, nlist = 4, lloydIters = 0)
+    val tq = (Seq((100L, Seq(1.0, 1.0, 0.0)), (101L, Seq(1.0, 1.0, 1.0))) ++
+      Seq(4, 9).map(i => corpus(i))).toDF("qid", "qv")
+    for (nprobe <- Seq(1, 2, 3); ex <- Seq(true, false)) same(tie, tq, nprobe, ex)
+    val cidOf = tie.table.scan().select(col("vec_id"), col("cid")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val hit = tie.search(tq.filter(col("qid") === 100L), k = 40, nprobe = 1,
+      excludeSelf = false).collect().map(r => cidOf(r.getLong(2))).toSet
+    assert(hit == Set(0L), s"a tied probe must take the lower cid, got $hit")
+    tie.table.shutdown()
   }
 
   test("index search equals q28 (same quantizer) and survives reopen") {

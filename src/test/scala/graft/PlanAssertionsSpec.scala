@@ -311,12 +311,20 @@ class PlanAssertionsSpec extends AnyFunSuite {
   test("q48/q115: probed corpus rows meet the query-batch probe via broadcast") {
     // The probe set is |queries|·nprobe rows; the probed vectors scale
     // with the corpus. A sort-merge join here would shuffle corpus rows.
+    // Centroids are ranked on the driver, so the broadcast probe is a
+    // local (qid, qv, cid) relation and no query × centroid cross join is
+    // planned.
     for (name <- Seq("q48_ivf_index", "q115_ivfadc")) {
       val p = plan(SparkEntry.queries(name)(spark, dir))
-      assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
+      assert(p.contains("BroadcastHashJoin"),
         s"$name: probe side must broadcast:\n$p")
       assert(!p.contains("SortMergeJoin"),
         s"$name: corpus side must never shuffle for the probe join:\n$p")
+      assert("""BroadcastExchange .*\n[ :|]*\+- LocalTableScan \[qid#\d+L?, qv#\d+, cid#""".r
+          .findFirstIn(p).isDefined,
+        s"$name: the broadcast probe must be a LocalTableScan:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+        s"$name: no probe cross join:\n$p")
     }
   }
 
