@@ -1,0 +1,25 @@
+package graft.mergetree
+
+import org.apache.hadoop.conf.Configuration
+
+/** Hadoop's default configuration, parsed once per JVM.
+  *
+  * A fresh `Configuration` scans and parses the XML default resources on
+  * its first read (~7.5 ms); a copy of an already-loaded one clones its
+  * properties (~0.16 ms). Every parquet reader, writer and footer read in
+  * the engine takes its conf from [[copy]], so a scan task pays the copy,
+  * not the parse. Callers that set keys (schema, filter predicate) set them
+  * on their own copy; nothing writes to the shared instance.
+  */
+object HadoopConf {
+  private val defaults = new Configuration()
+
+  def copy(): Configuration = {
+    // Load the shared properties before copying: Hadoop drops them on every
+    // registered conf when a class adds a default resource (JobConf's
+    // static init does), and a copy of an unloaded conf parses the XML
+    // again on its own.
+    defaults.size()
+    new Configuration(defaults)
+  }
+}

@@ -1352,8 +1352,9 @@ object MergeTreeTable {
   private val RowsPerFileTarget = 1000000L
 
   /** Shared parquet-mr schema + Hadoop conf for the driver-local flush path.
-    * Built once: `new Configuration()` costs milliseconds (XML resource
-    * scan) — per-flush that was a third of the 50k-row ingest workload.
+    * Built once: even a copy of the JVM-wide defaults ([[HadoopConf]]) is
+    * not free, and a per-flush conf parse was a third of the 50k-row ingest
+    * workload.
     * RawLocalFileSystem skips the .crc shadow files ChecksumFileSystem
     * writes (Spark's own parquet commit protocol does the same).
     */
@@ -1366,7 +1367,7 @@ object MergeTreeTable {
         |}""".stripMargin)
 
   private[mergetree] val localFlushConf: org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration()
+    val c = HadoopConf.copy()
     c.set("fs.file.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(localFlushSchema, c)
     c

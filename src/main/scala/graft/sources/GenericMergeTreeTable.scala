@@ -28,7 +28,10 @@ import scala.jdk.CollectionConverters._
   *
   * Reads are vectorized (ParquetColumnarReader) with both pruning layers:
   * driver-side part pruning from gmanifest leading-key bounds (O8) and
-  * parquet row-group skip via a pushed FilterPredicate (O7). Reads are RAW
+  * parquet row-group skip via a pushed FilterPredicate (O7). The surviving
+  * part files are packed, in manifest order, into splits of Spark's own
+  * file-split size (MergeTreePartition.pack), so a scan over many small
+  * parts launches as many tasks as `spark.read.parquet` would. Reads are RAW
   * part rows — Replacing/Summing collapse is a read-time VIEW concern, like
   * ClickHouse SELECT without FINAL; `ColumnarMergeTree.scan()` is the
   * FINAL-applying API.
@@ -800,17 +803,8 @@ class GenericMergeTreeScanImpl(
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     }
 
-  private def parquetFiles(p: GPartMeta): List[String] = {
-    val dir = Paths.get(path, p.dir)
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toList
-      finally s.close()
-    }
-  }
+  private def parquetFiles(p: GPartMeta): List[String] =
+    MergeTreePartition.parquetFiles(Paths.get(path, p.dir))
 
   override def planInputPartitions(): Array[InputPartition] = {
     spjGroups match {
@@ -839,8 +833,7 @@ class GenericMergeTreeScanImpl(
         val keep = surviving(live)
         GenericMergeTreeScan.lastPruning.set((keep.size, live.size))
         if (keep.forall(_.muts.isEmpty))
-          keep.flatMap(p => parquetFiles(p).map(f =>
-            MergeTreePartition(f): InputPartition)).toArray
+          MergeTreePartition.pack(keep.flatMap(parquetFiles))
         else {
           // Pending lightweight mutations: the scan applies them ITSELF —
           // `format("mergetree")` needs no analyzer rule, and snapshot/
@@ -919,7 +912,7 @@ class GenericReaderFactory(
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
-      case MergeTreePartition(f) => new ParquetColumnarReader(f, required, filter)
+      case MergeTreePartition(files) => new ChainedColumnarReader(files, required, filter)
       case MergeTreeGroupedPartition(files, _) =>
         new ChainedColumnarReader(files, required, filter)
       case other => throw new UnsupportedOperationException(
@@ -936,35 +929,4 @@ class GenericReaderFactory(
       case _ => throw new UnsupportedOperationException(
         "mergetree-generic scan is columnar; row reader is never planned")
     }
-}
-
-/** Sequential chain of per-file columnar readers — the reader behind a
-  * [[MergeTreeGroupedPartition]] (one storage partition value = one split,
-  * possibly many part files). Empty file lists yield an empty partition.
-  */
-private[sources] class ChainedColumnarReader(
-    files: Array[String],
-    required: StructType,
-    filter: Option[FilterPredicate])
-    extends PartitionReader[ColumnarBatch] {
-
-  private var i = 0
-  private var cur: ParquetColumnarReader = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (cur == null) {
-        if (i >= files.length) return false
-        cur = new ParquetColumnarReader(files(i), required, filter)
-        i += 1
-      }
-      if (cur.next()) return true
-      cur.close(); cur = null
-    }
-    false // unreachable
-  }
-
-  override def get(): ColumnarBatch = cur.get()
-
-  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }

@@ -1,26 +1,18 @@
 package graft.sources
 
-import graft.mergetree.{KeyOrder, Manifest, MergeTreeTable}
+import graft.mergetree.{HadoopConf, KeyOrder, Manifest, MergeTreeTable}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicReference
@@ -48,9 +40,9 @@ import scala.jdk.CollectionConverters._
   * pushdown. Reads see the durable table state — flushed parts, not another
   * process's memtable — exactly like reopening the table (O23).
   *
-  * Scan is row-based (parquet-mr GroupReadSupport): simple and
-  * codegen-friendly downstream; the hot analytic paths go through
-  * MergeTreeTable.query which uses Spark's vectorized parquet scan.
+  * Scan is vectorized (ParquetColumnarReader, Spark's own parquet reader);
+  * the surviving part files are packed in manifest order into splits of
+  * Spark's file-split size (MergeTreePartition.pack).
   */
 class MergeTreeTableProvider extends TableProvider with DataSourceRegister {
   import graft.mergetree.ColumnarMergeTree.TableDef
@@ -400,24 +392,62 @@ class MergeTreeScan(
         p.overlapsRange(lo.getOrElse(p.minKey), hi.getOrElse(p.maxKey)))
     }
     MergeTreeScan.lastPruning.set((surviving.size, live.size))
-    surviving.flatMap { p =>
-      val dir = Paths.get(path, s"part_${p.partId}")
-      if (!Files.isDirectory(dir)) Nil
-      else {
-        val s = Files.list(dir)
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(f => MergeTreePartition(f.toString): InputPartition).toList
-        finally s.close()
-      }
-    }.toArray
+    MergeTreePartition.pack(surviving.flatMap(p =>
+      MergeTreePartition.parquetFiles(Paths.get(path, s"part_${p.partId}"))))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MergeTreeReaderFactory(required, lo, hi)
 }
 
-case class MergeTreePartition(file: String) extends InputPartition
+/** One scan split: consecutive part files, read in order by a
+  * [[ChainedColumnarReader]].
+  */
+case class MergeTreePartition(files: Array[String]) extends InputPartition
+
+object MergeTreePartition {
+
+  /** The parquet files of one part directory (none if it is gone). */
+  private[sources] def parquetFiles(dir: java.nio.file.Path): List[String] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(_.toString).toList
+      finally s.close()
+    }
+
+  /** Packs part files into splits by Spark's own file-split rule, the one
+    * `spark.read.parquet` plans with: each file costs its length plus
+    * `spark.sql.files.openCostInBytes`, and a split closes when the next
+    * file would push it past `FilePartition.maxSplitBytes` (derived from
+    * `spark.sql.files.maxPartitionBytes` and `minPartitionNum`). Unlike
+    * Spark, which packs largest-first, files keep the given manifest order,
+    * so every split holds consecutive files and an unordered scan returns
+    * rows in manifest order. A file never spans two splits.
+    */
+  private[sources] def pack(files: Seq[String]): Array[InputPartition] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val sized = files.map(f => f -> Files.size(Paths.get(f)))
+    val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(spark, sized.map(_._2 + openCost).sum)
+    val splits = Array.newBuilder[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[String]
+    var curBytes = 0L
+    def close(): Unit = if (cur.nonEmpty) {
+      splits += MergeTreePartition(cur.toArray)
+      cur.clear(); curBytes = 0L
+    }
+    sized.foreach { case (f, len) =>
+      if (curBytes + len > maxSplit) close()
+      cur += f; curBytes += len + openCost
+    }
+    close()
+    splits.result()
+  }
+}
 
 /** One storage partition VALUE's whole file set as a single split, carrying
   * its typed key for Spark's storage-partitioned join (HasPartitionKey).
@@ -446,90 +476,18 @@ class MergeTreeReaderFactory(
   }
 
   /** Vectorized scan (Spark's own parquet reader → ColumnarBatch →
-    * whole-stage codegen); the row reader below survives as the
-    * no-batch-support fallback path.
+    * whole-stage codegen) for every split, so Spark never asks for rows.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ParquetColumnarReader(
-      partition.asInstanceOf[MergeTreePartition].file, required, rangePredicate)
+    new ChainedColumnarReader(
+      partition.asInstanceOf[MergeTreePartition].files, required, rangePredicate)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new MergeTreeRowReader(
-      partition.asInstanceOf[MergeTreePartition].file, required, lo, hi)
-}
-
-/** Row reader over one parquet file via parquet-mr, with the key range
-  * compiled to a FilterPredicate (row-group pruning == O7 granule pruning).
-  */
-class MergeTreeRowReader(
-    file: String,
-    required: StructType,
-    lo: Option[String],
-    hi: Option[String])
-    extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration()
-  // Column pruning: request only the needed fields (parquet projection).
-  // An empty projection (count(*)) still needs one column to drive the
-  // record iterator — use the cheap fixed-width timestamp.
-  private val fields: Array[String] =
-    if (required.fields.isEmpty) Array("timestamp") else required.fieldNames
-  locally {
-    // Repetition (required/optional) must match the file exactly, and it
-    // varies with how the part was written (encoder-derived schemas mark
-    // strings optional) — so project by copying field types from the footer.
-    val fileSchema = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(file), conf))
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    val projection = new org.apache.parquet.schema.MessageType(
-      fileSchema.getName,
-      fields.map(f => fileSchema.getType(fileSchema.getFieldIndex(f))): _*)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-  }
-
-  private val filter: Option[FilterPredicate] = {
-    val loP = lo.map(v => FilterApi.gtEq(FilterApi.binaryColumn("key"), Binary.fromString(v)))
-    val hiP = hi.map(v => FilterApi.ltEq(FilterApi.binaryColumn("key"), Binary.fromString(v)))
-    (loP, hiP) match {
-      case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-      case (Some(a), None)    => Some(a)
-      case (None, Some(b))    => Some(b)
-      case (None, None)       => None
-    }
-  }
-
-  private val reader: ParquetReader[Group] = {
-    val b = ParquetReader
-      .builder[Group](new GroupReadSupport(), new HPath(file))
-      .withConf(conf)
-    filter.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
-  }
-
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      if (f.dataType == LongType) row.setLong(i, current.getLong(f.name, 0))
-      else row.update(i, UTF8String.fromString(current.getString(f.name, 0)))
-      i += 1
-    }
-    row
-  }
-
-  override def close(): Unit = reader.close()
+    throw new UnsupportedOperationException(
+      "mergetree scan is columnar; row reader is never planned")
 }
 
 // --------------------------------------------------------------- write path
@@ -601,7 +559,7 @@ class MergeTreeBatchWrite(path: String)
         !committed(f.getFileName.toString))
       .foreach(Files.deleteIfExists(_))
     finally s.close()
-    val stats = graft.mergetree.PartStats.readDir(new Configuration(), stagingDir)
+    val stats = graft.mergetree.PartStats.readDir(HadoopConf.copy(), stagingDir)
     val size = MergeTreeTable.dirSize(staging)
     val now = System.currentTimeMillis()
     Manifest.register(path, staging, append = true) { partId =>
@@ -642,7 +600,7 @@ class MergeTreeDataWriter(stagingDir: String, partitionId: Int, taskId: Long)
       |  required int64 timestamp;
       |}""".stripMargin)
   private val file = s"$stagingDir/part-$partitionId-$taskId.parquet"
-  private val conf = new Configuration()
+  private val conf = HadoopConf.copy()
   locally {
     Files.createDirectories(Paths.get(stagingDir))
     GroupWriteSupport.setSchema(schema, conf)

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
+import graft.mergetree.HadoopConf
+
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -29,7 +30,8 @@ private[sources] class ParquetColumnarReader(
     filter: Option[FilterPredicate])
     extends PartitionReader[ColumnarBatch] {
 
-  private val conf = new Configuration()
+  // Own copy of the JVM-wide defaults: the keys below are per file.
+  private val conf = HadoopConf.copy()
   locally {
     // The two schema keys Spark's ParquetReadSupport contract requires
     // (requested projection + full row schema used for name resolution).
@@ -73,4 +75,37 @@ private[sources] class ParquetColumnarReader(
     reader.getCurrentValue.asInstanceOf[ColumnarBatch]
 
   override def close(): Unit = reader.close()
+}
+
+/** Sequential chain of per-file columnar readers — the reader behind every
+  * split of a DSv2 scan: a [[MergeTreePartition]] (consecutive part files
+  * packed to Spark's split size) or a [[MergeTreeGroupedPartition]] (one
+  * storage partition value's files). Empty file lists yield an empty
+  * partition.
+  */
+private[sources] class ChainedColumnarReader(
+    files: Array[String],
+    required: StructType,
+    filter: Option[FilterPredicate])
+    extends PartitionReader[ColumnarBatch] {
+
+  private var i = 0
+  private var cur: ParquetColumnarReader = _
+
+  override def next(): Boolean = {
+    while (true) {
+      if (cur == null) {
+        if (i >= files.length) return false
+        cur = new ParquetColumnarReader(files(i), required, filter)
+        i += 1
+      }
+      if (cur.next()) return true
+      cur.close(); cur = null
+    }
+    false // unreachable
+  }
+
+  override def get(): ColumnarBatch = cur.get()
+
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }

@@ -28,14 +28,14 @@ class RuntimeFilterSpec extends AnyFunSuite {
 
   private def flt(fs: Filter*): Array[Filter] = fs.toArray
 
-  /** Planned PART count (a part directory may hold several parquet
-    * files — one InputPartition each; pruning acts on parts).
+  /** Planned PART count: the distinct part directories over every file of
+    * every split (a part directory may hold several parquet files, and a
+    * split packs files of several parts; pruning acts on parts).
     */
   private def plannedParts(scan: Scan): Int =
-    scan.toBatch.planInputPartitions().map {
-      case graft.sources.MergeTreePartition(f) =>
-        java.nio.file.Paths.get(f).getParent.toString
-    }.distinct.length
+    scan.toBatch.planInputPartitions().toSeq.flatMap {
+      case graft.sources.MergeTreePartition(fs) => fs.toSeq
+    }.map(f => java.nio.file.Paths.get(f).getParent.toString).distinct.length
 
   /** A partitioned table: grp in 0..7, two insert batches → 16 parts. */
   private def mkPartitioned(): String = {
