@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession factory for every runnable main (Bench, Verify, QTime,
-  * QProfile, Demo) so no tool can drift from the session config the others
+  * QCheck, QExplain, AdjProbe, WorkloadTime, Demo) so no tool can drift from the session config the others
   * verified under — QTime once omitted `nanosAsLong` and crashed on every
   * events-backed query while Bench ran them fine.
   */

@@ -284,7 +284,8 @@ object MinHashBandSigs {
 
 /** `minhash_band_sigs(array<long>) -> array<long>[24]` — per-document
   * MinHash band signatures as ONE map-side codegen expression (see
-  * [[MinHashBandSigs]]).
+  * [[MinHashBandSigs]]). An empty input array gives NULL, so the document
+  * yields no row after an explode (the aggregate face emits none either).
   */
 case class MinHashBandSigsExpr(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -326,7 +327,9 @@ case class MinHashBandSigsExpr(child: Expression)
 }
 
 /** `simhash64(array<string>) -> bigint` — the per-document SimHash
-  * signature as ONE map-side codegen expression (see [[SimHash64]]).
+  * signature as ONE map-side codegen expression (see [[SimHash64]]). An
+  * empty input array gives NULL, which means no row after an explode or a
+  * null-dropping filter (the aggregate face emits none either).
   */
 case class SimHash64Expr(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {

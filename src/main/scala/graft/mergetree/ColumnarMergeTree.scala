@@ -1587,7 +1587,9 @@ final class ColumnarMergeTree private (
         .filter(length(col("tok")) > 0)
       val bf = toks.stat.bloomFilter("tok",
         ColumnarMergeTree.TokenBloomExpectedTokens, ColumnarMergeTree.TokenBloomFpp)
-      writeSidecarAtomic(dir, s"_tokenbf_$c")(out => bf.writeTo(out))
+      val bytes = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bytes)
+      MetaFiles.publish(dir.resolve(s"_tokenbf_$c"), bytes.toByteArray)
     }
 
   /** Build the ngrambf sidecars for a freshly-staged part: one distributed
@@ -1612,7 +1614,9 @@ final class ColumnarMergeTree private (
         .filter(length(col("g")) > 0)
       val bf = g.stat.bloomFilter("g",
         ColumnarMergeTree.NgramBloomExpectedNgrams, ColumnarMergeTree.NgramBloomFpp)
-      writeSidecarAtomic(dir, s"_ngrambf_$c")(out => bf.writeTo(out))
+      val bytes = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bytes)
+      MetaFiles.publish(dir.resolve(s"_ngrambf_$c"), bytes.toByteArray)
     }
 
   /** Build the set(N) sidecars for a freshly-staged part: one distributed
@@ -1646,25 +1650,9 @@ final class ColumnarMergeTree private (
             import org.json4s.jackson.Serialization
             Serialization.write(Map("values" -> vals.sorted.toList))(DefaultFormats)
           }
-        writeSidecarAtomic(dir, s"_set_$c")(out =>
-          out.write(payload.getBytes("UTF-8")))
+        MetaFiles.publish(dir.resolve(s"_set_$c"), payload)
       }
     }
-
-  /** Write a sidecar file atomically: temp sibling + ATOMIC_MOVE, so a
-    * reader probing an EXISTING part dir (materializeIndex retrofits
-    * sidecars onto live parts) never sees a half-written filter — it sees
-    * no file (correct, unprunable) or the whole file.
-    */
-  private def writeSidecarAtomic(dir: java.nio.file.Path, name: String)(
-      write: java.io.OutputStream => Unit): Unit = {
-    val tmp = dir.resolve(s".tmp_$name")
-    val out = Files.newOutputStream(tmp)
-    try write(out) finally out.close()
-    Files.move(tmp, dir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** Build the per-part HLL `uniq` sidecars: one distributed hash+aggregate
     * pass per listed column over the freshly-staged files, 2 KB of
@@ -2369,9 +2357,7 @@ final class ColumnarMergeTree private (
       // whenever live parts are tagged" (a stale marker is harmless; the
       // reverse order would leave a tagged-but-unmarked window). Reads
       // never depend on it — the scan applies muts from the manifest.
-      Files.write(ColumnarMergeTree.lwMarkerPath(path), Array.emptyByteArray,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+      MetaFiles.publish(ColumnarMergeTree.lwMarkerPath(path), Array.emptyByteArray)
       lock.synchronized {
         // Tags whatever parts are live AT THE CAS — never a pre-read
         // list: a part merged away in between must not resurface
@@ -2804,9 +2790,7 @@ final class ColumnarMergeTree private (
     // though no read face depends on it for correctness (the scan applies
     // muts from the manifest itself).
     if (candidates.exists(_.muts.nonEmpty))
-      Files.write(ColumnarMergeTree.lwMarkerPath(path), Array.emptyByteArray,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+      MetaFiles.publish(ColumnarMergeTree.lwMarkerPath(path), Array.emptyByteArray)
     lock.synchronized {
       manifest = GManifest.update(path) { cur =>
         val live = cur.parts.map(_.partId).toSet
@@ -2866,9 +2850,7 @@ final class ColumnarMergeTree private (
     TableDef.load(path).foreach(d => TableDef.store(tmp.toString, d))
     GManifest.store(tmp.toString, snap)
     if (snap.parts.exists(_.muts.nonEmpty))
-      Files.write(ColumnarMergeTree.lwMarkerPath(tmp.toString), Array.emptyByteArray,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+      MetaFiles.publish(ColumnarMergeTree.lwMarkerPath(tmp.toString), Array.emptyByteArray)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
     (dst.toString, snap.parts.size)
   }
@@ -3036,9 +3018,8 @@ final class ColumnarMergeTree private (
     * correctness gate. `startMerges` resumes.
     */
   def stopMerges(): Unit =
-    Files.write(Paths.get(path, ColumnarMergeTree.MergesStoppedMarker),
-      Array.emptyByteArray, java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+    MetaFiles.publish(Paths.get(path, ColumnarMergeTree.MergesStoppedMarker),
+      Array.emptyByteArray)
 
   def startMerges(): Unit = {
     Files.deleteIfExists(Paths.get(path, ColumnarMergeTree.MergesStoppedMarker))
@@ -3609,9 +3590,7 @@ object ColumnarMergeTree {
       sampleBy: Option[String] = None)
 
   object TableDef {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
+    private val File = "tabledef.json"
 
     def encodeMode(m: MergeMode): Map[String, List[String]] = m match {
       case MergeMode.Plain => Map("type" -> List("plain"))
@@ -3637,19 +3616,11 @@ object ColumnarMergeTree {
         case _            => MergeMode.Plain
       }
 
-    def load(tablePath: String): Option[TableDef] = {
-      val f = Paths.get(tablePath, "tabledef.json")
-      if (!Files.exists(f)) None
-      else Some(JsonMethods.parse(Files.readString(f)).extract[TableDef])
-    }
+    def load(tablePath: String): Option[TableDef] =
+      MetaFiles.readJson[TableDef](Paths.get(tablePath, File))
 
-    def store(tablePath: String, d: TableDef): Unit = {
-      Files.createDirectories(Paths.get(tablePath))
-      val tmp = Paths.get(tablePath, ".tabledef.json.tmp")
-      Files.writeString(tmp, Serialization.writePretty(d))
-      Files.move(tmp, Paths.get(tablePath, "tabledef.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    def store(tablePath: String, d: TableDef): Unit =
+      MetaFiles.publishJson(Paths.get(tablePath, File), d)
   }
 
   /** Part metadata with leading-key bounds kept as strings plus a numeric
@@ -3843,23 +3814,13 @@ object ColumnarMergeTree {
   }
 
   object MvRegistry {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
+    private val File = "mvdefs.json"
 
-    def load(tablePath: String): List[MvDef] = {
-      val f = Paths.get(tablePath, "mvdefs.json")
-      if (!Files.exists(f)) Nil
-      else JsonMethods.parse(Files.readString(f)).extract[List[MvDef]]
-    }
+    def load(tablePath: String): List[MvDef] =
+      MetaFiles.readJson[List[MvDef]](Paths.get(tablePath, File)).getOrElse(Nil)
 
     def update(tablePath: String)(f: List[MvDef] => List[MvDef]): Unit =
-      ManifestLocks.locked(tablePath) {
-        val tmp = Paths.get(tablePath, ".mvdefs.json.tmp")
-        Files.writeString(tmp, Serialization.writePretty(f(load(tablePath))))
-        Files.move(tmp, Paths.get(tablePath, "mvdefs.json"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      MetaFiles.update(tablePath, File, List.empty[MvDef])(f)
   }
 
   /** Append-only log of committed manifests (`snapshots/snap_<seq>.json`,
@@ -3872,19 +3833,12 @@ object ColumnarMergeTree {
     * ManifestLocks), so seq allocation cannot race.
     */
   object SnapshotLog {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
     private val Keep = 64
 
     def record(tablePath: String, m: GManifest): Unit = {
       val dir = Paths.get(tablePath, "snapshots")
-      Files.createDirectories(dir)
       val seq = list(tablePath).lastOption.getOrElse(-1L) + 1
-      val tmp = dir.resolve(s".snap_$seq.json.tmp")
-      Files.writeString(tmp, Serialization.writePretty(m))
-      Files.move(tmp, dir.resolve(s"snap_$seq.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      MetaFiles.publishJson(dir.resolve(s"snap_$seq.json"), m)
       val all = list(tablePath)
       all.dropRight(Keep).foreach(s =>
         Files.deleteIfExists(dir.resolve(s"snap_$s.json")))
@@ -3909,9 +3863,7 @@ object ColumnarMergeTree {
 
     def load(tablePath: String, seq: Long): Option[GManifest] = {
       if (GManifest.logMode(tablePath)) return GManifest.loadLogAt(tablePath, seq)
-      val f = Paths.get(tablePath, "snapshots", s"snap_$seq.json")
-      if (!Files.exists(f)) None
-      else Some(JsonMethods.parse(Files.readString(f)).extract[GManifest])
+      MetaFiles.readJson[GManifest](Paths.get(tablePath, "snapshots", s"snap_$seq.json"))
     }
   }
 
@@ -3938,46 +3890,23 @@ object ColumnarMergeTree {
   case class DetachedSet(parts: List[GPartMeta])
 
   object DetachedSet {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
+    private val File = "detached.json"
 
-    def load(tablePath: String): List[GPartMeta] = {
-      val f = Paths.get(tablePath, "detached.json")
-      if (!Files.exists(f)) Nil
-      else JsonMethods.parse(Files.readString(f)).extract[DetachedSet].parts
-    }
+    def load(tablePath: String): List[GPartMeta] =
+      MetaFiles.readJson[DetachedSet](Paths.get(tablePath, File)).fold(List.empty[GPartMeta])(_.parts)
 
     def update(tablePath: String)(f: List[GPartMeta] => List[GPartMeta]): Unit =
-      ManifestLocks.locked(tablePath) {
-        val next = DetachedSet(f(load(tablePath)))
-        val tmp = Paths.get(tablePath, ".detached.json.tmp")
-        Files.writeString(tmp, Serialization.writePretty(next))
-        Files.move(tmp, Paths.get(tablePath, "detached.json"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      MetaFiles.update(tablePath, File, DetachedSet(Nil))(d => DetachedSet(f(d.parts)))
   }
 
   object GcList {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
+    private val File = "gclist.json"
 
-    def load(tablePath: String): GcList = {
-      val f = Paths.get(tablePath, "gclist.json")
-      if (!Files.exists(f)) GcList(Nil)
-      else JsonMethods.parse(Files.readString(f)).extract[GcList]
-    }
+    def load(tablePath: String): GcList =
+      MetaFiles.readJson[GcList](Paths.get(tablePath, File)).getOrElse(GcList(Nil))
 
     def update(tablePath: String)(f: GcList => GcList): GcList =
-      ManifestLocks.locked(tablePath) {
-        val next = f(load(tablePath))
-        val tmp = Paths.get(tablePath, ".gclist.json.tmp")
-        Files.writeString(tmp, Serialization.writePretty(next))
-        Files.move(tmp, Paths.get(tablePath, "gclist.json"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        next
-      }
+      MetaFiles.update(tablePath, File, GcList(Nil))(f)
   }
 
   /** One in-flight maintenance output: a `part_<id>` dir staged with
@@ -4007,31 +3936,20 @@ object ColumnarMergeTree {
   val IntentTtlMs: Long = 6L * 3600 * 1000
 
   object IntentSet {
-    import org.json4s._
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    private implicit val formats: Formats = DefaultFormats
+    private val File = "intents.json"
 
-    def load(tablePath: String): IntentSet = {
-      val f = Paths.get(tablePath, "intents.json")
-      if (!Files.exists(f)) IntentSet(Nil)
-      else JsonMethods.parse(Files.readString(f)).extract[IntentSet]
-    }
+    def load(tablePath: String): IntentSet =
+      MetaFiles.readJson[IntentSet](Paths.get(tablePath, File)).getOrElse(IntentSet(Nil))
 
     def update(tablePath: String)(f: IntentSet => IntentSet): Unit =
-      ManifestLocks.locked(tablePath) {
-        storeUnlocked(tablePath, f(load(tablePath)))
-      }
+      MetaFiles.update(tablePath, File, IntentSet(Nil))(f)
 
     /** Atomic-swap write WITHOUT acquiring the path lock — for callers
       * already inside a ManifestLocks critical section (the lock is not
       * reentrant: a nested FileChannel lock on the same file throws).
       */
-    def storeUnlocked(tablePath: String, next: IntentSet): Unit = {
-      val tmp = Paths.get(tablePath, ".intents.json.tmp")
-      Files.writeString(tmp, Serialization.writePretty(next))
-      Files.move(tmp, Paths.get(tablePath, "intents.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    def storeUnlocked(tablePath: String, next: IntentSet): Unit =
+      MetaFiles.publishJson(Paths.get(tablePath, File), next)
   }
 
   case class GManifest(version: Long, parts: List[GPartMeta])
@@ -4128,18 +4046,10 @@ object ColumnarMergeTree {
       if (logMode(tablePath)) {
         val (seq, m) = loadLog(tablePath)
         if (seq == 0L) None else Some(m)
-      } else {
-        val f = Paths.get(tablePath, "gmanifest.json")
-        if (!Files.exists(f)) None
-        else Some(JsonMethods.parse(Files.readString(f)).extract[GManifest])
-      }
+      } else MetaFiles.readJson[GManifest](Paths.get(tablePath, "gmanifest.json"))
 
     def store(tablePath: String, m: GManifest): Unit = {
-      Files.createDirectories(Paths.get(tablePath))
-      val tmp = Paths.get(tablePath, ".gmanifest.json.tmp")
-      Files.writeString(tmp, Serialization.writePretty(m))
-      Files.move(tmp, Paths.get(tablePath, "gmanifest.json"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      MetaFiles.publishJson(Paths.get(tablePath, "gmanifest.json"), m)
       SnapshotLog.record(tablePath, m)
     }
 

@@ -123,14 +123,8 @@ private[graft] object KeySample {
     Files.writeString(partDir.resolve(FileName), Serialization.write(sample))
   }
 
-  def load(partDir: String): Option[Sample] = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.JsonMethods
-    implicit val formats: org.json4s.Formats = DefaultFormats
-    val f = Paths.get(partDir, FileName)
-    if (!Files.exists(f)) None
-    else scala.util.Try(JsonMethods.parse(Files.readString(f)).extract[Sample]).toOption
-  }
+  def load(partDir: String): Option[Sample] =
+    scala.util.Try(MetaFiles.readJson[Sample](Paths.get(partDir, FileName))).toOption.flatten
 
   /** Driver-side ceiling for post-write sampling: reading the key column
     * of a bigger part on the driver would make the write path

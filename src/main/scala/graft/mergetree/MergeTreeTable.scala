@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 
 /** The fixed compatibility row of the reference engine.
@@ -1387,10 +1387,9 @@ object MergeTreeTable {
     */
   def create(spark: SparkSession, path: String,
              config: MergeTreeConfig = MergeTreeConfig()): MergeTreeTable = {
-    Files.createDirectories(Paths.get(path))
-    val meta = Paths.get(path, "kvmeta.json")
+    val meta = Paths.get(path, KvMetaFile)
     if (!Files.exists(meta))
-      Files.writeString(meta, s"""{"gcGraceSeconds": ${config.gcGraceSeconds}}""")
+      MetaFiles.publish(meta, s"""{"gcGraceSeconds": ${config.gcGraceSeconds}}""")
     new MergeTreeTable(spark, path, config)
   }
 
@@ -1400,13 +1399,14 @@ object MergeTreeTable {
     */
   def open(spark: SparkSession, path: String,
            config: MergeTreeConfig = MergeTreeConfig()): MergeTreeTable = {
-    val meta = Paths.get(path, "kvmeta.json")
-    val cfg =
-      if (!Files.exists(meta)) config
-      else "\"gcGraceSeconds\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(Files.readString(meta))
-        .map(m => config.copy(gcGraceSeconds = m.group(1).toInt)).getOrElse(config)
+    val cfg = MetaFiles.readJson[KvMeta](Paths.get(path, KvMetaFile))
+      .fold(config)(m => config.copy(gcGraceSeconds = m.gcGraceSeconds))
     new MergeTreeTable(spark, path, cfg)
   }
+
+  /** The persisted table settings (`kvmeta.json`); see create. */
+  private case class KvMeta(gcGraceSeconds: Int)
+  private val KvMetaFile = "kvmeta.json"
 
   private[graft] def dirSize(p: Path): Long = {
     if (!Files.exists(p)) return 0L
@@ -1425,7 +1425,7 @@ object MergeTreeTable {
   }
 }
 
-/** Live-part manifest: tiny JSON doc, written atomically (tmp + rename).
+/** Live-part manifest: tiny JSON doc, published atomically (MetaFiles).
   * Replaces the reference's per-part `metadata.bin` + directory scan
   * (src/merge_tree.cpp:164-197) with a single authoritative file — this is
   * the fix for the reference's merge-leaves-stale-dirs bug (SURVEY §3.3).
@@ -1433,27 +1433,13 @@ object MergeTreeTable {
 case class Manifest(version: Long, parts: List[PartMetadata])
 
 object Manifest {
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-  import org.json4s.jackson.Serialization
+  private val File = "manifest.json"
 
-  private implicit val formats: Formats = DefaultFormats
+  def load(tablePath: String): Option[Manifest] =
+    MetaFiles.readJson[Manifest](Paths.get(tablePath, File))
 
-  private def file(tablePath: String): Path = Paths.get(tablePath, "manifest.json")
-
-  def load(tablePath: String): Option[Manifest] = {
-    val f = file(tablePath)
-    if (!Files.exists(f)) None
-    else Some(JsonMethods.parse(Files.readString(f)).extract[Manifest])
-  }
-
-  def store(tablePath: String, m: Manifest): Unit = {
-    Files.createDirectories(Paths.get(tablePath))
-    val tmp = Paths.get(tablePath, s".manifest.json.tmp")
-    Files.writeString(tmp, Serialization.writePretty(m))
-    Files.move(tmp, file(tablePath), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def store(tablePath: String, m: Manifest): Unit =
+    MetaFiles.publishJson(Paths.get(tablePath, File), m)
 
   /** Every mutation of a table's manifest — by a live MergeTreeTable
     * instance, the DSv2 connector, or both concurrently — goes through
@@ -1463,11 +1449,7 @@ object Manifest {
     * (single-driver posture, SURVEY §8).
     */
   def update(tablePath: String)(f: Manifest => Manifest): Manifest =
-    ManifestLocks.locked(tablePath) {
-      val next = f(load(tablePath).getOrElse(Manifest(0L, Nil)))
-      store(tablePath, next)
-      next
-    }
+    MetaFiles.update(tablePath, File, Manifest(0L, Nil))(f)
 
   /** Allocate the next part id and atomically bind it: the staged part
     * directory is renamed to `part_<id>` INSIDE the lock, so id allocation
@@ -1490,22 +1472,6 @@ object Manifest {
     }
 }
 
-/** Per-table-path mutual exclusion shared by both manifest formats, the GC
-  * list, and the DSv2 connector commit path — TWO layers:
-  *
-  *  - a JVM-global monitor (threads of one process; also required because
-  *    OS file locks are held per-process and overlapping acquisition from
-  *    the same JVM throws), and
-  *  - an OS advisory file lock on `<table>/.manifest.lock`, so a SECOND
-  *    process (e.g. the DSv2 connector in another Spark driver) doing
-  *    read-modify-write on gmanifest.json/gclist.json serializes against
-  *    this one instead of losing updates.
-  *
-  * The file lock makes manifest commits multi-process-safe on any
-  * filesystem with working advisory locks (local disk, NFSv4); object
-  * stores without lock semantics would need a catalog service instead —
-  * documented 100 TB posture (SURVEY §8).
-  */
 /** Claim a staged directory as `part_<id>`, starting at `startId` and
   * skipping past unfenced same-id dirs left by crashed writers (a writer
   * that died between ITS rename and manifest store leaves a claimed dir
@@ -1529,24 +1495,5 @@ private[mergetree] object PartClaims {
       }
     }
     id
-  }
-}
-
-private[graft] object ManifestLocks {
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  def locked[A](tablePath: String)(body: => A): A = {
-    val key = Paths.get(tablePath).toAbsolutePath.normalize.toString
-    val lock = locks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-      Files.createDirectories(Paths.get(key))
-      val ch = java.nio.channels.FileChannel.open(
-        Paths.get(key, ".manifest.lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        val fl = ch.lock()
-        try body
-        finally fl.release()
-      } finally ch.close()
-    }
   }
 }

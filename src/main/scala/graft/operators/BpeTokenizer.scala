@@ -268,15 +268,13 @@ object BpeTokenizer {
     * expensive derived structure in the engine (IVF centroids, inverted
     * postings, MinHash signatures), a trained merge list must be
     * REOPENABLE — a second session encodes identically without retraining
-    * the corpus. Atomic single-file commit (temp + ATOMIC_MOVE, the
-    * sidecar discipline); [[open]] of a [[save]] is bit-exact by
+    * the corpus. Published whole through [[graft.mergetree.MetaFiles]], like
+    * every other metadata file; [[open]] of a [[save]] is bit-exact by
     * construction (the wire form IS the in-memory order).
     */
   val MergesFile = "_merges.json"
 
   def save(m: Merges, dir: String): Unit = {
-    val d = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.createDirectories(d)
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -286,21 +284,16 @@ object BpeTokenizer {
     val json = s"""{"version":1,"byte_level":${m.byteLevel},"merges":[""" +
       m.pairs.map { case (a, b) => "\"" + esc(s"$a $b") + "\"" }
         .mkString(",") + "]}"
-    val tmp = java.nio.file.Files.createTempFile(d, ".merges_", ".tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, d.resolve(MergesFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.mergetree.MetaFiles.publish(java.nio.file.Paths.get(dir, MergesFile), json)
   }
 
   def open(dir: String): Merges = {
-    val f = java.nio.file.Paths.get(dir, MergesFile)
-    require(java.nio.file.Files.exists(f),
-      s"no $MergesFile under $dir — train and save() first")
+    val text = graft.mergetree.MetaFiles.read(java.nio.file.Paths.get(dir, MergesFile))
+    require(text.isDefined, s"no $MergesFile under $dir — train and save() first")
     import org.json4s.DefaultFormats
     import org.json4s.jackson.JsonMethods
     implicit val fmts: org.json4s.Formats = DefaultFormats
-    val j = JsonMethods.parse(java.nio.file.Files.readString(f))
+    val j = JsonMethods.parse(text.get)
     val ver = (j \ "version").extract[Int]
     require(ver == 1, s"unsupported merges artifact version $ver")
     val bl = (j \ "byte_level").extract[Boolean]

@@ -38,6 +38,9 @@ object ConnectedComponents {
     *                force the distributed path.
     * @return DataFrame(node, component) covering every node that appears in
     *         any edge; component = min node id of its connected component.
+    *         Both output columns keep the input edge columns' type (Long
+    *         ids give Long, Int or String ids give Int or String; when u
+    *         and v differ, their common wider type).
     */
   def run(edgesIn: DataFrame, maxIterations: Int = 30,
           smallGraphThreshold: Long = 1L << 22): DataFrame = {
@@ -50,7 +53,7 @@ object ConnectedComponents {
     // recovery) runs in-process, returning another LocalRelation. The
     // general path below spent ~0.8 s of pure job scaffolding
     // (localCheckpoint + count + collect + singleton join) on a 45-edge
-    // input (QProfile, sf0.1). Data already fits on the driver by
+    // input (sf0.1). Data already fits on the driver by
     // construction, so this changes job count, not memory posture; pass
     // smallGraphThreshold = 0 to force the distributed rounds (the
     // property specs' pin).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig}
+import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig, MetaFiles}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -431,13 +431,11 @@ final class InvertedIndex private (
         val st = stats
         if (applied(st)) false
         else {
-          val dir = java.nio.file.Paths.get(path)
-          val intent = dir.resolve("_stream_intent")
+          val intent = java.nio.file.Paths.get(path, "_stream_intent")
           val marker = s"$lineage:$batchId"
           // NO Try around the read: an existing-but-unreadable intent
           // must abort the batch (fail closed), never skip the scrub.
-          if (java.nio.file.Files.exists(intent)) {
-            val found = java.nio.file.Files.readString(intent).trim
+          MetaFiles.read(intent).map(_.trim).foreach { found =>
             if (found == marker) {
               // A prior attempt of THIS batch crashed after possibly
               // landing its parts but before the stats stamp (the guard
@@ -473,11 +471,7 @@ final class InvertedIndex private (
                   "are unknowable; rebuild the index from the corpus")
             }
           }
-          val tmp = java.nio.file.Files.createTempFile(dir, ".intent_", ".tmp")
-          java.nio.file.Files.writeString(tmp, marker)
-          java.nio.file.Files.move(tmp, intent,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          MetaFiles.publish(intent, marker)
           table.insertBatch(postings)
           val seq = table.snapshots.lastOption
           updateStats(path)(cur =>
@@ -816,29 +810,16 @@ object InvertedIndex {
   private[operators] def updateStats(path: String)(f: InvStats => InvStats): Unit =
     writeStats(path, f(readStats(path)))
 
-  /** Atomic stats swap: temp file + ATOMIC_MOVE, so a reader mid-append
-    * sees the old stats or the new — never a missing or partial file (the
+  /** Stats swap through [[MetaFiles.publish]]: a reader mid-append sees
+    * the old stats or the new — never a missing or partial file (the
     * delete-then-write race the parquet sidecar this replaced had).
     */
-  private def writeStats(path: String, st: InvStats): Unit = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.Serialization
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(path), ".stats_", ".tmp")
-    java.nio.file.Files.writeString(tmp, Serialization.write(st)(DefaultFormats))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path, "_stats.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeStats(path: String, st: InvStats): Unit =
+    MetaFiles.publish(java.nio.file.Paths.get(path, "_stats.json"),
+      org.json4s.jackson.Serialization.write(st)(org.json4s.DefaultFormats))
 
-  private[graft] def readStats(path: String): InvStats = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.JsonMethods
-    implicit val fmts: org.json4s.Formats = DefaultFormats
-    val f = java.nio.file.Paths.get(path, "_stats.json")
-    if (java.nio.file.Files.exists(f))
-      JsonMethods.parse(java.nio.file.Files.readString(f)).extract[InvStats]
-    else {
+  private[graft] def readStats(path: String): InvStats =
+    MetaFiles.readJson[InvStats](java.nio.file.Paths.get(path, "_stats.json")).getOrElse {
       // Legacy layout: indexes persisted before the JSON sidecar stored a
       // one-row parquet under `_stats/` (and predate the mixed tokenizer
       // — tokenizer=None reads as latin). Read once, then MIGRATE to the
@@ -855,7 +836,6 @@ object InvertedIndex {
       writeStats(path, st)
       st
     }
-  }
 
   /** (docs with ≥1 surviving token, Σ dl) of a posting set — exact longs. */
   private def postingTotals(postings: DataFrame): (Long, Long) = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig}
+import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig, MetaFiles}
 import graft.queries.PipelineQueries
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -254,32 +254,19 @@ final class IvfIndex private (
     * true if applied, false for an already-applied replay.
     */
   def appendStream(vectors: DataFrame, batchId: Long, lineage: String): Boolean = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.{JsonMethods, Serialization}
-    implicit val fmts: org.json4s.Formats = DefaultFormats
     val dir = java.nio.file.Paths.get(path)
     val guard = dir.resolve("_stream_guard")
     val intent = dir.resolve("_stream_intent")
     val marker = s"$lineage:$batchId"
-    def atomicWrite(target: java.nio.file.Path, content: String): Unit = {
-      val tmp = java.nio.file.Files.createTempFile(dir, ".stream_", ".tmp")
-      java.nio.file.Files.writeString(tmp, content)
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
     // The guard is a PER-LINEAGE high-water-mark map (a single slot would
     // double-apply an old feed's crash-replay after a new feed took
     // over). NO Try-swallow anywhere: an existing-but-unreadable or
     // unparsable guard/intent aborts the batch (foreachBatch retries) —
     // fail-open here means a skipped scrub or a double-apply.
     val feeds: Map[String, Long] =
-      if (!java.nio.file.Files.exists(guard)) Map.empty
-      else JsonMethods.parse(java.nio.file.Files.readString(guard))
-        .extract[Map[String, Long]]
+      MetaFiles.readJson[Map[String, Long]](guard).getOrElse(Map.empty)
     if (feeds.get(lineage).exists(_ >= batchId)) return false
-    if (java.nio.file.Files.exists(intent)) {
-      val found = java.nio.file.Files.readString(intent).trim
+    MetaFiles.read(intent).map(_.trim).foreach { found =>
       if (found == marker) {
         // A prior attempt of THIS batch crashed after possibly committing
         // its rows but before advancing the guard: scrub them (new-ids-
@@ -306,10 +293,10 @@ final class IvfIndex private (
             "rebuild the index")
       }
     }
-    atomicWrite(intent, marker)
+    MetaFiles.publish(intent, marker)
     append(vectors)
-    atomicWrite(guard,
-      Serialization.write(feeds.updated(lineage, batchId)))
+    MetaFiles.publish(guard, org.json4s.jackson.Serialization.write(
+      feeds.updated(lineage, batchId))(org.json4s.DefaultFormats))
     // Guard advanced = committed; a crash before this cleanup leaves a
     // stale intent the feed map marks as covered.
     java.nio.file.Files.deleteIfExists(intent)
@@ -369,13 +356,8 @@ final class IvfIndex private (
         s"does not match the index's quantizer dimension $dim")
     val ids = BoundedIds.collect(vectors, "vec_id", "IvfIndex.update")
     require(ids.nonEmpty, "empty update: pass the re-embedded vectors")
-    val dir = java.nio.file.Paths.get(path)
-    val intent = dir.resolve(IvfIndex.UpdateIntentFile)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".upd_", ".tmp")
-    java.nio.file.Files.writeString(tmp, ids.sorted.mkString(","))
-    java.nio.file.Files.move(tmp, intent,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val intent = java.nio.file.Paths.get(path, IvfIndex.UpdateIntentFile)
+    MetaFiles.publish(intent, ids.sorted.mkString(","))
     delete(ids)
     append(vectors)
     java.nio.file.Files.deleteIfExists(intent)
@@ -518,37 +500,13 @@ object IvfIndex {
     spark.read.schema(quantizerSchema).parquet(s"$path/_centroids")
       .collect().sortBy(_.getLong(0))
 
-  /** Codebooks sidecar I/O (`_pq.json`) — atomic swap like the inverted
-    * index's stats file.
-    */
-  private def writePq(path: String,
-      cb: ProductQuantizer.PqCodebooks): Unit = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.Serialization
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(path), ".pq_", ".tmp")
-    java.nio.file.Files.writeString(tmp, Serialization.write(
-      Map("m" -> cb.m, "k" -> cb.k, "dsub" -> cb.dsub,
-        "cb" -> cb.cb))(DefaultFormats))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(path, "_pq.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Codebooks sidecar I/O (`_pq.json`, fields m, k, dsub, cb). */
+  private def writePq(path: String, cb: ProductQuantizer.PqCodebooks): Unit =
+    MetaFiles.publish(java.nio.file.Paths.get(path, "_pq.json"),
+      org.json4s.jackson.Serialization.write(cb)(org.json4s.DefaultFormats))
 
-  private[operators] def readPq(path: String)
-      : Option[ProductQuantizer.PqCodebooks] = {
-    import org.json4s.DefaultFormats
-    import org.json4s.jackson.JsonMethods
-    implicit val fmts: org.json4s.Formats = DefaultFormats
-    val f = java.nio.file.Paths.get(path, "_pq.json")
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val j = JsonMethods.parse(java.nio.file.Files.readString(f))
-      Some(ProductQuantizer.PqCodebooks(
-        (j \ "m").extract[Int], (j \ "k").extract[Int],
-        (j \ "dsub").extract[Int], (j \ "cb").extract[Seq[Seq[Seq[Double]]]]))
-    }
-  }
+  private[operators] def readPq(path: String): Option[ProductQuantizer.PqCodebooks] =
+    MetaFiles.readJson[ProductQuantizer.PqCodebooks](java.nio.file.Paths.get(path, "_pq.json"))
 
   /** Reopen a built index (table self-describes via tabledef.json). The
     * build-time maxParts = 2·nlist rides back in from the centroid sidecar
@@ -563,12 +521,11 @@ object IvfIndex {
     // A torn update (crash between its delete and append commits) leaves
     // the index missing the updated ids — fail loudly instead of serving
     // silently wrong neighbours forever (see update's crash posture).
-    val intent = java.nio.file.Paths.get(path, UpdateIntentFile)
-    if (java.nio.file.Files.exists(intent))
+    MetaFiles.read(java.nio.file.Paths.get(path, UpdateIntentFile)).foreach { ids =>
       throw new IllegalStateException(
-        s"ANN index at $path has a torn update (ids: " +
-          s"${java.nio.file.Files.readString(intent)}): re-run the update " +
+        s"ANN index at $path has a torn update (ids: $ids): re-run the update " +
           s"from its inputs or rebuild, then remove $UpdateIntentFile")
+    }
     val quantizer = readQuantizer(spark, path)
     val cfg = MergeTreeConfig(maxParts = 2 * math.max(1, quantizer.length))
     new IvfIndex(spark, ColumnarMergeTree.open(spark, path, cfg), path, quantizer)

@@ -479,82 +479,6 @@ object PipelineQueries {
 
   private def tokens: Column = split(col("text"), " ")
 
-  /** Dev-only (QProfile): phase decomposition of the shared near-dup edge
-    * machinery plus micro-benches separating tokenize / shingle-string /
-    * hash / distinct / join / verify / CC costs. NOT a query path.
-    */
-  private[graft] def profileEdgePhases(spark: SparkSession, dir: String): Unit = {
-    def t(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"PROF $name%-32s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
-    val d = docsSpread(spark, dir)
-    t("docs noop")(d.write.format("noop").mode("overwrite").save())
-    t("tokenize size only")(
-      d.select(size(tokens)).write.format("noop").mode("overwrite").save())
-    t("shingle strings noop")(
-      d.select(explode(shingles)).write.format("noop").mode("overwrite").save())
-    t("shingle hashes noop")(
-      d.select(explode(shingles).as("s")).select(xxhash64(col("s")))
-        .write.format("noop").mode("overwrite").save())
-    val th = transform(tokens, w => xxhash64(w))
-    val hashShingles = transform(
-      sequence(lit(1), greatest(lit(1), size(col("th")) - lit(4))),
-      i => xxhash64(slice(col("th"), i, lit(5))))
-    t("tokenhash shingles noop")(
-      d.select(th.as("th")).select(explode(hashShingles))
-        .write.format("noop").mode("overwrite").save())
-    (1 to 2).foreach { rep =>
-      val dsh = d.select(col("doc_id"), explode(shingles).as("shingle"))
-        .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-        .distinct().persist()
-      t(s"dsh distinct+persist rep$rep")(dsh.count())
-      val hot = dsh.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > 1000).select(col("h"))
-      val rare = dsh.join(hot, Seq("h"), "left_anti")
-      val cand = rare.select(col("doc_id").as("doc_a"), col("h"))
-        .join(rare.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct().persist()
-      t(s"cand join+distinct rep$rep")(cand.count())
-      val candIds = cand
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      val sets = dsh.join(broadcast(candIds), Seq("doc_id"))
-        .groupBy(col("doc_id")).agg(collect_set(col("h")).as("sh"))
-      val withSets = cand
-        .join(broadcast(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha"))), Seq("doc_a"))
-        .join(broadcast(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb"))), Seq("doc_b"))
-      val inter = size(array_intersect(col("sha"), col("shb"))).cast("double")
-      val j = inter / (size(col("sha")) + size(col("shb")) - inter).cast("double")
-      val out = withSets.filter(j >= 0.8)
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-      var edges: DataFrame = null
-      t(s"verify collect rep$rep") {
-        val rows = java.util.Arrays.asList(out.collect(): _*)
-        edges = spark.createDataFrame(rows, out.schema)
-      }
-      t(s"cc run rep$rep")(
-        graft.operators.ConnectedComponents.run(edges).count())
-      dsh.unpersist(); cand.unpersist()
-    }
-    // Verdict-signal pass (q96/q117 stage 1-2): whole vs parts.
-    t("verdict signals noop")(
-      verdictSignals(d).write.format("noop").mode("overwrite").save())
-    val ws = tokens
-    val bigrams = transform(
-      sequence(lit(1), greatest(lit(1), size(ws) - lit(1))),
-      i => concat_ws(" ", slice(ws, i, lit(2))))
-    t("bigram topRun HOF only noop")(
-      d.select(topBigramRun(bigrams)).write.format("noop").mode("overwrite").save())
-    t("bigram topRun codegen only noop")(
-      d.select(topRunOf(ws)).write.format("noop").mode("overwrite").save())
-    t("array_distinct only noop")(
-      d.select(size(array_distinct(ws))).write.format("noop").mode("overwrite").save())
-    t("stops only noop")(
-      d.select(latinStopsOf(ws)).write.format("noop").mode("overwrite").save())
-  }
-
   /** DuckDB spelling of [[graft.operators.InvertedIndex.mixedTokens]] over
     * the `text` column — ONE definition shared by every multilingual
     * cleaning oracle (q118–q125), so the tokenizer the cross-engine parity
@@ -572,36 +496,12 @@ object PipelineQueries {
       |                 for r in regexp_extract_all(text, '\p{Han}+')])
       |      ])""".stripMargin
 
-  /** Count of the most-repeated element of `arr`, computed entirely
-    * map-side: hash each element to a long, sort, then take the longest run
-    * of equal adjacent values with one `aggregate` fold. Equivalent to
-    * `explode → groupBy(doc, elem).count → groupBy(doc).max` but without
-    * ever shuffling a per-(doc, element) row — the repetition/quality
-    * signals built on this (q95/q96) stay embarrassingly parallel at
-    * corpus scale, with only their final tiny rollup crossing a shuffle.
-    * Hashing first keeps the per-row O(k log k) sort and the k equality
-    * probes on fixed-width longs instead of strings; a within-document
-    * xxhash64 collision (~k²/2⁶⁵ per doc) is the accepted trade.
-    */
-  private def topBigramRun(arr: Column): Column =
-    aggregate(
-      array_sort(transform(arr, b => xxhash64(b))),
-      struct(lit(null).cast("long").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        // first element: x === null-prev is NULL → otherwise branch → run=1
-        val run = when(x === acc.getField("prev"), acc.getField("run") + lit(1L))
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-
   /** The most-repeated adjacent-bigram count over a TOKEN array, as the
     * fused codegen expression (graft.functions.TopBigramRunExpr) — bit-
-    * identical to [[topBigramRun]] over the signalCols bigram spelling
-    * (equality pinned on random data in GraftFunctionsSpec), without the
-    * three interpreted HOF layers or the per-bigram concat_ws string build
-    * (round-17 optimization; guide §1.2 step 2). Every verdict/repetition
+    * identical to the former map-side HOF fold (hash each bigram, sort,
+    * longest run of equal neighbours; equality pinned on random data in
+    * GraftFunctionsSpec), without its three interpreted HOF layers or the
+    * per-bigram concat_ws string build (round-17 optimization; guide §1.2 step 2). Every verdict/repetition
     * path (q95/q96/q117/q119/q124/q125) routes through THIS definition.
     */
   private def topRunOf(ws: Column): Column =
@@ -609,9 +509,9 @@ object PipelineQueries {
       graft.functions.TopBigramRunExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(ws)))
 
-  /** The word-5-gram shingle expression, shared by q25 and q26 (and the dev
-    * profiler): ONE definition so the tokenization the q25 == q26 oracle
-    * equivalence depends on cannot drift between them.
+  /** The word-5-gram shingle expression, shared by q25 and q26: ONE
+    * definition so the tokenization the q25 == q26 oracle equivalence
+    * depends on cannot drift between them.
     */
   private[graft] def shingles: Column = shinglesOf(tokens)
 
@@ -1732,7 +1632,7 @@ object PipelineQueries {
     * worst-document top-bigram share in parts-per-million via integer
     * division — no cross-row double reduction anywhere, so the oracle hash
     * is stable by construction. The top-bigram count is computed map-side
-    * ([[topBigramRun]]): per-(doc, bigram) rows never cross a shuffle, so
+    * ([[topRunOf]]): per-(doc, bigram) rows never cross a shuffle, so
     * the only shuffle in the whole query is the 5-group per-lang rollup —
     * at corpus scale the signal extraction is embarrassingly parallel.
     */
@@ -1945,7 +1845,7 @@ object PipelineQueries {
     * (lang, reasons) — reasons = 0 is the surviving training set. Every
     * ratio is integer parts-per-million via int64 division, so both engines
     * compare identical integers (no double thresholds anywhere). The bigram
-    * profile is computed map-side ([[topBigramRun]]), so the whole verdict
+    * profile is computed map-side ([[topRunOf]]), so the whole verdict
     * pass is a single embarrassingly-parallel scan feeding one tiny
     * (lang, reasons) aggregate.
     */
@@ -2077,7 +1977,7 @@ object PipelineQueries {
     * band membership) is pinned on hand-computed fixtures in
     * PipelineQueriesSpec. Shape: identical to q96 — signals and bitmask
     * are one embarrassingly-parallel scan (bigram run computed map-side by
-    * [[topBigramRun]]) feeding one tiny (lang, reasons) aggregate.
+    * [[topRunOf]]) feeding one tiny (lang, reasons) aggregate.
     */
   private val MixedLatinStops: Seq[String] =
     StopwordLists.filter(_._1 != "zh").flatMap(_._2)
@@ -4446,38 +4346,6 @@ object PipelineQueries {
         java.nio.file.Files.createTempDirectory("ivf_chunks_").toString)
       (idx, maxChunks)
     })
-
-  /** Dev-only (QProfile): q140's side-by-side phase costs. NOT a query
-    * path.
-    */
-  private[graft] def profileQ140Phases(spark: SparkSession, dir: String): Unit = {
-    def t(name: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime(); f
-      println(f"PROF $name%-32s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
-    t("full q140 (cold: builds)")(q140ChunkVecHybrid(spark, dir)
-      .write.format("noop").mode("overwrite").save())
-    (1 to 2).foreach { rep =>
-      val lexIdx = chunkIndexOf(spark, dir)
-      t(s"lex searchMany+fold rep$rep") {
-        graft.operators.InvertedIndex.foldChunkScores(
-          lexIdx.searchManyScores(hybridQueryTerms), ChunkKeySpan,
-          keys = Seq("qid"))
-          .write.format("noop").mode("overwrite").save()
-      }
-      val (vidx, maxChunks) = chunkIvfOf(spark, dir)
-      val e = embDouble(spark, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      t(s"ivf search all-lists rep$rep") {
-        vidx.search(q, k = (21L * maxChunks).toInt,
-          nprobe = vidx.nlist, excludeSelf = false)
-          .write.format("noop").mode("overwrite").save()
-      }
-      t(s"full q140 warm rep$rep")(q140ChunkVecHybrid(spark, dir)
-        .write.format("noop").mode("overwrite").save())
-    }
-  }
 
   /** Q140 — CHUNK-LEVEL hybrid retrieval with chunk VECTORS (closing
     * q134's asymmetry: its vector side was doc-level, so a doc whose

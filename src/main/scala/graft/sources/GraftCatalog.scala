@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.mergetree.{ColumnarMergeTree, MergeTreeTable}
+import graft.mergetree.{ColumnarMergeTree, MergeTreeTable, MetaFiles}
 import graft.mergetree.ColumnarMergeTree.TableDef
 
 import org.apache.spark.sql.SparkSession
@@ -106,9 +106,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   private[sources] def resolveTableDir(segs: Seq[String]): Path = {
     val slot = resolveSegs(segs)
-    if (Files.exists(extlocPath(slot)))
-      Paths.get(Files.readString(extlocPath(slot)).trim)
-    else slot
+    MetaFiles.read(extlocPath(slot)).fold(slot)(loc => Paths.get(loc.trim))
   }
 
   private def isTableDir(p: Path): Boolean = TableDef.load(p.toString).isDefined
@@ -120,8 +118,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     */
   private def propsPath(dir: Path): Path = dir.resolve("catprops.json")
   private def finalProp(dir: Path): Boolean =
-    Files.exists(propsPath(dir)) &&
-      Files.readString(propsPath(dir)).contains("\"final\":true")
+    MetaFiles.read(propsPath(dir)).exists(_.contains("\"final\":true"))
 
   override def tableExists(ident: Identifier): Boolean = isTableDir(tableDir(ident))
 
@@ -169,13 +166,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(TableDef.load(dir.toString).isEmpty,
       s"mergetree: $dir already holds a table definition")
     external.foreach { loc =>
-      val slot = dirOf(ident)
-      Files.createDirectories(slot)
-      Files.writeString(extlocPath(slot), loc.toString + "\n")
+      MetaFiles.publish(extlocPath(dirOf(ident)), loc.toString + "\n")
     }
     TableDef.store(dir.toString, defn)
     if (opts.getBoolean("final", false))
-      Files.writeString(propsPath(dir), "{\"final\":true}\n")
+      MetaFiles.publish(propsPath(dir), "{\"final\":true}\n")
     MergeTreeTableProvider.attachMvIfRequested(dir.toString, opts)
     MergeTreeTableProvider.attachProjectionsIfRequested(dir.toString, opts)
     new GenericMergeTreeV2Table(dir.toString, schema, defn.orderBy,

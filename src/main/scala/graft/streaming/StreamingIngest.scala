@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.mergetree.{ColumnarMergeTree, KVRow, MergeTreeTable}
+import graft.mergetree.{ColumnarMergeTree, KVRow, MergeTreeTable, MetaFiles}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -33,21 +33,14 @@ object StreamingIngest {
     * exactly-once (that needs the sink and the offset commit in ONE
     * atomic step); honest posture documented per entry point.
     */
-  private[graft] def notYetApplied(checkpointDir: String, batchId: Long): Boolean = {
-    val f = java.nio.file.Paths.get(checkpointDir, "_graft_applied_batch")
-    !java.nio.file.Files.exists(f) ||
-      java.nio.file.Files.readString(f).trim.toLong < batchId
-  }
+  private[graft] def notYetApplied(checkpointDir: String, batchId: Long): Boolean =
+    MetaFiles.read(appliedFile(checkpointDir)).forall(_.trim.toLong < batchId)
 
-  private[graft] def recordApplied(checkpointDir: String, batchId: Long): Unit = {
-    val dir = java.nio.file.Paths.get(checkpointDir)
-    java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".applied_", ".tmp")
-    java.nio.file.Files.writeString(tmp, batchId.toString)
-    java.nio.file.Files.move(tmp, dir.resolve("_graft_applied_batch"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[graft] def recordApplied(checkpointDir: String, batchId: Long): Unit =
+    MetaFiles.publish(appliedFile(checkpointDir), batchId.toString)
+
+  private def appliedFile(checkpointDir: String) =
+    java.nio.file.Paths.get(checkpointDir, "_graft_applied_batch")
 
   /** Start a stream writing every micro-batch as one part. Replayed
     * batches (crash after insert, before checkpoint commit) are skipped
