@@ -1,9 +1,5 @@
 package graft.mergetree
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -852,6 +848,17 @@ final class ColumnarMergeTree private (
         spark.sessionState.newHadoopConf(), s"$path/${p.dir}", leadKey)).toOption
         .map { r => leadPointsCache.put(p.partId, r); r })
 
+  /** The lead key's order over its canonical string form: numeric for
+    * integral, date/time and floating leads, UTF-8 for the rest. Throws
+    * NumberFormatException on a value the type cannot parse.
+    */
+  private def leadCompare(dt: DataType): (String, String) => Int = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType =>
+      (a, b) => java.lang.Long.compare(a.toLong, b.toLong)
+    case FloatType | DoubleType => (a, b) => java.lang.Double.compare(a.toDouble, b.toDouble)
+    case _                      => KeyOrder.cmp
+  }
+
   /** Learned write bounds (the generic-engine analog of MergeTreeTable's
     * key-sample path): split keys for sorting a new batch — or a MERGE's
     * output — into `n` range-partitioned files, from parts' own row-group
@@ -871,9 +878,10 @@ final class ColumnarMergeTree private (
     * sampling because bounds stay "computable" forever — r14 advice).
     * Monotonic ingest leaves an unmistakable metadata signature — each
     * recently created part begins at or above everything older (see
-    * [[ingestStaircase]]) — on which the learned path hands back None and
-    * the caller pays the one sampling pass that balances the batch; at
-    * most one early batch misroutes before the staircase is visible.
+    * [[KeySample.ingestStaircase]]) — on which the learned path hands back
+    * None and the caller pays the one sampling pass that balances the
+    * batch; at most one early batch misroutes before the staircase is
+    * visible.
     *
     * Scoped to the same PARTITION as the write, since merges never cross
     * partitions and per-partition distributions differ by design. None
@@ -889,7 +897,9 @@ final class ColumnarMergeTree private (
     val src = if (inputs.nonEmpty) inputs
       else lock.synchronized(manifest.parts).filter(_.partition == partition)
     if (src.isEmpty) return None
-    if (inputs.isEmpty && ingestStaircase(src, dt)) return None
+    if (inputs.isEmpty && KeySample.ingestStaircase(
+        src.map(p => (p.minKey, p.maxKey, p.creationTime, p.partId)))(leadCompare(dt)))
+      return None
     val perPart = src.map(leadPointsOf)
     if (perPart.exists(_.isEmpty)) return None
     val pts = perPart.flatMap(_.get).flatMap { case (lo, hi, rows) =>
@@ -903,44 +913,6 @@ final class ColumnarMergeTree private (
     Some(KeySample.splitBoundsTyped(pts, n, dt)).filter(_.nonEmpty)
   }
 
-  /** Append/monotonic-ingest detector over one partition's parts (see
-    * MergeTreeTable.ingestStaircase — same signature, typed compare):
-    * true when each of the (up to 3) most recently created parts begins
-    * at or above the max lead key of everything created before it. Null
-    * part bounds or unparseable values can't tell: not a staircase, keep
-    * the learned path.
-    */
-  private def ingestStaircase(live: Seq[GPartMeta],
-      dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    if (live.size < 2) return false
-    if (live.exists(p => p.minKey == null || p.maxKey == null)) return false
-    def cmp(a: String, b: String): Int = dt match {
-      case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType =>
-        java.lang.Long.compare(a.toLong, b.toLong)
-      case FloatType | DoubleType => java.lang.Double.compare(a.toDouble, b.toDouble)
-      case _                      => KeyOrder.cmp(a, b)
-    }
-    try {
-      val byTime = live.sortBy(p => (p.creationTime, p.partId))
-      val from = math.max(1, byTime.size - 3)
-      var olderMax = byTime.head.maxKey
-      var i = 1
-      while (i < from) {
-        if (cmp(byTime(i).maxKey, olderMax) > 0) olderMax = byTime(i).maxKey
-        i += 1
-      }
-      var stair = true
-      while (i < byTime.size) {
-        val p = byTime(i)
-        if (cmp(p.minKey, olderMax) < 0) stair = false
-        if (cmp(p.maxKey, olderMax) > 0) olderMax = p.maxKey
-        i += 1
-      }
-      stair
-    } catch { case _: NumberFormatException => false }
-  }
-
   /** Claim a staged part directory as `part_<id>`, computing its manifest
     * metadata from the freshly-written footers.
     */
@@ -952,8 +924,7 @@ final class ColumnarMergeTree private (
     buildHllSketches(stage)
     buildTopKSketches(stage)
     buildQuantileSketches(stage)
-    val (minK, maxK, rows, groups) = footerBounds(stage.toString, leadKey)
-    val stats = footerColStats(stage.toString, config.minmaxColumns)
+    val fm = footerMeta(stage.toString)
     val size = MergeTreeTable.dirSize(stage)
     val now = System.currentTimeMillis()
     // register=false outputs are intent-recorded by register() itself —
@@ -961,8 +932,8 @@ final class ColumnarMergeTree private (
     // dir is protected from the instant it exists under its final name.
     val meta = GManifest.register(path, stage, append = register,
       intent = !register) { partId =>
-      GPartMeta(partId, minK, maxK, leadIsNumeric, rows, groups, size, now,
-        partition, colStats = Some(stats).filter(_.nonEmpty))
+      GPartMeta(partId, fm.minKey, fm.maxKey, leadIsNumeric, fm.rows, fm.granules, size,
+        now, partition, colStats = Some(fm.colStats).filter(_.nonEmpty))
     }
     if (register) lock.synchronized {
       manifest = GManifest.load(path).getOrElse(manifest)
@@ -1011,143 +982,44 @@ final class ColumnarMergeTree private (
     } finally MergeTreeTable.deleteRecursively(stage)
   }
 
-  /** Leading-key bounds from the parquet footers the write just produced.
-    * Returns null bounds (= part unprunable) when any populated row group
-    * lacks key statistics — parquet-mr omits binary min/max above its footer
-    * stats size cap (long string keys trigger this), and bounds derived from
-    * PARTIAL stats would silently prune rows held by the stats-less groups
-    * (round-3 verdict bug #2). Correctness never depends on pruning.
-    */
-  private def footerBounds(dir: String, keyCol: String): (String, String, Long, Long) = {
-    val conf = spark.sessionState.newHadoopConf()
-    var minS: String = null; var maxS: String = null
-    var minL = Long.MaxValue; var maxL = Long.MinValue
-    var rows = 0L; var groups = 0L
-    var keyGroups = 0L // populated row groups that actually carried key stats
-    val files = Files.list(Paths.get(dir))
-    val parquetFiles =
-      try files.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
-      finally files.close()
-    parquetFiles.foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toString), conf))
-      try r.getFooter.getBlocks.asScala.foreach { b =>
-        if (b.getRowCount > 0) {
-          rows += b.getRowCount; groups += 1
-          b.getColumns.asScala.find(_.getPath.toDotString == keyCol).foreach { c =>
-            val s = c.getStatistics
-            if (s != null && s.hasNonNullValue) s.genericGetMin match {
-              case bin: Binary =>
-                keyGroups += 1
-                val lo = bin.toStringUsingUTF8
-                val hi = s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-                if (minS == null || KeyOrder.lt(lo, minS)) minS = lo
-                if (maxS == null || KeyOrder.gt(hi, maxS)) maxS = hi
-              case n: Number =>
-                keyGroups += 1
-                minL = math.min(minL, n.longValue())
-                maxL = math.max(maxL, s.genericGetMax.asInstanceOf[Number].longValue())
-              case _ => ()
-            }
-          }
-        }
-      } finally r.close()
-    }
-    if (keyGroups != groups) (null, null, rows, math.max(1, groups))
-    else if (leadIsNumeric) (minL.toString, maxL.toString, rows, math.max(1, groups))
-    else (minS, maxS, rows, math.max(1, groups))
-  }
-
-  /** Minmax skip-index bounds for the declared columns, from the footers of
-    * a freshly-written part. Same partial-stats discipline as footerBounds:
-    * a column whose stats are missing in ANY populated row group gets no
-    * entry (bounds from partial stats would prune rows the stats-less
-    * groups may hold).
+  /** Manifest metadata of a freshly-written part from ONE pass over its
+    * footers ([[PartStats.footers]], which applies the partial-stats rule):
+    * the leading-key bounds, (rows, granules) and the minmax skip-index
+    * entries.
+    * Lead bounds are null (= part unprunable) unless every populated row
+    * group carries lead stats of the lead's kind — integral leads compare
+    * as longs, everything else as UTF-8 strings (round-3 verdict bug #2).
     *
-    * Eligibility is decided by the TABLE SCHEMA type, not the runtime stats
-    * class: pruning compares manifest bounds against LOGICAL predicate
-    * values, so only types whose parquet stats ARE the logical value may
-    * participate — integer family → "long", float family → "double",
-    * strings → "string". Decimal (unscaled-int stats), Timestamp/Date
-    * (epoch encodings) and everything else are skipped: an entry keyed on
-    * the physical encoding would prune parts the predicate matches (e.g.
-    * Decimal(10,2) 100.00 stored as 10000 vs a pushed `price > 200`).
+    * Minmax eligibility is decided by the TABLE SCHEMA type, not the
+    * runtime stats class: pruning compares manifest bounds against LOGICAL
+    * predicate values, so only types whose parquet stats ARE the logical
+    * value may participate — integer family → "long", float family →
+    * "double", strings → "string". Decimal (unscaled-int stats),
+    * Timestamp/Date (epoch encodings) and everything else are skipped: an
+    * entry keyed on the physical encoding would prune parts the predicate
+    * matches (e.g. Decimal(10,2) 100.00 stored as 10000 vs a pushed
+    * `price > 200`). A declared column without a complete bound of its
+    * kind gets no entry.
     */
-  private def footerColStats(dir: String, cols: Seq[String]): List[GColStat] = {
+  private def footerMeta(dir: String): FooterMeta = {
     def kindFor(dt: DataType): Option[String] = dt match {
       case ByteType | ShortType | IntegerType | LongType => Some("long")
       case FloatType | DoubleType => Some("double")
       case StringType => Some("string")
       case _ => None
     }
-    val declared: Map[String, String] = cols.flatMap(c =>
+    val declared: Map[String, String] = config.minmaxColumns.flatMap(c =>
       schema.fields.find(_.name == c)
         .flatMap(f => kindFor(f.dataType)).map(c -> _)).toMap
-    if (declared.isEmpty) return Nil
-    val conf = spark.sessionState.newHadoopConf()
-    case class Acc(var minL: Long = Long.MaxValue, var maxL: Long = Long.MinValue,
-                   var minD: Double = Double.MaxValue, var maxD: Double = Double.MinValue,
-                   var minS: String = null, var maxS: String = null,
-                   var kind: String = null, var seen: Long = 0L)
-    val accs = declared.keys.map(c => c -> Acc()).toMap
-    var groups = 0L
-    val files = Files.list(Paths.get(dir))
-    val parquetFiles =
-      try files.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
-      finally files.close()
-    parquetFiles.foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toString), conf))
-      try r.getFooter.getBlocks.asScala.foreach { b =>
-        if (b.getRowCount > 0) {
-          groups += 1
-          b.getColumns.asScala.foreach { c =>
-            accs.get(c.getPath.toDotString).foreach { a =>
-              val s = c.getStatistics
-              if (s != null && s.hasNonNullValue) s.genericGetMin match {
-                case bin: Binary =>
-                  a.seen += 1; a.kind = "string"
-                  val lo = bin.toStringUsingUTF8
-                  val hi = s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-                  if (a.minS == null || KeyOrder.lt(lo, a.minS)) a.minS = lo
-                  if (a.maxS == null || KeyOrder.gt(hi, a.maxS)) a.maxS = hi
-                case n: Number
-                    if n.isInstanceOf[java.lang.Double] || n.isInstanceOf[java.lang.Float] =>
-                  // NaN bounds (all-NaN row group, or NaN-propagating writer
-                  // stats) poison min/max — math.min/max would carry the NaN
-                  // into the stored stat and colAllowsRange's Double.compare
-                  // would then prune parts that hold real in-range rows in
-                  // their other row groups. Leave `seen` behind instead: the
-                  // seen != groups check below drops the stat, so the part
-                  // stays unbounded (never pruned) for this column.
-                  val lo = n.doubleValue()
-                  val hi = s.genericGetMax.asInstanceOf[Number].doubleValue()
-                  if (!lo.isNaN && !hi.isNaN) {
-                    a.seen += 1; a.kind = "double"
-                    a.minD = math.min(a.minD, lo)
-                    a.maxD = math.max(a.maxD, hi)
-                  }
-                case n: Number =>
-                  a.seen += 1; a.kind = "long"
-                  a.minL = math.min(a.minL, n.longValue())
-                  a.maxL = math.max(a.maxL,
-                    s.genericGetMax.asInstanceOf[Number].longValue())
-                case _ => ()
-              }
-            }
-          }
-        }
-      } finally r.close()
-    }
-    accs.keys.toList.sorted.flatMap { c =>
-      val a = accs(c)
-      // Belt-and-braces: the runtime stats class must agree with the
-      // schema-declared kind (it always does for the whitelisted types).
-      if (a.seen != groups || a.kind == null || a.kind != declared(c)) None
-      else a.kind match {
-        case "long"   => Some(GColStat(c, a.minL.toString, a.maxL.toString, "long"))
-        case "double" => Some(GColStat(c, a.minD.toString, a.maxD.toString, "double"))
-        case _        => Some(GColStat(c, a.minS, a.maxS, "string"))
-      }
-    }.toList
+    val f = PartStats.footers(spark.sessionState.newHadoopConf(), dir,
+      leadKey +: declared.keys.toSeq)
+    val leadKind = if (leadIsNumeric) "long" else "string"
+    val lead = f.bounds(leadKey).filter(_.kind == leadKind)
+    val colStats = declared.keys.toList.sorted.flatMap(c =>
+      f.bounds(c).filter(_.kind == declared(c))
+        .map(b => GColStat(c, b.lo.toString, b.hi.toString, declared(c))))
+    FooterMeta(lead.map(_.lo.toString).orNull, lead.map(_.hi.toString).orNull,
+      f.rows, f.rowGroups, colStats)
   }
 
   // ----------------------------------------------------------------- query
@@ -1428,6 +1300,9 @@ final class ColumnarMergeTree private (
     * Orphans are deleted only past a conservative age floor (≥ 10 min AND
     * the table's grace window, even under `force`), so an IN-FLIGHT
     * maintenance op's just-written unregistered outputs are never swept.
+    * The same sweep, under the same floor, deletes the temp siblings of
+    * torn metadata publishes in the table root and `snapshots/`
+    * ([[MetaFiles.sweepTemps]]); they are not counted in the result.
     */
   def purgeGc(force: Boolean = false): Int = {
     val cutoff = System.currentTimeMillis() - config.gcGraceSeconds * 1000L
@@ -1467,6 +1342,9 @@ final class ColumnarMergeTree private (
     if (!proceed) return 0
     val floorMs = math.max(600L, config.gcGraceSeconds.toLong) * 1000L
     val cutoff = now - floorMs
+    // Torn metadata publishes (root records and snapshots); not counted.
+    Seq(Paths.get(path), Paths.get(path, "snapshots"))
+      .foreach(MetaFiles.sweepTemps(_, cutoff))
     val snapshotParts = SnapshotLog.list(path).flatMap(seq =>
       SnapshotLog.load(path, seq).map(_.parts.map(_.dir)).getOrElse(Nil))
     // In-flight maintenance outputs (register=false, pre-swap) are
@@ -3678,7 +3556,8 @@ object ColumnarMergeTree {
     def muts: List[GMut] = pendingMuts.getOrElse(Nil)
 
     /** Inclusive-range overlap. Null bounds mean the part is unbounded
-      * (footer key stats were incomplete — see footerBounds): never pruned.
+      * (footer key stats were incomplete — see PartStats.Footers.bounds):
+      * never pruned.
       * String bounds compare in UTF-8 byte order (KeyOrder) to match Spark
       * filter / parquet stats collation.
       */
@@ -3732,6 +3611,12 @@ object ColumnarMergeTree {
     * tag ("long" | "double" | "string") selecting the comparison.
     */
   case class GColStat(col: String, min: String, max: String, kind: String)
+
+  /** A freshly-written part's manifest metadata from its footers (see
+    * `footerMeta`).
+    */
+  private final case class FooterMeta(minKey: String, maxKey: String, rows: Long,
+      granules: Long, colStats: List[GColStat])
 
   /** One pending lightweight mutation: kind "del" (hide rows where `cond`
     * is TRUE) or "upd" (replace each `set` column by its expression where

@@ -7,7 +7,6 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /** Per-part key sample (`keysample.json`, written into the part dir before
   * it is claimed, so it is atomic with the part itself).
@@ -78,6 +77,42 @@ private[graft] object KeySample {
   def splitBounds(points: Seq[(String, Double)], n: Int): Seq[String] =
     splitBoundsGeneric(points, n)(KeyOrder.ordering)
 
+  /** Append/monotonic-ingest detector — both engines' guard on learned
+    * write bounds. `parts` are (minKey, maxKey, creationTime, partId) with
+    * keys ordered by `cmp`. True when each of the (up to 3) most recently
+    * created parts begins at or above the max key of everything created
+    * before it. Random or stationary ingest breaks the staircase
+    * immediately (every batch part spans the key space); compaction can
+    * fake at most one step (bins are key-contiguous), so a single random
+    * batch after an optimize resets the signal — worst case one extra
+    * sampling pass per compaction cycle. Null part bounds (incomplete
+    * footer stats) or keys `cmp` cannot parse can't tell: not a staircase,
+    * keep the learned path.
+    */
+  def ingestStaircase(parts: Seq[(String, String, Long, Long)])(
+      cmp: (String, String) => Int): Boolean = {
+    if (parts.size < 2) return false
+    if (parts.exists(p => p._1 == null || p._2 == null)) return false
+    try {
+      val byTime = parts.sortBy(p => (p._3, p._4))
+      val from = math.max(1, byTime.size - 3)
+      var olderMax = byTime.head._2
+      var i = 1
+      while (i < from) {
+        if (cmp(byTime(i)._2, olderMax) > 0) olderMax = byTime(i)._2
+        i += 1
+      }
+      var stair = true
+      while (i < byTime.size) {
+        val (lo, hi, _, _) = byTime(i)
+        if (cmp(lo, olderMax) < 0) stair = false
+        if (cmp(hi, olderMax) > 0) olderMax = hi
+        i += 1
+      }
+      stair
+    } catch { case _: NumberFormatException => false }
+  }
+
   /** splitBounds in the KEY TYPE's own order for canonically-encoded
     * numeric points ("10" must sort after "9") — the write-side learned
     * bounds on tables ordered by a numeric lead key.
@@ -141,14 +176,7 @@ private[graft] object KeySample {
     */
   def fromPartDir(conf: Configuration, dir: String, rows: Long): Option[Sample] = {
     if (rows <= 0 || rows > MaxDriverSampleRows) return None
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return None
-    val files = {
-      val s = Files.list(d)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally s.close()
-    }
+    val files = PartStats.parquetFiles(Paths.get(dir))
     val stride = math.max(1L, rows / Size)
     val keys = new ArrayBuffer[String]()
     val projConf = new Configuration(conf)

@@ -8,9 +8,8 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 /** Driver-local read of one KV part directory (the small-query
   * short-circuit's data path — see `MergeTreeConfig.localScanMaxRows`).
@@ -23,14 +22,8 @@ import scala.jdk.CollectionConverters._
 private[mergetree] object LocalPartReader {
 
   def read(dir: String, range: Option[(String, String)]): Seq[KVRow] = {
-    val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) return Nil
-    val files = {
-      val s = Files.list(d)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally s.close()
-    }
+    val files = PartStats.parquetFiles(Paths.get(dir))
+    if (files.isEmpty) return Nil
     val filter: Option[FilterPredicate] = range.map { case (lo, hi) =>
       FilterApi.and(
         FilterApi.gtEq(FilterApi.binaryColumn("key"), Binary.fromString(lo)),

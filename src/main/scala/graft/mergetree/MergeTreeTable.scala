@@ -670,7 +670,7 @@ final class MergeTreeTable private (
       val now = System.currentTimeMillis()
       if (granuleBoundsRetryAt.getOrDefault(partId, 0L) > now) None
       else try {
-        val r = PartStats.keyRanges(spark.sessionState.newHadoopConf(), partDir(partId))
+        val r = PartStats.colRanges(spark.sessionState.newHadoopConf(), partDir(partId), "key")
         granuleBoundsCache.put(partId, r)
         granuleBoundsRetryAt.remove(partId)
         Some(r)
@@ -828,18 +828,21 @@ final class MergeTreeTable private (
     * steady-state, and nothing would re-trigger sampling because bounds
     * stay "computable" forever (r14 advice). Monotonic ingest leaves an
     * unmistakable metadata signature — each recently created part BEGINS
-    * at or above everything older (see [[ingestStaircase]]) — and on that
-    * signature we hand back None and let the caller pay the sampling pass
-    * that balances the batch; at most one early batch misroutes before
-    * the staircase is visible. Benign drift still only unbalances the
-    * part's files (row groups stay sorted and correct). None also while
-    * the table is empty or its samples are too thin to cut n ways.
+    * at or above everything older (see [[KeySample.ingestStaircase]]) —
+    * and on that signature we hand back None and let the caller pay the
+    * sampling pass that balances the batch; at most one early batch
+    * misroutes before the staircase is visible. Benign drift still only
+    * unbalances the part's files (row groups stay sorted and correct).
+    * None also while the table is empty or its samples are too thin to
+    * cut n ways.
     */
   private def learnedWriteBounds(n: Int): Option[Seq[String]] = {
     if (n <= 1) return None
     val live = lock.synchronized(manifest.parts)
     if (live.isEmpty) return None
-    if (ingestStaircase(live)) return None
+    if (KeySample.ingestStaircase(
+        live.map(p => (p.minKey, p.maxKey, p.creationTime, p.partId)))(KeyOrder.cmp))
+      return None
     val pts = live.flatMap(p => keySampleOf(p.partId) match {
       case Some(ks) if ks.keys.nonEmpty =>
         val w = p.rowCount.toDouble / ks.keys.size
@@ -848,38 +851,6 @@ final class MergeTreeTable private (
     })
     if (pts.size < n * 4) return None // too thin to cut n ways with confidence
     Some(KeySample.splitBounds(pts, n)).filter(_.nonEmpty)
-  }
-
-  /** Append/monotonic-ingest detector — learnedWriteBounds' drift guard:
-    * true when each of the (up to 3) most recently created parts begins
-    * at or above the max key of everything created before it. Random or
-    * stationary ingest breaks the staircase immediately (every batch part
-    * spans the key space); compaction can fake at most one step (bins are
-    * key-contiguous), so a single random batch after an optimize resets
-    * the signal — worst case one extra sampling pass per compaction
-    * cycle. Null part bounds (incomplete footer stats) can't tell: not a
-    * staircase, keep the learned path, as before the guard existed.
-    */
-  private def ingestStaircase(live: Seq[PartMetadata]): Boolean = {
-    if (live.size < 2) return false
-    if (live.exists(p => p.minKey == null || p.maxKey == null)) return false
-    val byTime = live.sortBy(p => (p.creationTime, p.partId))(
-      Ordering.Tuple2(Ordering.Long, Ordering.Long))
-    val from = math.max(1, byTime.size - 3)
-    var olderMax = byTime.head.maxKey
-    var i = 1
-    while (i < from) {
-      if (KeyOrder.gt(byTime(i).maxKey, olderMax)) olderMax = byTime(i).maxKey
-      i += 1
-    }
-    var stair = true
-    while (i < byTime.size) {
-      val p = byTime(i)
-      if (KeyOrder.lt(p.minKey, olderMax)) stair = false
-      if (KeyOrder.gt(p.maxKey, olderMax)) olderMax = p.maxKey
-      i += 1
-    }
-    stair
   }
 
   // ----------------------------------------------------------- maintenance
@@ -956,8 +927,9 @@ final class MergeTreeTable private (
     } finally compacting.set(false)
   }
 
-  /** Merge one key-contiguous bin into a single part (singleton bins pass
-    * through unrewritten; small bins merge driver-locally).
+  /** Merge one key-contiguous bin (or performMerge's candidate set) into a
+    * single part: singleton bins pass through unrewritten, small bins merge
+    * driver-locally, the rest through one distributed rewrite.
     */
   private def mergeGroup(group: Seq[PartMetadata]): PartMetadata =
     if (group.size == 1) group.head
@@ -970,7 +942,7 @@ final class MergeTreeTable private (
         .select(col("key"), col("value"), col("timestamp"))
       writePartInternal(merged,
         partitionsForRows(group.map(_.rowCount).sum), register = false,
-        sampleHint = sampleHintOf(group))
+        sampleHint = sampleHintOf(group)).get
     }
 
   /** Row ceiling for the driver-local merge path (see mergeGroupLocal). */
@@ -1061,21 +1033,13 @@ final class MergeTreeTable private (
     if (candidates.isEmpty) return false
     val toMerge = candidates.get
     val mergedIds = toMerge.map(_.partId).toSet
-    // Small candidate sets merge driver-locally (cache-served, no Spark
-    // job — see mergeGroupLocal); above the budget the distributed path
+    // Candidates are 2-3 parts, so mergeGroup always rewrites: small sets
+    // merge driver-locally (cache-served, no Spark job — see
+    // mergeGroupLocal); above the budget the distributed path
     // range-partitions + locally sorts + partially aggregates — fully
     // spillable, no driver materialization (SURVEY §4). The reference
     // materializes ANY size in RAM (src/merger.cpp:13-15).
-    val newMeta = mergeGroupLocal(toMerge).getOrElse {
-      val inputs = spark.read.schema(schema).parquet(toMerge.map(p => partDir(p.partId)): _*)
-      val merged = inputs
-        .groupBy(col("key"), col("timestamp"))
-        .agg(max(col("value")).as("value"))
-        .select(col("key"), col("value"), col("timestamp"))
-      writePartInternal(merged,
-        partitionsForRows(toMerge.map(_.rowCount).sum), register = false,
-        sampleHint = sampleHintOf(toMerge))
-    }
+    val newMeta = mergeGroup(toMerge)
     // Atomic read-merge swap: new manifest lists merged part, drops inputs,
     // keeps anything a concurrent writer registered meanwhile. Only the
     // swap holds the table lock (see mergePartsSync).
@@ -1107,11 +1071,15 @@ final class MergeTreeTable private (
     math.max(1, math.min(byRows, spark.sparkContext.defaultParallelism))
   }
 
-  private def writePart(df: DataFrame, partitions: Int): PartMetadata =
+  private def writePart(df: DataFrame, partitions: Int): Unit =
     writePartInternal(df, partitions, register = true)
 
+  /** Sorts `df` into one new part and returns its metadata; None (and no
+    * part) when a batch to register holds no rows. A merge output
+    * (register = false) is always returned.
+    */
   private def writePartInternal(df: DataFrame, partitions: Int, register: Boolean,
-      sampleHint: Option[Seq[(String, Double)]] = None): PartMetadata = {
+      sampleHint: Option[Seq[(String, Double)]] = None): Option[PartMetadata] = {
     // The data write lands in a job-unique staging dir; the final
     // `part_<id>` name is claimed inside Manifest.register, where id
     // allocation and the rename are one locked step — so a concurrent DSv2
@@ -1162,6 +1130,7 @@ final class MergeTreeTable private (
     // no second scan of the data (round 1 re-read every part here, doubling
     // write-path I/O; see PartStats).
     val stats = PartStats.readDir(spark.sessionState.newHadoopConf(), stage.toString)
+    if (register && stats.rows == 0) { deleteRecursively(stage); return None }
     val size = dirSize(stage)
     // Key sample (see KeySample): merges fold their inputs' samples with
     // zero I/O; fresh batch parts pay one decimated column-pruned read
@@ -1194,7 +1163,7 @@ final class MergeTreeTable private (
         creationTime = now)
     }
     if (register) refresh()
-    meta
+    Some(meta)
   }
 
   /** Re-read the on-disk manifest (picks up parts landed by the DSv2
@@ -1226,10 +1195,16 @@ final class MergeTreeTable private (
 
   /** Delete retired part directories whose grace has expired (`force` = all
     * of them); dirs go before their list entries so a crash in between only
-    * leaves re-purgeable no-op entries, never an unrecorded leak.
+    * leaves re-purgeable no-op entries, never an unrecorded leak. Also
+    * sweeps aged metadata temps ([[MetaFiles.sweepTemps]]).
     */
   def purgeGc(force: Boolean = false): Int = {
-    val cutoff = System.currentTimeMillis() - config.gcGraceSeconds * 1000L
+    val now = System.currentTimeMillis()
+    // Torn metadata publishes: same age floor as the generic table's
+    // orphan sweep, even under `force`; not counted in the result.
+    MetaFiles.sweepTemps(Paths.get(path),
+      now - math.max(600L, config.gcGraceSeconds.toLong) * 1000L)
+    val cutoff = now - config.gcGraceSeconds * 1000L
     val victims = ColumnarMergeTree.GcList.load(path).retired
       .filter(e => force || e.retiredAt <= cutoff)
     if (victims.isEmpty) return 0

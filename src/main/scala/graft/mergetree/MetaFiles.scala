@@ -5,6 +5,7 @@ import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOptio
 
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{JsonMethods, Serialization}
+import scala.jdk.CollectionConverters._
 
 /** The one way graft writes and reads a small metadata file: both manifest
   * formats, tabledef, the MV registry, the snapshot log, the GC, detached
@@ -17,8 +18,9 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * sees the previous file or the new one, never a partial one. A crash
   * between the write and the rename leaves only that temp sibling, which no
   * reader opens (every loader asks for its exact file name, and Spark skips
-  * dot files). Durability (fsync before the rename) is not done yet; this is
-  * the one place it goes.
+  * dot files) and the engines' GC sweeps once it is old ([[sweepTemps]]).
+  * Durability (fsync before the rename) is not done yet; this is the one
+  * place it goes.
   *
   * Not routed here: the manifest LOG layout publishes by put-if-absent
   * through [[CommitBackend]], and `freeze` renames a whole staged directory.
@@ -53,6 +55,26 @@ private[graft] object MetaFiles {
   /** [[publish]] of `value` as pretty-printed JSON, the record format. */
   def publishJson(target: Path, value: AnyRef): Unit =
     publish(target, Serialization.writePretty(value))
+
+  /** Delete the temp siblings that torn publishes left in `dir` (the
+    * `.<name>.<uuid>.tmp` files of [[publish]]) last modified before
+    * `cutoffMs`. A live publish renames its temp within moments, so a
+    * floor of minutes never races one. Entries that vanish or cannot be
+    * read mid-sweep are skipped.
+    */
+  def sweepTemps(dir: Path, cutoffMs: Long): Unit =
+    try {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter { f =>
+        val n = f.getFileName.toString
+        n.startsWith(".") && n.endsWith(".tmp") &&
+          (try Files.isRegularFile(f) && Files.getLastModifiedTime(f).toMillis < cutoffMs
+           catch { case _: java.io.IOException => false })
+      }.foreach(Files.deleteIfExists(_))
+      finally s.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
 
   /** The file's text, or None when it is absent. Any other failure
     * (unreadable, a directory) throws: callers fail closed.

@@ -2,6 +2,7 @@ package graft.mergetree
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -9,7 +10,7 @@ import org.apache.parquet.io.api.Binary
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Aggregated parquet-footer statistics for one part directory.
+/** Aggregated parquet-footer statistics for one KV part directory.
   *
   * This replaces the reference's post-write metadata computation
   * (src/part.cpp:125-161) AND round 1's second read-scan of every freshly
@@ -23,12 +24,12 @@ import scala.jdk.CollectionConverters._
   * granuleSize rows, mirroring the reference's 8192-row granule
   * (src/granule.h:10); the footer row-group stats ARE the sparse index
   * (src/sparse_index.h:9-22).
-  */
-/** `minKey`/`maxKey` are null when any populated row group lacks key
-  * statistics (parquet-mr omits binary min/max above its 4096-byte footer
-  * stats cap — long string keys trigger this): bounds derived from partial
-  * stats could wrongly prune, so the part is marked unbounded and pruning
-  * treats it as always-overlapping. Correctness never depends on pruning.
+  *
+  * The companion object is the one place either engine opens a parquet
+  * footer ([[PartStats.footers]]) or lists a part's parquet files
+  * ([[PartStats.parquetFiles]]). `minKey`/`maxKey` are null and the
+  * timestamp range is widened to `[Long.MinValue, Long.MaxValue]` when the
+  * footers carry no complete bound for the column (see [[Footers.bounds]]).
   */
 case class PartStats(
     minKey: String,
@@ -40,133 +41,150 @@ case class PartStats(
 
 object PartStats {
 
-  /** Read footer stats for every parquet file under `dir` (non-recursive). */
-  def readDir(conf: Configuration, dir: String): PartStats = {
-    val files = listParquet(Paths.get(dir))
-    require(files.nonEmpty, s"no parquet files in $dir")
-    var minKey: String = null
-    var maxKey: String = null
-    var minTs = Long.MaxValue
-    var maxTs = Long.MinValue
-    var rows = 0L
-    var groups = 0L
-    var keyGroups = 0L // row groups that actually carried key statistics
-    var tsGroups = 0L
-    files.foreach { f =>
-      val in = HadoopInputFile.fromPath(new HPath(f.toString), conf)
-      val reader = ParquetFileReader.open(in)
-      try {
-        reader.getFooter.getBlocks.asScala.foreach { block =>
-          if (block.getRowCount > 0) {
-            rows += block.getRowCount
-            groups += 1
-            block.getColumns.asScala.foreach { col =>
-              col.getPath.toDotString match {
-                case "key" =>
-                  val s = col.getStatistics
-                  if (s != null && s.hasNonNullValue) {
-                    keyGroups += 1
-                    val lo = s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
-                    val hi = s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-                    if (minKey == null || KeyOrder.lt(lo, minKey)) minKey = lo
-                    if (maxKey == null || KeyOrder.gt(hi, maxKey)) maxKey = hi
-                  }
-                case "timestamp" =>
-                  val s = col.getStatistics
-                  if (s != null && s.hasNonNullValue) {
-                    tsGroups += 1
-                    val lo = s.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-                    val hi = s.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                    if (lo < minTs) minTs = lo
-                    if (hi > maxTs) maxTs = hi
-                  }
-                case _ => ()
-              }
-            }
-          }
-        }
-      } finally reader.close()
-    }
-    // Bounds from PARTIAL stats would prune rows the stats-less groups hold —
-    // silent data loss. Any gap makes the whole part unbounded (unprunable).
-    // Timestamps get the same guard: a subset-derived (or inverted-sentinel)
-    // ts range persisted as exact would exclude real rows from any consumer
-    // of the bounds; widen to the full range instead.
-    if (keyGroups != groups) { minKey = null; maxKey = null }
-    if (tsGroups != groups) { minTs = Long.MinValue; maxTs = Long.MaxValue }
-    PartStats(minKey, maxKey, minTs, maxTs, rows, math.max(1L, groups))
-  }
-
-  /** Per-row-group (minKey, maxKey, rows) across the part's files — the
-    * sparse index itself, for granule-level in-range row estimates. Groups
-    * without key statistics report null bounds (callers must treat them as
-    * always-overlapping: an estimate from partial stats must never
-    * UNDER-count). Footer-only driver I/O; parts are immutable, so callers
-    * may cache the result per part id.
+  /** One column's footer min/max in one row group. Binary stats are
+    * decoded as UTF-8 strings; numbers stay boxed as parquet-mr returns
+    * them (Integer, Long, Float, Double).
     */
-  def keyRanges(conf: Configuration, dir: String): Seq[(String, String, Long)] = {
-    listParquet(Paths.get(dir)).flatMap { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(f.toString), conf))
-      try reader.getFooter.getBlocks.asScala.toSeq
-        .filter(_.getRowCount > 0)
-        .map { block =>
-          val ks = block.getColumns.asScala
-            .find(_.getPath.toDotString == "key").map(_.getStatistics)
-          ks match {
-            case Some(s) if s != null && s.hasNonNullValue =>
-              (s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
-                s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8,
-                block.getRowCount)
-            case _ => (null, null, block.getRowCount)
-          }
-        }
-      finally reader.close()
+  final case class Bound(lo: Any, hi: Any) {
+    /** "string", "long" (integral numbers), "double" (floating point) or
+      * "other" (e.g. boolean, which no caller bounds on).
+      */
+    def kind: String = lo match {
+      case _: String                                => "string"
+      case _: java.lang.Double | _: java.lang.Float => "double"
+      case _: Number                                => "long"
+      case _                                        => "other"
     }
   }
 
-  /** Per-row-group (min, max, rows) of `colName` across the part's files,
-    * the values CANONICALLY string-encoded per their parquet physical type
-    * (Binary→UTF-8, numerics→toString — the encoding
-    * BoundedRangeRepartition's bound lists decode). Groups without stats
-    * report nulls. Footer-only driver I/O; cacheable per immutable part.
+  /** One populated row group: its rows and the requested columns that
+    * carry a usable bound in it.
     */
-  def colRanges(conf: Configuration, dir: String, colName: String): Seq[(String, String, Long)] = {
-    listParquet(Paths.get(dir)).flatMap { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(f.toString), conf))
-      try reader.getFooter.getBlocks.asScala.toSeq
-        .filter(_.getRowCount > 0)
-        .map { block =>
-          val ks = block.getColumns.asScala
-            .find(_.getPath.toDotString == colName).map(_.getStatistics)
-          def enc(v: Any): String = v match {
-            case b: Binary => b.toStringUsingUTF8
-            case other     => String.valueOf(other)
-          }
-          ks match {
-            case Some(s) if s != null && s.hasNonNullValue =>
-              (enc(s.genericGetMin), enc(s.genericGetMax), block.getRowCount)
-            case _ => (null, null, block.getRowCount)
-          }
-        }
-      finally reader.close()
+  final case class RowGroup(rows: Long, bounds: Map[String, Bound])
+
+  /** The populated row groups of one part directory, in file-list then
+    * footer order, plus how many parquet files the directory holds.
+    */
+  final case class Footers(files: Int, groups: Seq[RowGroup]) {
+    def rows: Long = groups.iterator.map(_.rows).sum
+
+    /** Granule count; an all-empty part still counts one. */
+    def rowGroups: Long = math.max(1L, groups.size.toLong)
+
+    /** The part-wide bound of `col`, under the partial-stats rule: None
+      * unless EVERY populated row group has a bound of one kind. Bounds
+      * from partial stats would prune rows the stats-less groups hold
+      * (parquet-mr omits binary min/max past its 4096-byte footer stats
+      * cap, so long string keys trigger this; all-null groups carry none;
+      * a NaN double bound is dropped per group, see [[footers]]), so the
+      * part is unbounded instead. Correctness never depends on pruning.
+      * Strings fold in UTF-8 byte order ([[KeyOrder]]), longs and doubles
+      * numerically; the result is a String, java.lang.Long or
+      * java.lang.Double pair.
+      */
+    def bounds(col: String): Option[Bound] = {
+      val bs = groups.map(_.bounds.get(col))
+      if (bs.isEmpty || bs.exists(_.isEmpty)) return None
+      val all = bs.flatten
+      val kind = all.head.kind
+      if (all.exists(_.kind != kind)) None
+      else kind match {
+        case "string" =>
+          Some(Bound(all.map(_.lo.toString).reduce(KeyOrder.min),
+            all.map(_.hi.toString).reduce(KeyOrder.max)))
+        case "long" =>
+          val lo: Long = all.map(b => num(b.lo).longValue).reduce((x, y) => math.min(x, y))
+          val hi: Long = all.map(b => num(b.hi).longValue).reduce((x, y) => math.max(x, y))
+          Some(Bound(java.lang.Long.valueOf(lo), java.lang.Long.valueOf(hi)))
+        case "double" =>
+          val lo: Double = all.map(b => num(b.lo).doubleValue).reduce((x, y) => math.min(x, y))
+          val hi: Double = all.map(b => num(b.hi).doubleValue).reduce((x, y) => math.max(x, y))
+          Some(Bound(java.lang.Double.valueOf(lo), java.lang.Double.valueOf(hi)))
+        case _ => None
+      }
     }
+
+    /** Per-row-group (min, max, rows) of `col`, CANONICALLY string-encoded
+      * per the parquet physical type (Binary→UTF-8, numerics→toString — the
+      * encoding BoundedRangeRepartition's bound lists decode). Groups
+      * without a bound report nulls (callers treat them as always
+      * overlapping: an estimate from partial stats must never UNDER-count).
+      */
+    def ranges(col: String): Seq[(String, String, Long)] =
+      groups.map(g => g.bounds.get(col) match {
+        case Some(b) => (String.valueOf(b.lo), String.valueOf(b.hi), g.rows)
+        case None    => (null, null, g.rows)
+      })
   }
 
-  /** Per-row-group row counts across the part's files, for granule tests. */
-  def rowGroupSizes(conf: Configuration, dir: String): Seq[Long] = {
-    listParquet(Paths.get(dir)).flatMap { f =>
+  private def num(v: Any): Number = v.asInstanceOf[Number]
+
+  /** One pass over the footers of every parquet file in `dir`
+    * (non-recursive), keeping the bounds of `cols`. Row groups with no
+    * rows (a 0-row file has none at all) are skipped. A column whose stats
+    * are absent, all-null, or carry a NaN double bound (NaN poisons min/max
+    * folds and orders above +Inf) gets no bound in that group.
+    */
+  def footers(conf: Configuration, dir: String, cols: Seq[String]): Footers = {
+    val wanted = cols.toSet
+    val files = parquetFiles(Paths.get(dir))
+    val groups = files.flatMap { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f.toString), conf))
-      try reader.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq
+      try reader.getFooter.getBlocks.asScala.toList.filter(_.getRowCount > 0).map { block =>
+        RowGroup(block.getRowCount, block.getColumns.asScala.flatMap { c =>
+          val name = c.getPath.toDotString
+          if (wanted(name)) boundOf(c.getStatistics).map(name -> _) else None
+        }.toMap)
+      }
       finally reader.close()
     }
+    Footers(files.size, groups)
   }
 
-  private def listParquet(dir: Path): Seq[Path] = {
-    if (!Files.isDirectory(dir)) return Nil
-    val s = Files.list(dir)
-    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-    finally s.close()
+  private def boundOf(s: Statistics[_]): Option[Bound] =
+    if (s == null || !s.hasNonNullValue) None
+    else {
+      def decode(v: Any): Any = v match {
+        case b: Binary => b.toStringUsingUTF8
+        case other     => other
+      }
+      val b = Bound(decode(s.genericGetMin), decode(s.genericGetMax))
+      if (b.kind == "double" && (num(b.lo).doubleValue.isNaN || num(b.hi).doubleValue.isNaN)) None
+      else Some(b)
+    }
+
+  /** KV part metadata from the footers of every parquet file under `dir`:
+    * the `key` range (UTF-8 order) and the `timestamp` range.
+    */
+  def readDir(conf: Configuration, dir: String): PartStats = {
+    val f = footers(conf, dir, Seq("key", "timestamp"))
+    require(f.files > 0, s"no parquet files in $dir")
+    val key = f.bounds("key").filter(_.kind == "string")
+    val ts = f.bounds("timestamp").filter(_.kind == "long")
+    PartStats(
+      key.map(_.lo.toString).orNull, key.map(_.hi.toString).orNull,
+      ts.fold(Long.MinValue)(b => num(b.lo).longValue),
+      ts.fold(Long.MaxValue)(b => num(b.hi).longValue),
+      f.rows, f.rowGroups)
   }
+
+  /** Per-row-group (min, max, rows) of `colName` across the part's files
+    * (see [[Footers.ranges]]) — the sparse index itself, for granule-level
+    * in-range row estimates and learned write bounds. Footer-only driver
+    * I/O; parts are immutable, so callers may cache the result per part.
+    */
+  def colRanges(conf: Configuration, dir: String, colName: String): Seq[(String, String, Long)] =
+    footers(conf, dir, Seq(colName)).ranges(colName)
+
+  /** The parquet files of one part directory, in listing order (none if
+    * the directory is gone). Sidecars (`_keysample.json`, skip-index files)
+    * and dot-prefixed temps are not parquet and never listed.
+    */
+  def parquetFiles(dir: Path): List[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally s.close()
+    }
 }

@@ -775,18 +775,21 @@ object PipelineQueries {
           struct(least(x, y).as("a"), greatest(x, y).as("b")))))
     }
     // collect_capped (not collect_list): the aggregation buffer saturates
-    // at maxShingleFreq + 1 docs, so a hot boilerplate shingle appearing in
-    // millions of docs costs cap-bounded memory instead of materializing
-    // its full list before the size filter drops it (r16 ADVICE, medium).
-    // Kept groups (≤ cap total rows) never truncate on any partial path —
-    // identical lists, identical pair set.
+    // at `cap` docs, so a hot boilerplate shingle appearing in millions of
+    // docs costs cap-bounded memory instead of materializing its full list
+    // before the size filter drops it (r16 ADVICE, medium). The buffer
+    // limit and the filter share `cap`: a list that reached it is a
+    // saturated (hot) group and is dropped, and every kept group (< cap
+    // rows) never truncates on any partial path — identical lists,
+    // identical pair set.
+    val cap = maxShingleFreq + 1
     val collectCapped = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.CollectCappedLong(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("doc_id")),
-        maxShingleFreq + 1).toAggregateExpression())
+        cap).toAggregateExpression())
     val cand = dsh.groupBy(col("h"))
       .agg(collectCapped.as("ds"))
-      .filter(size(col("ds")).between(2, maxShingleFreq))
+      .filter(size(col("ds")) >= 2 && size(col("ds")) < cap)
       .select(explode(pairsOf).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()

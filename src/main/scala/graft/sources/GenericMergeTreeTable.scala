@@ -855,50 +855,15 @@ class GenericMergeTreeScanImpl(
     }
   }
 
-  /** Key range compiled to a parquet FilterPredicate for row-group skip
-    * (O7); only string and integral leading keys are typed here — others
-    * never populated lo/hi (see GenericScanBuilder.usable).
-    */
-  private def rangePredicate: Option[FilterPredicate] = {
-    // Only types whose parquet physical encoding this can name get a
-    // pushed row-group predicate; anything else (decimal, date, …) returns
-    // None — an int-column fallback would compare MISMATCHED types in the
-    // parquet stats filter (crash, or a truncated bound misprune when a
-    // projection routes a double column here). Pruning is an optimization;
-    // correctness never depends on it.
-    def one(v: Any, lower: Boolean): Option[FilterPredicate] = leadType match {
-      case StringType =>
-        val c = FilterApi.binaryColumn(leadKey)
-        val b = Binary.fromString(v.toString)
-        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
-      case LongType =>
-        val c = FilterApi.longColumn(leadKey)
-        val b = java.lang.Long.valueOf(v.asInstanceOf[Number].longValue())
-        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
-      case IntegerType | ShortType | ByteType =>
-        val c = FilterApi.intColumn(leadKey)
-        val b = java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue())
-        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
-      case DoubleType =>
-        val c = FilterApi.doubleColumn(leadKey)
-        val b = java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue())
-        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
-      case FloatType =>
-        val c = FilterApi.floatColumn(leadKey)
-        val b = java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue())
-        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
-      case _ => None
-    }
-    (lo.flatMap(one(_, lower = true)), hi.flatMap(one(_, lower = false))) match {
-      case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-      case (a, b)             => a.orElse(b)
-    }
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
-    new GenericReaderFactory(required, rangePredicate)
+    new GenericReaderFactory(required,
+      GenericReaderFactory.rangePredicate(leadKey, leadType, lo, hi))
 }
 
+/** The one scan reader factory of both mergetree sources (the KV table's
+  * scan is this factory with a string-key predicate): vectorized reads of
+  * every plain and grouped split, row reads of lightweight-mutation splits.
+  */
 class GenericReaderFactory(
     required: StructType,
     filter: Option[FilterPredicate])
@@ -929,4 +894,47 @@ class GenericReaderFactory(
       case _ => throw new UnsupportedOperationException(
         "mergetree-generic scan is columnar; row reader is never planned")
     }
+}
+
+object GenericReaderFactory {
+
+  /** A leading-key range `[lo, hi]` compiled to a parquet FilterPredicate
+    * for row-group skip (O7), for both sources' scans. Only types whose
+    * parquet physical encoding this can name get a predicate: string,
+    * integral, double and float leads; anything else (decimal, date, …)
+    * returns None — an int-column fallback would compare MISMATCHED types
+    * in the parquet stats filter (crash, or a truncated bound misprune when
+    * a projection routes a double column here). Pruning is an
+    * optimization; correctness never depends on it.
+    */
+  def rangePredicate(leadKey: String, leadType: org.apache.spark.sql.types.DataType,
+      lo: Option[Any], hi: Option[Any]): Option[FilterPredicate] = {
+    def one(v: Any, lower: Boolean): Option[FilterPredicate] = leadType match {
+      case StringType =>
+        val c = FilterApi.binaryColumn(leadKey)
+        val b = Binary.fromString(v.toString)
+        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
+      case LongType =>
+        val c = FilterApi.longColumn(leadKey)
+        val b = java.lang.Long.valueOf(v.asInstanceOf[Number].longValue())
+        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
+      case IntegerType | ShortType | ByteType =>
+        val c = FilterApi.intColumn(leadKey)
+        val b = java.lang.Integer.valueOf(v.asInstanceOf[Number].intValue())
+        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
+      case DoubleType =>
+        val c = FilterApi.doubleColumn(leadKey)
+        val b = java.lang.Double.valueOf(v.asInstanceOf[Number].doubleValue())
+        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
+      case FloatType =>
+        val c = FilterApi.floatColumn(leadKey)
+        val b = java.lang.Float.valueOf(v.asInstanceOf[Number].floatValue())
+        Some(if (lower) FilterApi.gtEq(c, b) else FilterApi.ltEq(c, b))
+      case _ => None
+    }
+    (lo.flatMap(one(_, lower = true)), hi.flatMap(one(_, lower = false))) match {
+      case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
+      case (a, b)             => a.orElse(b)
+    }
+  }
 }

@@ -1,22 +1,18 @@
 package graft.sources
 
-import graft.mergetree.{HadoopConf, KeyOrder, Manifest, MergeTreeTable}
+import graft.mergetree.{KVRow, KeyOrder, Manifest, MergeTreeTable, PartStats}
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicReference
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for MergeTree tables (SURVEY §7 Phase 3):
   * `spark.read.format("mergetree").load(tablePath)` — the SQL-addressable
@@ -40,9 +36,15 @@ import scala.jdk.CollectionConverters._
   * pushdown. Reads see the durable table state — flushed parts, not another
   * process's memtable — exactly like reopening the table (O23).
   *
-  * Scan is vectorized (ParquetColumnarReader, Spark's own parquet reader);
-  * the surviving part files are packed in manifest order into splits of
-  * Spark's file-split size (MergeTreePartition.pack).
+  * Scan is vectorized (ParquetColumnarReader, Spark's own parquet reader)
+  * through the generic source's reader factory (GenericReaderFactory, with
+  * a string-key range predicate); the surviving part files are packed in
+  * manifest order into splits of Spark's file-split size
+  * (MergeTreePartition.pack).
+  *
+  * Writes ARE `MergeTreeTable.insertBatch` (see [[MergeTreeV2Table]]):
+  * `df.write.format("mergetree").mode("append").save(path)` and SQL
+  * `INSERT INTO` append one part through the API's own write path.
   */
 class MergeTreeTableProvider extends TableProvider with DataSourceRegister {
   import graft.mergetree.ColumnarMergeTree.TableDef
@@ -275,21 +277,41 @@ object MergeTreeTableProvider {
     }
 }
 
+/** The KV table's SQL face. Writes go through the same DSv2→V1
+  * InsertableRelation shim as [[GenericMergeTreeV2Table]]: `INSERT INTO`
+  * and `df.write.format("mergetree").mode("append")` hand the DataFrame to
+  * `MergeTreeTable.insertBatch`, so a SQL-written part is an API-written
+  * part (range-sorted on (key, timestamp), the table's codec, a key
+  * sample, learned write bounds) and lands under the same manifest lock as
+  * every other writer. There is no TRUNCATE capability: overwrite fails
+  * at analysis and writes nothing.
+  */
 class MergeTreeV2Table(path: String) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
+  import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, WriteBuilder}
+
   override def name(): String = s"mergetree:$path"
   override def schema(): StructType = MergeTreeTable.schema
+  // BATCH_WRITE: `DataFrameWriter.save` on a path takes the DSv2 append
+  // only for tables declaring it; V1_BATCH_WRITE then plans the V1Write.
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.V1_BATCH_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new MergeTreeScanBuilder(path)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(info.schema().fieldNames.toSeq == MergeTreeTable.schema.fieldNames.toSeq,
       s"mergetree write requires columns ${MergeTreeTable.schema.fieldNames.mkString(",")}, " +
         s"got ${info.schema().fieldNames.mkString(",")}")
-    new MergeTreeWriteBuilder(path)
+    new WriteBuilder {
+      override def build(): V1Write = new V1Write {
+        override def toInsertableRelation: InsertableRelation =
+          (data: DataFrame, _: Boolean) => {
+            import data.sparkSession.implicits._
+            MergeTreeTable.open(data.sparkSession, path).insertBatch(data.as[KVRow])
+          }
+      }
+    }
   }
 }
 
@@ -397,7 +419,8 @@ class MergeTreeScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new MergeTreeReaderFactory(required, lo, hi)
+    new GenericReaderFactory(required,
+      GenericReaderFactory.rangePredicate("key", StringType, lo, hi))
 }
 
 /** One scan split: consecutive part files, read in order by a
@@ -407,16 +430,11 @@ case class MergeTreePartition(files: Array[String]) extends InputPartition
 
 object MergeTreePartition {
 
-  /** The parquet files of one part directory (none if it is gone). */
+  /** The parquet files of one part directory (none if it is gone), as
+    * [[PartStats.parquetFiles]] lists them.
+    */
   private[sources] def parquetFiles(dir: java.nio.file.Path): List[String] =
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toList
-      finally s.close()
-    }
+    PartStats.parquetFiles(dir).map(_.toString)
 
   /** Packs part files into splits by Spark's own file-split rule, the one
     * `spark.read.parquet` plans with: each file costs its length plus
@@ -458,179 +476,4 @@ case class MergeTreeGroupedPartition(
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): org.apache.spark.sql.catalyst.InternalRow = key
-}
-
-class MergeTreeReaderFactory(
-    required: StructType,
-    lo: Option[String],
-    hi: Option[String])
-    extends PartitionReaderFactory {
-
-  private def rangePredicate: Option[FilterPredicate] = {
-    val loP = lo.map(v => FilterApi.gtEq(FilterApi.binaryColumn("key"), Binary.fromString(v)))
-    val hiP = hi.map(v => FilterApi.ltEq(FilterApi.binaryColumn("key"), Binary.fromString(v)))
-    (loP, hiP) match {
-      case (Some(a), Some(b)) => Some(FilterApi.and(a, b))
-      case (a, b)             => a.orElse(b)
-    }
-  }
-
-  /** Vectorized scan (Spark's own parquet reader → ColumnarBatch →
-    * whole-stage codegen) for every split, so Spark never asks for rows.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ChainedColumnarReader(
-      partition.asInstanceOf[MergeTreePartition].files, required, rangePredicate)
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    throw new UnsupportedOperationException(
-      "mergetree scan is columnar; row reader is never planned")
-}
-
-// --------------------------------------------------------------- write path
-
-/** DSv2 write: `df.write.format("mergetree").mode("append").save(path)`
-  * appends ONE new part per job — the SQL-addressable twin of
-  * MergeTreeTable.insertBatch.
-  *
-  * RequiresDistributionAndOrdering makes Spark range-partition and locally
-  * sort the incoming rows on (key, timestamp) BEFORE the write (exactly what
-  * the programmatic part write does), so every task emits one sorted parquet
-  * file and the part's footer statistics stay pruning-sharp. Tasks stage
-  * files under a job-unique staging dir; commit moves them into
-  * `part_<id>/`, reads footer stats, and appends to the manifest atomically
-  * (tmp + rename) — abort just deletes the staging dir, so failures never
-  * corrupt the table.
-  */
-class MergeTreeWriteBuilder(path: String)
-    extends org.apache.spark.sql.connector.write.WriteBuilder {
-  import org.apache.spark.sql.connector.write._
-
-  override def build(): Write = new Write with RequiresDistributionAndOrdering {
-    import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
-
-    private val sortOrder: Array[SortOrder] = Array(
-      Expressions.sort(Expressions.column("key"), SortDirection.ASCENDING),
-      Expressions.sort(Expressions.column("timestamp"), SortDirection.ASCENDING))
-
-    override def requiredDistribution(): Distribution = Distributions.ordered(sortOrder)
-    override def requiredOrdering(): Array[SortOrder] = sortOrder
-
-    override def toBatch: BatchWrite = new MergeTreeBatchWrite(path)
-  }
-}
-
-case class MergeTreeTaskCommit(stagedFile: String)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-class MergeTreeBatchWrite(path: String)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-
-  private val stagingDir = s"$path/.staging_${java.util.UUID.randomUUID().toString}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new MergeTreeWriterFactory(stagingDir)
-
-  /** Commit = promote the staging dir to `part_<id>` + append to the
-    * manifest, both inside Manifest.register's per-path lock: id allocation,
-    * the directory-name claim, and the manifest append are one atomic step,
-    * so a live MergeTreeTable instance writing the same table concurrently
-    * can neither reuse our part id nor clobber our manifest entry (and vice
-    * versa — its stores are read-merge under the same lock).
-    */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect { case MergeTreeTaskCommit(f) if f.nonEmpty => f }
-    val staging = Paths.get(stagingDir)
-    if (files.isEmpty) { MergeTreeTable.deleteRecursively(staging); return }
-    // Promote ONLY the files of COMMITTED tasks: a task attempt that died
-    // after writing (before its abort could clean up) or a speculative
-    // duplicate leaves extra parquet files in the staging dir — moving
-    // the whole dir would register the orphan's rows as table data and
-    // double-count the batch.
-    val committed = files.map(f => Paths.get(f).getFileName.toString).toSet
-    val s = Files.list(staging)
-    try s.iterator().asScala
-      .filter(f => f.toString.endsWith(".parquet") &&
-        !committed(f.getFileName.toString))
-      .foreach(Files.deleteIfExists(_))
-    finally s.close()
-    val stats = graft.mergetree.PartStats.readDir(HadoopConf.copy(), stagingDir)
-    val size = MergeTreeTable.dirSize(staging)
-    val now = System.currentTimeMillis()
-    Manifest.register(path, staging, append = true) { partId =>
-      graft.mergetree.PartMetadata(
-        partId = partId,
-        minKey = stats.minKey, maxKey = stats.maxKey,
-        minTimestamp = stats.minTs, maxTimestamp = stats.maxTs,
-        rowCount = stats.rows, granuleCount = stats.rowGroups,
-        diskSize = size,
-        creationTime = now)
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    MergeTreeTable.deleteRecursively(Paths.get(stagingDir))
-}
-
-class MergeTreeWriterFactory(stagingDir: String)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new MergeTreeDataWriter(stagingDir, partitionId, taskId)
-}
-
-/** Task-side parquet writer (parquet-mr example API, 8192-row row groups
-  * via the granule cap). Rows arrive already sorted by (key, timestamp).
-  */
-class MergeTreeDataWriter(stagingDir: String, partitionId: Int, taskId: Long)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-  import org.apache.parquet.schema.MessageTypeParser
-
-  private val schema = MessageTypeParser.parseMessageType(
-    """message spark_schema {
-      |  required binary key (UTF8);
-      |  required binary value (UTF8);
-      |  required int64 timestamp;
-      |}""".stripMargin)
-  private val file = s"$stagingDir/part-$partitionId-$taskId.parquet"
-  private val conf = HadoopConf.copy()
-  locally {
-    Files.createDirectories(Paths.get(stagingDir))
-    GroupWriteSupport.setSchema(schema, conf)
-  }
-  private val writer = ExampleParquetWriter.builder(new HPath(file))
-    .withConf(conf)
-    .withRowGroupRowCountLimit(8192) // granule cap, src/granule.h:10
-    .build()
-  private val factory = new SimpleGroupFactory(schema)
-  private var rows = 0L
-
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    g.append("key", row.getUTF8String(0).toString)
-    g.append("value", row.getUTF8String(1).toString)
-    g.append("timestamp", row.getLong(2))
-    writer.write(g)
-    rows += 1
-  }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    writer.close()
-    if (rows == 0L) { Files.deleteIfExists(Paths.get(file)); MergeTreeTaskCommit("") }
-    else MergeTreeTaskCommit(file)
-  }
-
-  override def abort(): Unit = {
-    writer.close()
-    Files.deleteIfExists(Paths.get(file))
-  }
-
-  override def close(): Unit = ()
 }

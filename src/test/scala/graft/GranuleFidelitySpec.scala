@@ -16,6 +16,20 @@ class GranuleFidelitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.session
   import spark.implicits._
 
+  /** Every row group's row count across the part's files, empty ones
+    * included: the footers as written, not as PartStats summarizes them.
+    */
+  private def rowGroupSizes(dir: String): Seq[Long] = {
+    import scala.jdk.CollectionConverters._
+    PartStats.parquetFiles(java.nio.file.Paths.get(dir)).flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), spark.sessionState.newHadoopConf()))
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq
+      finally r.close()
+    }
+  }
+
   test("row groups are capped at granuleSize and counted as granules") {
     val granule = 100
     val t = MergeTreeTable.create(spark,
@@ -23,8 +37,7 @@ class GranuleFidelitySpec extends AnyFunSuite {
       MergeTreeConfig(granuleSize = granule))
     t.insertBatch(spark.range(1000).map(i => KVRow(f"g$i%05d", s"v$i", i)), 1)
     val part = t.parts.head
-    val sizes = PartStats.rowGroupSizes(
-      spark.sessionState.newHadoopConf(), s"${t.path}/part_${part.partId}")
+    val sizes = rowGroupSizes(s"${t.path}/part_${part.partId}")
     assert(sizes.sum == 1000)
     assert(sizes.forall(_ <= granule),
       s"row group exceeds granule cap: $sizes")

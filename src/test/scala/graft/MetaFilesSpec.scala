@@ -15,8 +15,9 @@ import scala.jdk.CollectionConverters._
 case class RacePayload(w: Int, i: Int, pad: String)
 
 /** The metadata-file primitive: publishes are whole or absent, a crash
-  * between write and rename leaves nothing a loader reads, and every
-  * metadata publish in `src/main` goes through it.
+  * between write and rename leaves nothing a loader reads and only a temp
+  * that both engines' GC sweeps once it is old, and every metadata publish
+  * in `src/main` goes through it.
   */
 class MetaFilesSpec extends AnyFunSuite {
 
@@ -107,6 +108,20 @@ class MetaFilesSpec extends AnyFunSuite {
       Seq(Paths.get(gdir, "gmanifest.json"), Paths.get(gdir, "gclist.json"),
         Paths.get(gdir, "tabledef.json"), Paths.get(kdir, "manifest.json"),
         Paths.get(idir, "_stats.json")).foreach(leaveTornTemp)
+      // Temps torn by crashes long past the sweep's age floor (both tables'
+      // grace is 3600 s, above the 10-minute minimum).
+      val snapDir = Paths.get(gdir, "snapshots")
+      val snap = listNames(snapDir).find(_.endsWith(".json")).map(snapDir.resolve).get
+      val aged = Seq(Paths.get(gdir, "gmanifest.json"), snap, Paths.get(kdir, "manifest.json"))
+        .map { target =>
+          val t = target.resolveSibling(s".${target.getFileName}.aged.tmp")
+          Files.write(t, Files.readAllBytes(target).take(10))
+          Files.setLastModifiedTime(t, java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis() - 3L * 3600 * 1000))
+          t
+        }
+      val fresh = Seq(Paths.get(gdir, ".gmanifest.json.crashed.tmp"),
+        Paths.get(kdir, ".manifest.json.crashed.tmp"))
 
       assert(GManifest.load(gdir) == gm)
       assert(GcList.load(gdir) == gc)
@@ -120,8 +135,13 @@ class MetaFilesSpec extends AnyFunSuite {
         assert(g2.scan().orderBy("k").collect().toSeq == gRows)
       } finally g2.shutdown()
       val kv2 = MergeTreeTable.open(spark, kdir)
-      try assert(kv2.queryRows("key000", "key999") == kRows)
-      finally kv2.shutdown()
+      try {
+        assert(kv2.queryRows("key000", "key999") == kRows)
+        kv2.purgeGc(force = true)
+        assert(kv2.queryRows("key000", "key999") == kRows)
+      } finally kv2.shutdown()
+      assert(aged.forall(Files.notExists(_)), s"aged temps survived purgeGc: $aged")
+      assert(fresh.forall(Files.exists(_)), "a fresh temp may belong to a live publish")
       assert(InvertedIndex.open(spark, idir).search(Seq("merge"), k = 3)
         .select(col("doc_id")).as[Long].collect().toSet == Set(1L, 2L))
     } finally {
