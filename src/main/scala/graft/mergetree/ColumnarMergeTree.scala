@@ -801,7 +801,14 @@ final class ColumnarMergeTree private (
     */
   private def writePart(df: DataFrame, partitions: Int, register: Boolean,
                         partition: Option[String],
-                        inputs: Seq[GPartMeta] = Nil): GPartMeta = {
+                        inputs: Seq[GPartMeta] = Nil): GPartMeta =
+    claim(stagePart(df, partitions, partition, inputs), register)
+
+  /** [[writePart]] up to the claim: the sorted part written to a staging
+    * dir, its sidecars built and its footers read.
+    */
+  private def stagePart(df: DataFrame, partitions: Int, partition: Option[String],
+                        inputs: Seq[GPartMeta]): StagedPart = {
     val stage = Paths.get(path, s".part_stage_${java.util.UUID.randomUUID()}")
     val sortCols = orderBy.map(col)
     val n = if (partitions > 0) partitions
@@ -828,7 +835,33 @@ final class ColumnarMergeTree private (
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
     writer.mode("overwrite").parquet(stage.toString)
-    registerStaged(stage, register, partition)
+    prepareStaged(stage, partition)
+  }
+
+  /** Maintenance rewrites: `stage` runs for every item as concurrent
+    * Spark jobs (wall-time = slowest item instead of the sum; each job
+    * parallelizes internally too, but a 10k-part table must not pay 10k
+    * sequential driver round-trips — round-3 verdict), then the staged
+    * parts are claimed in ITEM order, unregistered (the op swaps them in).
+    * Part ids, directory names and the manifest therefore follow the op's
+    * bin order, not the order its threads finish in, so one op sequence
+    * always writes the same manifest.
+    */
+  private def writeConcurrently[A](items: Seq[A])(stage: A => StagedPart): Seq[GPartMeta] = {
+    val staged =
+      if (items.size <= 1) items.map(stage)
+      else {
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(items.size, 8))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        try scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(items.map(i =>
+            scala.concurrent.Future(stage(i)))),
+          scala.concurrent.duration.Duration.Inf)
+        finally pool.shutdown()
+      }
+    staged.map(claim(_, register = false))
   }
 
   /** Per-part row-group (lead-key min, lead-key max, rows) triples, cached
@@ -913,27 +946,31 @@ final class ColumnarMergeTree private (
     Some(KeySample.splitBoundsTyped(pts, n, dt)).filter(_.nonEmpty)
   }
 
-  /** Claim a staged part directory as `part_<id>`, computing its manifest
-    * metadata from the freshly-written footers.
+  /** A staged part directory with its sidecars built and its manifest
+    * metadata read from the freshly-written footers, not yet claimed.
     */
-  private def registerStaged(stage: java.nio.file.Path, register: Boolean,
-                             partition: Option[String]): GPartMeta = {
+  private def prepareStaged(stage: java.nio.file.Path,
+                            partition: Option[String]): StagedPart = {
     buildTokenBlooms(stage)
     buildNgramBlooms(stage)
     buildSetIndexes(stage)
     buildHllSketches(stage)
     buildTopKSketches(stage)
     buildQuantileSketches(stage)
-    val fm = footerMeta(stage.toString)
-    val size = MergeTreeTable.dirSize(stage)
+    StagedPart(stage, partition, footerMeta(stage.toString), MergeTreeTable.dirSize(stage))
+  }
+
+  /** Claim a staged part directory as `part_<id>`. */
+  private def claim(s: StagedPart, register: Boolean): GPartMeta = {
+    val fm = s.footer
     val now = System.currentTimeMillis()
     // register=false outputs are intent-recorded by register() itself —
     // inside the manifest lock's critical section in lock mode, so the
     // dir is protected from the instant it exists under its final name.
-    val meta = GManifest.register(path, stage, append = register,
+    val meta = GManifest.register(path, s.dir, append = register,
       intent = !register) { partId =>
-      GPartMeta(partId, fm.minKey, fm.maxKey, leadIsNumeric, fm.rows, fm.granules, size,
-        now, partition, colStats = Some(fm.colStats).filter(_.nonEmpty))
+      GPartMeta(partId, fm.minKey, fm.maxKey, leadIsNumeric, fm.rows, fm.granules, s.size,
+        now, s.partition, colStats = Some(fm.colStats).filter(_.nonEmpty))
     }
     if (register) lock.synchronized {
       manifest = GManifest.load(path).getOrElse(manifest)
@@ -969,16 +1006,19 @@ final class ColumnarMergeTree private (
       w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }
     writer.mode("overwrite").parquet(stage.toString)
+    // Sorted, so part ids follow partition-directory order rather than
+    // the directory listing's.
     val subdirs = {
       val s = Files.list(stage)
       try s.iterator().asScala.filter(d =>
         Files.isDirectory(d) && d.getFileName.toString.startsWith("__pv=")).toSeq
+        .sortBy(_.getFileName.toString)
       finally s.close()
     }
     try subdirs.map { sub =>
       val value = ColumnarMergeTree.unescapePartitionDir(
         sub.getFileName.toString.stripPrefix("__pv="))
-      registerStaged(sub, register, partition = Some(value))
+      claim(prepareStaged(sub, partition = Some(value)), register)
     } finally MergeTreeTable.deleteRecursively(stage)
   }
 
@@ -1182,6 +1222,73 @@ final class ColumnarMergeTree private (
       throw new IllegalArgumentException(
         s"snapshot $seq is unavailable or no longer readable " +
           s"(available: ${snapshots.mkString(",")})")), lo, hi)
+
+  /** The small-input serve of the lead-key ranges `rangeSets` (see
+    * `MergeTreeConfig.localScanMaxRows`): the parts they overlap, each read
+    * once on the driver through the DSv2 scan's columnar reader, as one
+    * frame per range set — `columns` (lead key first) over a local
+    * relation of the parts that set overlaps, carrying [[rangeScan]]'s
+    * row-level filter on the set's ranges. The optimizer folds any filter
+    * or projection over it, so collecting it runs no Spark job. `parts`
+    * None reads the live manifest (refreshed, like the scans); Some is a
+    * pinned list from [[snapshotPartsOption]].
+    *
+    * None — the caller plans the distributed scan — unless the table is
+    * Plain (no merge-on-read collapse to replay), no part to read has
+    * pending lightweight mutations, and the parts each range set overlaps,
+    * summed over the sets, hold at most localScanMaxRows manifest rows and
+    * at most `spark.sql.files.openCostInBytes` of manifest `diskSize`.
+    * The row count was sized for KV rows; the byte bound makes wide rows
+    * (vectors) count for what they weigh. It is Spark's own estimate of
+    * the bytes a scan reads in the time one file open takes, and a
+    * distributed search pays at least a job launch, which costs more than
+    * a file open. A set is one consumer of the rows (an IVF query scores
+    * every row of its probed lists), so a part two sets overlap counts
+    * twice but is read once. Nothing is cached.
+    */
+  private[graft] def localRangeScan(parts: Option[Seq[GPartMeta]],
+      rangeSets: Seq[Seq[(Any, Any)]], columns: Seq[String]): Option[Seq[DataFrame]] = {
+    if (mode != MergeMode.Plain || config.localScanMaxRows <= 0) return None
+    val all = parts.getOrElse { refresh(); manifest.parts }
+    def overlapping(ranges: Seq[(Any, Any)]) =
+      all.filter(p => ranges.exists { case (l, h) => p.overlaps(l, h) })
+    val setParts = rangeSets.map(overlapping)
+    val ranges = rangeSets.flatten.distinct
+    val surviving = overlapping(ranges)
+    lastPruning = (surviving.size, all.size)
+    if (setParts.map(_.map(_.rowCount).sum).sum > config.localScanMaxRows ||
+        setParts.map(_.map(_.diskSize).sum).sum > spark.sessionState.conf.filesOpenCostInBytes ||
+        surviving.exists(_.muts.nonEmpty)) return None
+    val read = StructType((leadKey +: columns).distinct.map(schema(_).copy(nullable = true)))
+    val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(read)
+    val rowsOf = surviving.map { p =>
+      // Row-group skip on the ranges this part overlaps (an OR of them),
+      // when every one compiles to a parquet predicate.
+      val preds = ranges.filter { case (l, h) => p.overlaps(l, h) }.map { case (l, h) =>
+        graft.sources.GenericReaderFactory.rangePredicate(
+          leadKey, schema(leadKey).dataType, Some(l), Some(h))
+      }
+      val filter =
+        if (preds.exists(_.isEmpty)) None
+        else preds.flatten.reduceOption(org.apache.parquet.filter2.predicate.FilterApi.or(_, _))
+      val files = PartStats.parquetFiles(Paths.get(path, p.dir)).map(_.toString).toArray
+      val reader = new graft.sources.ChainedColumnarReader(files, read, filter)
+      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
+      try while (reader.next()) reader.get().rowIterator().asScala.foreach(r => out += toRow(r).copy())
+      finally reader.close()
+      p.partId -> out
+    }.toMap
+    val attrs = read.fields.toSeq.map(f =>
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType, f.nullable)())
+    Some(rangeSets.zip(setParts).map { case (set, ps) =>
+      val inSet = set.map { case (l, h) => col(leadKey) >= lit(l) && col(leadKey) <= lit(h) }
+        .reduceOption(_ || _).getOrElse(lit(false))
+      org.apache.spark.sql.graft.PlanBridge.ofRows(spark,
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(attrs,
+          ps.flatMap(p => rowsOf(p.partId)).toIndexedSeq))
+        .filter(inSet)
+    })
+  }
 
   /** ClickHouse `SELECT … SAMPLE k`: a deterministic pseudo-random subset —
     * rows whose 64-bit hash of the ORDER BY key columns falls in the first
@@ -1851,25 +1958,6 @@ final class ColumnarMergeTree private (
 
   // ----------------------------------------------------------- maintenance
 
-  /** Run per-part work items as concurrent Spark jobs (wall-time = slowest
-    * item instead of the sum; each job parallelizes internally too, but a
-    * 10k-part table must not pay 10k sequential driver round-trips —
-    * round-3 verdict).
-    */
-  private def concurrently[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(items.size, 8))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(items.map(i =>
-          scala.concurrent.Future(f(i)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
-
   /** Re-read the on-disk manifest (picks up parts landed by the DSv2
     * connector or another instance since this instance's last mutation).
     */
@@ -1945,7 +2033,8 @@ final class ColumnarMergeTree private (
       s"DEDUPLICATE BY unknown columns ${dedupBy.filterNot(schema.fieldNames.contains).mkString(",")}")
     val dedup = deduplicate || dedupBy.nonEmpty
     refresh()
-    val groups = manifest.parts.groupBy(_.partition).values.toSeq
+    val groups = manifest.parts.groupBy(_.partition).toSeq
+      .sortBy(_._1.getOrElse("")).map(_._2)
     // Singletons rewrite too when a TTL (MATERIALIZE TTL semantics) or a
     // collapsing merge mode is declared — a single part can still hold
     // not-yet-collapsed duplicate keys from one raw insertBatch; only a
@@ -1959,7 +2048,7 @@ final class ColumnarMergeTree private (
       else groups.filter(g => g.size > 1 || g.exists(_.muts.nonEmpty))
     if (toMerge.isEmpty) return
     val rest = schema.fieldNames.filterNot(dedupBy.contains).map(col).toSeq
-    val written = concurrently(toMerge) { bin =>
+    val written = writeConcurrently(toMerge) { bin =>
       // readParts applies each part's pending lightweight-delete
       // predicates, so the rewrite MATERIALIZES them (outputs carry none).
       val raw = readParts(bin)
@@ -1977,8 +2066,7 @@ final class ColumnarMergeTree private (
         }
         else if (dedup) unexpired.dropDuplicates()
         else unexpired
-      writePart(collapse(deduped), 0, register = false,
-        partition = bin.head.partition, inputs = bin)
+      stagePart(collapse(deduped), 0, bin.head.partition, inputs = bin)
     }
     // A fully-expired / fully-cancelled group yields 0 rows: drop it from
     // the table (and disk) instead of registering a phantom part with
@@ -2033,20 +2121,19 @@ final class ColumnarMergeTree private (
           bins.last += p; acc += p.rowCount
         }
     }
-    val newMetas = concurrently(bins.filter(_.nonEmpty).toSeq) { bin =>
-      if (bin.size == 1) bin.head
-      else {
-        // Compaction is where lazy TTL bites (ClickHouse drops expired rows
-        // when a merge rewrites the part); untouched parts keep theirs until
-        // a merge or applyTtl() reaches them.
-        // Merges materialize pending lightweight deletes exactly like
-        // lazy TTL: readParts drops the hidden rows, outputs carry none.
-        val raw = readParts(bin.toSeq)
-        val unexpired = ttl.fold(raw)(t => raw.filter(!coalesce(expr(t), lit(false))))
-        writePart(collapse(unexpired), 0, register = false,
-          partition = bin.head.partition, inputs = bin.toSeq)
-      }
-    }
+    val nonEmpty = bins.filter(_.nonEmpty).toSeq
+    val merged = writeConcurrently(nonEmpty.filter(_.size > 1)) { bin =>
+      // Compaction is where lazy TTL bites (ClickHouse drops expired rows
+      // when a merge rewrites the part); untouched parts keep theirs until
+      // a merge or applyTtl() reaches them.
+      // Merges materialize pending lightweight deletes exactly like
+      // lazy TTL: readParts drops the hidden rows, outputs carry none.
+      val raw = readParts(bin.toSeq)
+      val unexpired = ttl.fold(raw)(t => raw.filter(!coalesce(expr(t), lit(false))))
+      stagePart(collapse(unexpired), 0, bin.head.partition, inputs = bin.toSeq)
+    }.iterator
+    // Single-part bins pass through; outputs stay in bin order.
+    val newMetas = nonEmpty.map(bin => if (bin.size == 1) bin.head else merged.next())
     val liveIds = live.map(_.partId).toSet
     // A merge bin whose rows all expired (TTL) or cancelled (Collapsing)
     // yields a 0-row output: exclude it and remove its fresh directory.
@@ -2089,13 +2176,12 @@ final class ColumnarMergeTree private (
     val touched = live.filter { p =>
       val h = hitsByPart.getOrElse(p.partId, 0L); h > 0L && h < p.rowCount
     }
-    val newMetas = concurrently(touched) { p =>
+    val newMetas = writeConcurrently(touched) { p =>
       // Pending lightweight mutations materialize in the same rewrite —
       // outputs carry none, so hidden rows go and patches bake in now.
       val df = ColumnarMergeTree.applyMuts(
         spark.read.schema(schema).parquet(s"$path/${p.dir}"), p.muts)
-      writePart(df.filter(!isHit), 0, register = false, partition = p.partition,
-        inputs = Seq(p))
+      stagePart(df.filter(!isHit), 0, p.partition, inputs = Seq(p))
     }
     // A rewrite can yield 0 rows when a part's visible residue all
     // matched while lightweight-hidden rows padded its physical count:
@@ -2358,7 +2444,7 @@ final class ColumnarMergeTree private (
       val updated = hitsByPart.values.sum
       if (updated == 0L) return 0L
       val touched = live.filter(p => hitsByPart.getOrElse(p.partId, 0L) > 0L)
-      val newMetas = concurrently(touched) { p =>
+      val newMetas = writeConcurrently(touched) { p =>
         // Materialize pending lightweight mutations alongside the update
         // (the rewritten part carries none).
         val df = ColumnarMergeTree.applyMuts(
@@ -2374,8 +2460,7 @@ final class ColumnarMergeTree private (
         val mutated = staged.foldLeft(withNew) { case (acc, ((name, _), i)) =>
           acc.withColumn(name, col(s"__upd_$i"))
         }.select(schema.fieldNames.map(col): _*)
-        writePart(mutated, 0, register = false, partition = p.partition,
-          inputs = Seq(p))
+        stagePart(mutated, 0, p.partition, inputs = Seq(p))
       }
       // All-hidden parts rewrite to 0 rows — drop them (see deleteWhere).
       val (keptNew, emptyNew) = newMetas.partition(_.rowCount > 0)
@@ -2417,13 +2502,12 @@ final class ColumnarMergeTree private (
       refresh()
       val tagged = manifest.parts.filter(_.muts.size >= math.max(1, minMuts))
       if (tagged.isEmpty) { clearLwMarkerIfClean(); return 0 }
-      val newMetas = concurrently(tagged) { p =>
+      val newMetas = writeConcurrently(tagged) { p =>
         val df = ColumnarMergeTree.applyMuts(
           spark.read.schema(schema).parquet(s"$path/${p.dir}"), p.muts)
         // Mutations are row-level filters/patches over non-ORDER-BY
         // columns: the part's sort order survives, same as updateWhere.
-        writePart(df, 0, register = false, partition = p.partition,
-          inputs = Seq(p))
+        stagePart(df, 0, p.partition, inputs = Seq(p))
       }
       // All-hidden parts rewrite to 0 rows — drop them (see deleteWhere).
       val (kept, emptyNew) = newMetas.partition(_.rowCount > 0)
@@ -3617,6 +3701,12 @@ object ColumnarMergeTree {
     */
   private final case class FooterMeta(minKey: String, maxKey: String, rows: Long,
       granules: Long, colStats: List[GColStat])
+
+  /** A written, unclaimed part: its staging dir, partition value, footer
+    * metadata and on-disk size.
+    */
+  private final case class StagedPart(dir: java.nio.file.Path, partition: Option[String],
+      footer: FooterMeta, size: Long)
 
   /** One pending lightweight mutation: kind "del" (hide rows where `cond`
     * is TRUE) or "upd" (replace each `set` column by its expression where

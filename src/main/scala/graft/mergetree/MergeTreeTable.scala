@@ -34,15 +34,28 @@ case class MergeTreeConfig(
       * it's a table knob: snappy (default), zstd, lz4, gzip, none.
       */
     compression: String = "snappy",
-    /** Small-query short-circuit: when the pruned part set plus memtable
-      * holds at most this many rows, `query`/`fullScan` read the parts
-      * driver-locally (parquet-mr, no Spark job) — a point lookup on a
-      * well-pruned table should not pay a distributed job launch. The
-      * estimate comes from manifest row counts BEFORE any scan, refined by
-      * the sparse index (cached footer row-group key bounds) when the
-      * part-level sum exceeds the threshold — so a point lookup on a big
-      * table whose every part spans the key space still short-circuits on
-      * its true granule footprint. 0 disables.
+    /** Small-query short-circuit, on both engines: when the pruned input
+      * holds at most this many rows it is read driver-locally and the
+      * answer is a local result — no Spark job; a small lookup on a
+      * well-pruned table should not pay a distributed job launch. 0
+      * disables. What counts against the budget:
+      *   - KV table (`MergeTreeTable.query`/`fullScan`, parquet-mr reads):
+      *     the pruned parts' manifest row counts plus the memtable, BEFORE
+      *     any scan, refined by the sparse index (cached footer row-group
+      *     key bounds) when the part-level sum exceeds the threshold — so a
+      *     point lookup on a big table whose every part spans the key
+      *     space still short-circuits on its true granule footprint.
+      *   - Schema-generic table (`ColumnarMergeTree.localRangeScan`, the
+      *     DSv2 columnar reader; Plain tables whose parts to read carry no
+      *     pending lightweight mutations): the manifest row counts of the
+      *     parts each of the caller's range sets overlaps, summed over the
+      *     sets — and, since this row count was sized for KV rows and an
+      *     index row can carry a whole vector, the same parts' manifest
+      *     `diskSize` must also fit `spark.sql.files.openCostInBytes`
+      *     (Spark's bytes-equivalent of one file open). Its callers are the index searches:
+      *     `InvertedIndex` search faces count the parts of the query
+      *     terms' buckets once per search (one set), `IvfIndex.search`
+      *     counts each query's probed lists (one set per query).
       * At 100 TB almost every query exceeds this and takes the distributed
       * path; the ones that don't are exactly the ones a job launch would
       * dominate.

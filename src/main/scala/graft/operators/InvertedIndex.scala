@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
+import scala.jdk.CollectionConverters._
+
 /** A PERSISTED full-text inverted index with BM25 ranking and positional
   * phrase search, stored as a MergeTree table — the text twin of
   * [[IvfIndex]] (same marriage of the engine's two halves: the inverted
@@ -28,15 +30,22 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   *     reproducible bit for bit) persist as an atomically-swapped JSON
   *     sidecar under the table dir (`_stats.json`; indexes persisted by
   *     the earlier parquet `_stats/` layout still open — see readStats).
-  *   - search: the query's terms hash to ≤ |terms| buckets; each
-  *     `rangeScan(b, b)` prunes to that bucket's own part(s) via the
-  *     manifest — the engine reads |query buckets|/nbuckets of the index
-  *     from disk — and the `term IN (…)` filter pushes into the parquet
-  *     scan below that. Per-term document frequencies come from the
-  *     matched lists themselves (a term's bucket holds EVERY posting of
-  *     that term across all parts, so the count is exact — including
-  *     parts landed by [[append]]); they collapse to ≤ |terms| rows and
-  *     broadcast back onto the postings. No corpus access at all.
+  *   - search: the query's terms hash to ≤ |terms| buckets, and the
+  *     manifest prunes the read to those buckets' own part(s) — the engine
+  *     reads |query buckets|/nbuckets of the index from disk. Per-term
+  *     document frequencies come from the matched lists themselves (a
+  *     term's bucket holds EVERY posting of that term across all parts, so
+  *     the count is exact — including parts landed by [[append]]). When
+  *     the pruned parts fit the table's local-read budget
+  *     (`localScanMaxRows` rows and a file open's worth of bytes — see
+  *     `ColumnarMergeTree.localRangeScan`), the search is served on the
+  *     driver: the parts are read locally, df is counted, the BM25
+  *     contributions are a projection over a local relation, and the
+  *     result is a local relation — no Spark job. Larger
+  *     probes plan one `rangeScan(b, b)` per bucket with the `term IN (…)`
+  *     filter pushed into the parquet scan and df as a window count over
+  *     the posting rows. Both paths return identical rows, order and
+  *     types. No corpus access at all.
   *   - phrase search: postings are POSITIONAL, so exact phrase queries
   *     resolve by folding position-list intersections — [[phraseSearch]].
   *   - append: a new batch of documents lands one new part per touched
@@ -165,11 +174,7 @@ final class InvertedIndex private (
     // the same hash expression the build used (bounded by the query, never
     // the corpus).
     val buckets = bucketsOf(spark, terms.distinct, st.nbuckets)
-    // The pinned-vs-live decision is made ONCE per search (snapshot loaded
-    // and validated a single time): a per-bucket fallback could mix the
-    // pinned state for one term's bucket with the live state for another —
-    // exactly the cross-state inconsistency pinning exists to prevent.
-    val pinned = st.seq.flatMap(table.snapshotPartsOption)
+    val pinned = pinnedParts(st)
     def scanBucket(bk: Long): DataFrame = pinned match {
       case Some(parts) => table.rangeScanOf(parts, bk, bk)
       case None => table.rangeScan(bk, bk)
@@ -180,21 +185,42 @@ final class InvertedIndex private (
       .filter(col("term").isin(terms.distinct: _*))
   }
 
+  /** The part list a search reads: the snapshot `st.seq` pins, or None
+    * for the live manifest (see [[postingsOf]]). Decided ONCE per search
+    * (snapshot loaded and validated a single time): a per-bucket fallback
+    * could mix the pinned state for one term's bucket with the live state
+    * for another — exactly the cross-state inconsistency pinning exists
+    * to prevent.
+    */
+  private def pinnedParts(st: InvStats): Option[Seq[ColumnarMergeTree.GPartMeta]] =
+    st.seq.flatMap(table.snapshotPartsOption)
+
   /** BM25 top-k documents for `terms`. Output: (rk, doc_id, n_terms,
     * score) — n_terms is the number of distinct query terms the document
-    * matched; score is the micro-unit integer BM25 sum.
+    * matched; score is the micro-unit integer BM25 sum. Ties rank by
+    * doc_id.
+    *
+    * Served on the driver when the query's bucket parts fit the table's
+    * local-read budget (see [[servedScores]]); otherwise distributed.
     */
   def search(terms: Seq[String], k: Int,
              k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val scored = searchScores(terms, k1, b)
-    // Distributed top-k (TakeOrderedAndProject) BEFORE the rank window:
-    // the window then numbers k rows, never a global single partition of
-    // every matched document.
-    val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
-    val w = Window.orderBy(col("score").desc, col("doc_id"))
-    top.withColumn("rk", row_number().over(w).cast("long"))
-      .select(col("rk"), col("doc_id"), col("n_terms"), col("score"))
-      .orderBy(col("rk"))
+    require(terms.nonEmpty, "empty query: search needs at least one term")
+    servedScores(Seq(0L -> terms), k1, b) match {
+      case Some(scored) =>
+        local(searchSchema, ranked(scored, k).map { case (rk, s) =>
+          Row(rk, s.doc, s.nTerms, s.score) })
+      case None =>
+        val scored = distributedScores(terms, k1, b)
+        // Distributed top-k (TakeOrderedAndProject) BEFORE the rank window:
+        // the window then numbers k rows, never a global single partition
+        // of every matched document.
+        val top = scored.orderBy(col("score").desc, col("doc_id")).limit(k)
+        val w = Window.orderBy(col("score").desc, col("doc_id"))
+        top.withColumn("rk", row_number().over(w).cast("long"))
+          .select(col("rk"), col("doc_id"), col("n_terms"), col("score"))
+          .orderBy(col("rk"))
+    }
   }
 
   /** BATCHED multi-query BM25 — the terms⋈postings shape for a QUERY SET:
@@ -203,19 +229,30 @@ final class InvertedIndex private (
     * (qid, term) query table, per-(qid, doc) fold, per-qid top-k through
     * a WindowGroupLimit. Per-term df/avgdl/nDocs are query-independent,
     * so each qid's ranking is BIT-IDENTICAL to its own [[search]] call —
-    * this face just replaces |queries| sequential probes with ONE job
+    * this face just replaces |queries| sequential probes with ONE read
     * (the right shape for a query batch; single interactive queries keep
-    * [[search]]). Output: (qid, rk, doc_id, n_terms, score).
+    * [[search]]). Served on the driver like [[search]] when the union's
+    * bucket parts fit the budget. Output: (qid, rk, doc_id, n_terms,
+    * score).
     */
   def searchMany(querySets: Seq[(Long, Seq[String])], k: Int,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val scored = searchManyScores(querySets, k1, b)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("qid"), col("rk"), col("doc_id"), col("n_terms"), col("score"))
-      .orderBy(col("qid"), col("rk"))
+    requireQuerySets(querySets)
+    servedScores(querySets, k1, b) match {
+      case Some(scored) =>
+        local(searchManySchema, scored.groupBy(_.qid).toSeq.sortBy(_._1).flatMap {
+          case (q, ss) => ranked(ss, k).map { case (rk, s) =>
+            Row(q, rk, s.doc, s.nTerms, s.score) }
+        })
+      case None =>
+        val w = Window.partitionBy(col("qid"))
+          .orderBy(col("score").desc, col("doc_id"))
+        distributedManyScores(querySets, k1, b)
+          .withColumn("rk", row_number().over(w).cast("long"))
+          .filter(col("rk") <= k)
+          .select(col("qid"), col("rk"), col("doc_id"), col("n_terms"), col("score"))
+          .orderBy(col("qid"), col("rk"))
+    }
   }
 
   /** [[searchMany]] without the per-qid top-k — (qid, doc_id, n_terms,
@@ -224,10 +261,23 @@ final class InvertedIndex private (
     */
   def searchManyScores(querySets: Seq[(Long, Seq[String])],
                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    requireQuerySets(querySets)
+    servedScores(querySets, k1, b) match {
+      case Some(scored) => local(manyScoresSchema,
+        scored.sortBy(s => (s.qid, s.doc)).map(s => Row(s.qid, s.doc, s.nTerms, s.score)))
+      case None => distributedManyScores(querySets, k1, b)
+    }
+  }
+
+  private def requireQuerySets(querySets: Seq[(Long, Seq[String])]): Unit = {
     require(querySets.nonEmpty && querySets.forall(_._2.nonEmpty),
       "searchMany needs at least one query, each with at least one term")
     require(querySets.map(_._1).distinct.size == querySets.size,
       "duplicate qid in the query set")
+  }
+
+  private def distributedManyScores(querySets: Seq[(Long, Seq[String])],
+                                    k1: Double, b: Double): DataFrame = {
     val st = stats
     val avgdl = st.total_dl.toDouble / st.n_dl_docs.toDouble
     val allTerms = querySets.flatMap(_._2).distinct
@@ -257,12 +307,21 @@ final class InvertedIndex private (
     * "documents" are chunks; the caller folds chunk scores to a parent
     * key, then ranks) the fold must see every matched chunk's score —
     * a pre-folded top-k could silently drop a parent's best evidence.
-    * Still postings-bounded (only matching ids, never the corpus) and
-    * fully distributed; callers aggregate before any collect.
+    * Still postings-bounded (only matching ids, never the corpus), served
+    * on the driver like [[search]] or else distributed; callers aggregate
+    * before any collect.
     */
   def searchScores(terms: Seq[String],
                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "empty query: search needs at least one term")
+    servedScores(Seq(0L -> terms), k1, b) match {
+      case Some(scored) => local(scoresSchema,
+        scored.sortBy(_.doc).map(s => Row(s.doc, s.nTerms, s.score)))
+      case None => distributedScores(terms, k1, b)
+    }
+  }
+
+  private def distributedScores(terms: Seq[String], k1: Double, b: Double): DataFrame = {
     // ONE stats read per search: the seq it names pins the posting scan,
     // so totals and postings can never describe different corpus states.
     val st = stats
@@ -272,7 +331,7 @@ final class InvertedIndex private (
     // df per term from the matched lists themselves — exact by
     // construction, appended parts included; computed as a
     // whole-partition window count so the posting scan runs once (see
-    // searchManyScores).
+    // distributedManyScores).
     val dfw = Window.partitionBy(col("term"))
     val contrib = postings
       .withColumn("df", count(lit(1)).over(dfw))
@@ -281,6 +340,65 @@ final class InvertedIndex private (
     contrib.groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum(col("c")).as("score"))
   }
+
+  /** The driver-served scoring core of every BM25 face: each query's
+    * per-document (n_terms, score), or None when the table will not serve
+    * the queries' bucket parts locally ([[ColumnarMergeTree.localRangeScan]]
+    * — over budget, pending lightweight mutations) and the caller plans
+    * the distributed search. Same arithmetic as the distributed plan: df
+    * counts the matched posting rows per term, the contribution is
+    * [[bm25Micro]] as a projection over a local relation (the optimizer
+    * evaluates it on the driver, so no job runs), and the per-(qid, doc)
+    * sums are exact integer additions. Reads the same pinned-or-live part
+    * list as [[postingsOf]].
+    */
+  private def servedScores(querySets: Seq[(Long, Seq[String])],
+                           k1: Double, b: Double): Option[Seq[Scored]] = {
+    val st = stats
+    val avgdl = st.total_dl.toDouble / st.n_dl_docs.toDouble
+    val allTerms = querySets.flatMap(_._2).distinct
+    val buckets = bucketsOf(spark, allTerms, st.nbuckets).map(bk => (bk: Any, bk: Any))
+    table.localRangeScan(pinnedParts(st), Seq(buckets), Seq("term", "doc_id", "tf", "dl"))
+      .map(_.head).map { postings =>
+        val rows = postings.filter(col("term").isin(allTerms: _*))
+          .select(col("term"), col("doc_id"), col("tf"), col("dl")).collect()
+        val df = rows.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toLong }
+        val contrib = spark.createDataFrame(
+            rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), df(r.getString(0)))).asJava,
+            postingSchema)
+          .select(col("term"), col("doc_id"),
+            bm25Micro(col("tf"), col("df"), col("dl"), st.n_docs, avgdl, k1, b).as("c"))
+          .collect()
+        val qidsOf = querySets.flatMap { case (q, ts) => ts.distinct.map(_ -> q) }
+          .groupBy(_._1).map { case (t, qs) => t -> qs.map(_._2) }
+        // (qid, doc) → (matched terms, Σ non-null c, any non-null c): sum()
+        // skips NULL contributions and is NULL when all are.
+        val acc = scala.collection.mutable.HashMap.empty[(Long, Long), (Long, Long, Boolean)]
+        contrib.foreach { r =>
+          val doc = r.getLong(1)
+          val c = if (r.isNullAt(2)) None else Some(r.getLong(2))
+          qidsOf(r.getString(0)).foreach { q =>
+            val (n, sum, any) = acc.getOrElse((q, doc), (0L, 0L, false))
+            acc((q, doc)) = (n + 1, sum + c.getOrElse(0L), any || c.isDefined)
+          }
+        }
+        acc.iterator.map { case ((q, doc), (n, sum, any)) =>
+          Scored(q, doc, n, if (any) java.lang.Long.valueOf(sum) else null)
+        }.toSeq
+      }
+  }
+
+  /** The top k of one query's scores with their 1-based ranks, in the
+    * distributed window's order, [[RankOrder]]'s `score DESC NULLS LAST,
+    * doc_id`.
+    */
+  private def ranked(scored: Seq[Scored], k: Int): Seq[(Long, Scored)] =
+    scored.sortBy(s => (Option(s.score).map(_.longValue), s.doc))(
+        RankOrder.scoreDescThenId(Ordering.Long))
+      .take(k).zipWithIndex.map { case (s, i) => (i + 1L, s) }
+
+  private def local(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Exact PHRASE search from the positional postings: top-k documents by
     * occurrence count of `phrase` as CONSECUTIVE tokens (raw-split-array
@@ -490,6 +608,12 @@ final class InvertedIndex private (
 
   /** (planned, total) parts at the last probed scan — pruning visibility. */
   def lastPruning: (Int, Int) = table.lastPruning
+
+  /** This index over its table reopened with `config` — e.g.
+    * `localScanMaxRows = 0` for the distributed search plans.
+    */
+  private[graft] def withConfig(config: MergeTreeConfig): InvertedIndex =
+    new InvertedIndex(spark, ColumnarMergeTree.open(spark, path, config), path)
 
   /** Remove documents from the index — the mutation a corpus
     * `deleteWhere`/TTL/opt-out flow must propagate, or searches keep
@@ -729,6 +853,24 @@ object InvertedIndex {
       nb: Int): Seq[Long] =
     evalOnDriver(spark, terms.map(t => pmod(xxhash64(lit(t)), lit(nb.toLong))): _*)
       .toSeq.map(_.asInstanceOf[Long]).distinct.sorted
+
+  /** One query's score for one matched document (served search). */
+  private final case class Scored(qid: Long, doc: Long, nTerms: Long,
+      score: java.lang.Long)
+
+  /** Served-search relations, typed like the distributed plans' outputs:
+    * ids from a posting scan and sums are nullable, counts and ranks not.
+    */
+  private val postingSchema = StructType.fromDDL(
+    "term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, df BIGINT")
+  private val scoresSchema = StructType(Seq(StructField("doc_id", LongType),
+    StructField("n_terms", LongType, nullable = false), StructField("score", LongType)))
+  private val searchSchema =
+    StructType(StructField("rk", LongType, nullable = false) +: scoresSchema.fields)
+  private val manyScoresSchema =
+    StructType(StructField("qid", LongType, nullable = false) +: scoresSchema.fields)
+  private val searchManySchema = StructType(Seq(StructField("qid", LongType, nullable = false),
+    StructField("rk", LongType, nullable = false)) ++ scoresSchema.fields)
 
   private val indexSchema = StructType(Seq(
     StructField("bucket", LongType, nullable = false),

@@ -6,7 +6,9 @@ import graft.queries.PipelineQueries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -24,13 +26,20 @@ import scala.jdk.CollectionConverters._
   *   - search: the quantizer is fixed after build, so the instance holds
   *     it (≤ nlist rows, read once). Each search collects its query batch
   *     and ranks the centroids per query on the driver with the same
-  *     cosine/r6 expressions, keeping nprobe per query; the probe, a local
-  *     (qid, qv, cid) relation, broadcasts onto a scan of ONLY the probed
-  *     clusters via `rangeScan(cid, cid)` — which is driver-side manifest
-  *     part pruning, so the engine reads nprobe/nlist of the corpus from
-  *     disk, exactly what an inverted file is for. The driver holds
-  *     |queries|·nlist values, bounded by the query batch and the
-  *     quantizer, never by the corpus.
+  *     cosine/r6 expressions, keeping nprobe per query. Only the probed
+  *     clusters' parts are read — driver-side manifest part pruning, so
+  *     the engine reads nprobe/nlist of the corpus from disk, exactly what
+  *     an inverted file is for. When the probed parts, summed over the
+  *     queries, fit the table's local-read budget (`localScanMaxRows`
+  *     rows and a file open's worth of bytes — see
+  *     `ColumnarMergeTree.localRangeScan`), the search is served on the
+  *     driver: the parts are read locally and scored as a
+  *     projection over a local relation, with no Spark job. Larger
+  *     searches broadcast the probe, a local (qid, qv, cid) relation, onto
+  *     a `rangeScan` of the probed clusters. Both paths return identical
+  *     rows, order and types. The driver holds |queries|·nlist values for
+  *     the ranking, bounded by the query batch and the quantizer, never by
+  *     the corpus.
   *
   * Scale posture: the index table partitions/compacts/recovers like any
   * other MergeTree table (background merges keep cluster parts healthy as
@@ -57,24 +66,79 @@ final class IvfIndex private (
 
   /** Top-k neighbours per query vector, probing `nprobe` clusters.
     * `queries`: (qid: Long, qv: array<double>). Output:
-    * (qid, rnk, vec_id, sim) — the q23/q28 result shape.
+    * (qid, rnk, vec_id, sim) — the q23/q28 result shape, ranked by sim
+    * descending (NULL last), then vec_id.
+    *
+    * Served on the driver when the queries' probed parts, summed over the
+    * queries, fit the table's local-read budget (see [[servedSearch]]);
+    * otherwise distributed.
     */
   def search(queries: DataFrame, k: Int, nprobe: Int,
              excludeSelf: Boolean = true): DataFrame = {
-    val (probe, cids) = probeOf(localQueries(queries), nprobe)
-    // The probe set is query-batch-sized (|queries| · nprobe rows) while
-    // the probed vectors side scales with the corpus: broadcast the small
-    // side explicitly — stats-blind estimation must never shuffle the
-    // corpus rows into a sort-merge join here.
-    val scored = probedScan(cids)
-      .join(broadcast(probe), Seq("cid"))
-      // excludeSelf compares qid against vec_id — correct when queries ARE
-      // corpus rows (the q23/q28 workload); pass false when query ids live
-      // in their OWN id space, or the corpus row that merely shares the
-      // number silently vanishes from that query's results.
-      .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
-      .select(col("qid"), col("vec_id"), r6(cosine(col("qv"), col("v"))).as("sim"))
-    topK(scored, k)
+    val q = localQueries(queries)
+    val probes = probeOf(q, nprobe)
+    servedSearch(q, probes, k, excludeSelf).getOrElse {
+      // The probe set is query-batch-sized (|queries| · nprobe rows) while
+      // the probed vectors side scales with the corpus: broadcast the small
+      // side explicitly — stats-blind estimation must never shuffle the
+      // corpus rows into a sort-merge join here.
+      val scored = probedScan(cidsOf(probes))
+        .join(broadcast(probeFrame(q, probes)), Seq("cid"))
+        // excludeSelf compares qid against vec_id — correct when queries ARE
+        // corpus rows (the q23/q28 workload); pass false when query ids live
+        // in their OWN id space, or the corpus row that merely shares the
+        // number silently vanishes from that query's results.
+        .filter(selfFilter(excludeSelf))
+        .select(col("qid"), col("vec_id"), r6(cosine(col("qv"), col("v"))).as("sim"))
+      topK(scored, k)
+    }
+  }
+
+  private def selfFilter(excludeSelf: Boolean) =
+    if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
+
+  /** [[search]] served on the driver: the probed lists' rows read locally
+    * ([[ColumnarMergeTree.localRangeScan]], one range set per query, so
+    * the budget counts each query's probed rows and bytes), then per query
+    * the same self filter and `r6(cosine(qv, v))` projection as the
+    * distributed plan, with the query's qid and qv as literals, over the
+    * local relation of that query's own lists only (the optimizer
+    * evaluates it on the driver — no Spark job; no query × row pairs are
+    * materialized). Each query's rows rank in the distributed window's
+    * order, [[RankOrder]]'s `sim DESC NULLS LAST, vec_id`. None — the
+    * caller plans the distributed search — when the table will not serve
+    * the read, qid is not integral (qids order as longs), or a qid repeats
+    * in the batch.
+    */
+  private def servedSearch(q: DataFrame, probes: Seq[Row], k: Int,
+                           excludeSelf: Boolean): Option[DataFrame] = {
+    val qidField = q.schema("qid")
+    if (!Seq(LongType, IntegerType, ShortType, ByteType).contains(qidField.dataType)) return None
+    val byQid = probes.groupBy(_.get(0)).toSeq
+    if (byQid.exists { case (_, ps) =>
+        ps.map(_.get(1)).distinct.size > 1 || ps.map(_.getLong(2)).distinct.size < ps.size })
+      return None
+    table.localRangeScan(None,
+        byQid.map(_._2.map(r => (r.getLong(2): Any, r.getLong(2): Any))), Seq("vec_id", "v"))
+      .map { lists =>
+        def literal(v: Any, f: StructField) = ColumnBridge.column(Literal.create(v, f.dataType))
+        val order = RankOrder.scoreDescThenId(RankOrder.sqlDouble)
+        def qidKey(qid: Any): Option[Long] = Option(qid).map(_.asInstanceOf[Number].longValue)
+        val rows = byQid.zip(lists).sortBy(e => qidKey(e._1._1)).flatMap {
+          case ((qid, ps), listed) =>
+            val qidLit = literal(qid, qidField)
+            listed.filter(if (excludeSelf) col("vec_id") =!= qidLit else lit(true))
+              .select(col("vec_id"),
+                r6(cosine(literal(ps.head.get(1), q.schema("qv")), col("v"))))
+              .collect().toSeq
+              .sortBy(r => (Option.when(!r.isNullAt(1))(r.getDouble(1)), r.getLong(0)))(order)
+              .take(k).zipWithIndex
+              .map { case (r, i) => Row(qid, i + 1, r.get(0), r.get(1)) }
+        }
+        spark.createDataFrame(rows.asJava, StructType(Seq(qidField,
+          StructField("rnk", IntegerType, nullable = false),
+          table.schema("vec_id").copy(nullable = true), StructField("sim", DoubleType))))
+      }
   }
 
   /** The query batch's (qid, qv) rows, collected once into a local
@@ -88,36 +152,38 @@ final class IvfIndex private (
 
   /** The probe of a local query batch, planned on the driver: each
     * query's `nprobe` best clusters by r6(cosine(qv, cv)) descending, ties
-    * to the lower cid, as a local (qid, qv, cid) relation, plus the sorted
-    * distinct probed cids. The pair scores are a projection over a local
-    * relation, which the optimizer evaluates on the driver, so ranking
-    * runs no Spark job. When every list is probed (nprobe ≥ nlist — exact
-    * mode) there is nothing to rank and each query probes every cid.
+    * to the lower cid, as (qid, qv, cid) rows. The pair scores are a
+    * projection over a local relation, which the optimizer evaluates on
+    * the driver, so ranking runs no Spark job. When every list is probed
+    * (nprobe ≥ nlist — exact mode) there is nothing to rank and each query
+    * probes every cid.
     */
-  private def probeOf(q: DataFrame, nprobe: Int): (DataFrame, Array[Long]) = {
+  private def probeOf(q: DataFrame, nprobe: Int): Seq[Row] = {
     val qs = q.collect().toSeq
-    val probes: Seq[Row] =
-      if (nprobe >= nlist)
-        for (r <- qs; c <- quantizer) yield Row(r.get(0), r.get(1), c.getLong(0))
-      else {
-        val pairs = for (r <- qs; c <- quantizer)
-          yield Row(r.get(0), r.get(1), c.getLong(0), c.get(1))
-        val scored = spark.createDataFrame(pairs.asJava,
-            q.schema.add(probeCid).add(quantizerSchema("cv")))
-          .select(col("qid"), col("qv"), col("cid"),
-            r6(cosine(col("qv"), col("cv"))).as("psim"))
-          .collect().toSeq
-        // SQL's `psim DESC, cid` per qid: nulls last, then lower cid.
-        val order = Ordering.Tuple3(Ordering.Boolean,
-          Ordering.Double.TotalOrdering.reverse, Ordering.Long)
-        scored.groupBy(_.get(0)).valuesIterator.flatMap(_.sortBy(r =>
-            (r.isNullAt(3), if (r.isNullAt(3)) 0.0 else r.getDouble(3),
-              r.getLong(2)))(order).take(nprobe))
-          .map(r => Row(r.get(0), r.get(1), r.getLong(2))).toSeq
-      }
-    (spark.createDataFrame(probes.asJava, q.schema.add(probeCid)),
-      probes.map(_.getLong(2)).distinct.sorted.toArray)
+    if (nprobe >= nlist)
+      for (r <- qs; c <- quantizer) yield Row(r.get(0), r.get(1), c.getLong(0))
+    else {
+      val pairs = for (r <- qs; c <- quantizer)
+        yield Row(r.get(0), r.get(1), c.getLong(0), c.get(1))
+      val scored = spark.createDataFrame(pairs.asJava,
+          q.schema.add(probeCid).add(quantizerSchema("cv")))
+        .select(col("qid"), col("qv"), col("cid"),
+          r6(cosine(col("qv"), col("cv"))).as("psim"))
+        .collect().toSeq
+      val order = RankOrder.scoreDescThenId(RankOrder.sqlDouble)
+      scored.groupBy(_.get(0)).valuesIterator.flatMap(_.sortBy(r =>
+          (Option.when(!r.isNullAt(3))(r.getDouble(3)), r.getLong(2)))(order).take(nprobe))
+        .map(r => Row(r.get(0), r.get(1), r.getLong(2))).toSeq
+    }
   }
+
+  /** The probe rows as a local (qid, qv, cid) relation — the broadcast side. */
+  private def probeFrame(q: DataFrame, probes: Seq[Row]): DataFrame =
+    spark.createDataFrame(probes.asJava, q.schema.add(probeCid))
+
+  /** The sorted distinct probed cids. */
+  private def cidsOf(probes: Seq[Row]): Array[Long] =
+    probes.map(_.getLong(2)).distinct.sorted.toArray
 
   /** Per-query top-k of (qid, vec_id, sim) rows, ordered by (qid, rnk).
     * The filtered ranks are k per query, so one partition holds them and
@@ -158,6 +224,12 @@ final class IvfIndex private (
   /** (planned, total) parts at the last probed scan — pruning visibility. */
   def lastPruning: (Int, Int) = table.lastPruning
 
+  /** This index over its table reopened with `config` — e.g.
+    * `localScanMaxRows = 0` for the distributed search plan.
+    */
+  private[graft] def withConfig(config: MergeTreeConfig): IvfIndex =
+    new IvfIndex(spark, ColumnarMergeTree.open(spark, path, config), path, quantizer)
+
   /** PQ codebooks sidecar — present iff this index was built with
     * [[IvfIndex.buildAdc]]. Re-read per call (tiny driver-side JSON).
     */
@@ -194,17 +266,17 @@ final class IvfIndex private (
     val cb = pqCodebooks.getOrElse(throw new IllegalStateException(
       s"no PQ codebooks at $path — build with IvfIndex.buildAdc"))
     val q = localQueries(queries)
-    val (probe, cids) = probeOf(q, nprobe)
+    val probes = probeOf(q, nprobe)
     // The query's m×k lookup table is computed ONCE, on the driver (a
     // projection over the local query relation); per probed row the
     // approximate score is m array lookups (pq_adc).
     val qlut = q.select(col("qid"),
       call_function("pq_lut", col("qv"), typedLit(cb.cb)).as("lut"))
-    val scored = probedScan(cids).join(broadcast(probe), Seq("cid"))
+    val scored = probedScan(cidsOf(probes)).join(broadcast(probeFrame(q, probes)), Seq("cid"))
       .join(broadcast(qlut), Seq("qid"))
       // see search(): self-exclusion is only meaningful when query ids
       // share the corpus id space
-      .filter(if (excludeSelf) col("vec_id") =!= col("qid") else lit(true))
+      .filter(selfFilter(excludeSelf))
       .select(col("qid"), col("qv"), col("vec_id"), col("v"),
         call_function("pq_adc", col("code"), col("lut")).as("asim"))
     val sw = Window.partitionBy(col("qid")).orderBy(col("asim").desc, col("vec_id"))

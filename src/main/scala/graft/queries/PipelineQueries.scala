@@ -1442,14 +1442,22 @@ object PipelineQueries {
     * pruning. Identical quantizer init/sample/iterations as q28, so it
     * shares q28's DuckDB oracle and must hash-match it exactly.
     */
-  def q48IvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val idx = cacheIvf.getOrElseUpdate(dir, {
+  def q48IvfIndex(spark: SparkSession, dir: String): DataFrame =
+    q48Search(spark, dir, q48Index(spark, dir))
+
+  /** q48's index, built once per scale dir. */
+  private[graft] def q48Index(spark: SparkSession, dir: String): graft.operators.IvfIndex =
+    cacheIvf.getOrElseUpdate(dir, {
       val vecs = embDouble(spark, dir).select(col("vec_id"), col("v"))
       // nlist auto-sizes from the corpus count (IvfIndex.autoNlist ~ √n;
       // 500 vectors → the pinned 8-centroid quantizer the oracle expects).
       graft.operators.IvfIndex.build(spark, vecs,
         java.nio.file.Files.createTempDirectory("ivf_q48_").toString)
     })
+
+  /** q48's search over `idx` (the plan specs pass its distributed view). */
+  private[graft] def q48Search(spark: SparkSession, dir: String,
+      idx: graft.operators.IvfIndex): DataFrame = {
     val q = embDouble(spark, dir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     idx.search(q, k = 10, nprobe = graft.operators.IvfIndex.autoNprobe(idx.nlist))
@@ -2416,7 +2424,7 @@ object PipelineQueries {
     * same arithmetic served from a persisted inverted index that reads
     * only the query terms' posting lists. Both share this oracle.
     */
-  private val bm25Terms = Seq("dup", "vector", "merge")
+  private[graft] val bm25Terms = Seq("dup", "vector", "merge")
 
   /** The q110 BM25 brute-force shape over an arbitrary (doc_id, term) set:
     * per-doc dl + per-query-term tf in one aggregate, stats folded to
@@ -2534,12 +2542,17 @@ object PipelineQueries {
     * doc-length join q110 tokenizes around. Same oracle as q110: the index
     * must reproduce the on-the-fly ranking bit for bit.
     */
-  def q111Bm25Index(spark: SparkSession, dir: String): DataFrame = {
-    val idx = cacheInv.getOrElseUpdate(dir,
+  def q111Bm25Index(spark: SparkSession, dir: String): DataFrame =
+    invIndexOf(spark, dir).search(bm25Terms, k = 15)
+
+  /** The document inverted index of q111/q112/q126, built once per corpus
+    * dir.
+    */
+  private[graft] def invIndexOf(spark: SparkSession, dir: String)
+      : graft.operators.InvertedIndex =
+    cacheInv.getOrElseUpdate(dir,
       graft.operators.InvertedIndex.build(spark, docs(spark, dir),
         java.nio.file.Files.createTempDirectory("inv_idx_").toString))
-    idx.search(bm25Terms, k = 15)
-  }
 
   private val cacheInv =
     scala.collection.concurrent.TrieMap.empty[String, graft.operators.InvertedIndex]
@@ -2555,10 +2568,7 @@ object PipelineQueries {
     * not just pairwise-join.
     */
   def q112PhraseSearch(spark: SparkSession, dir: String): DataFrame = {
-    val idx = cacheInv.getOrElseUpdate(dir,
-      graft.operators.InvertedIndex.build(spark, docs(spark, dir),
-        java.nio.file.Files.createTempDirectory("inv_idx_").toString))
-    idx.phraseSearch(Seq("table", "scan", "merge"), k = 15)
+    invIndexOf(spark, dir).phraseSearch(Seq("table", "scan", "merge"), k = 15)
   }
 
   val q112Sql: String =
@@ -3695,10 +3705,12 @@ object PipelineQueries {
     3L -> Seq("stream", "window"),
     4L -> Seq("sort", "query", "fast"))
 
-  def q126HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    val idx = cacheInv.getOrElseUpdate(dir,
-      graft.operators.InvertedIndex.build(spark, docs(spark, dir),
-        java.nio.file.Files.createTempDirectory("inv_idx_").toString))
+  def q126HybridRrf(spark: SparkSession, dir: String): DataFrame =
+    q126On(spark, dir, invIndexOf(spark, dir))
+
+  /** q126 over `idx` (the plan specs pass its distributed view). */
+  private[graft] def q126On(spark: SparkSession, dir: String,
+      idx: graft.operators.InvertedIndex): DataFrame = {
     // Per-query lexical lists through the BATCHED probe (searchMany): ONE
     // bucket-pruned posting scan over the union of every query's terms,
     // per-qid rankings bit-identical to |queries| sequential search()
@@ -3786,33 +3798,35 @@ object PipelineQueries {
     */
   private[graft] def dsirRank(d: DataFrame, target: String, topN: Int): DataFrame = {
     // latin_tokens is the fused codegen tokenizer (bit-identical term
-    // multiset to the regex split + length filter) — this frame is read
-    // by BOTH the lm aggregate and the scoring join, i.e. the corpus is
-    // tokenized twice per call, so the per-row tokenizer cost counts
-    // double (round-17 optimization).
-    val toks = d.select(col("doc_id"), col("lang"), col("source"),
-        explode(graft.functions.GraftFunctions.latinTokensCol(col("text")))
-          .as("term"))
+    // multiset to the regex split + length filter). Its per-document
+    // token arrays are PERSISTED: both the lm aggregate and the scoring
+    // join explode them, so the corpus is tokenized once per call, not
+    // once per reader.
+    val docToks = d.select(col("doc_id"), col("lang"), col("source"),
+        graft.functions.GraftFunctions.latinTokensCol(col("text")).as("toks"))
+      .persist()
+    val toks = docToks.select(col("doc_id"), col("lang"), col("source"),
+      explode(col("toks")).as("term"))
     // Unigram LM table for BOTH distributions in one corpus-reduced
     // aggregate (cnt_t is a conditional sum — the target slice is never
     // re-scanned). Vocabulary-sized, the frame every later step joins —
     // PERSISTED across its two readers (the stats fold below and the
-    // scoring join), so the corpus is tokenized ONCE, not once per
-    // reader; released in the finally after the tiny result collapses
-    // to a LocalRelation (the q117 stage-frame discipline).
+    // scoring join), so the LM aggregates once; both caches are released
+    // in the finally after the tiny result collapses to a LocalRelation
+    // (the q117 stage-frame discipline).
     val lm = toks.groupBy("term").agg(
       count(lit(1)).as("cnt_r"),
       sum(when(col("source") === target, 1L).otherwise(0L)).as("cnt_t"))
       .persist()
     try {
       val out = dsirRankOn(toks, lm, target, topN)
-      // topN × |langs| rows — collapse eagerly so the lm cache can be
+      // topN × |langs| rows — collapse eagerly so the caches can be
       // released before returning (callers re-executing the frame must
-      // not silently re-tokenize the corpus twice).
+      // not silently re-tokenize the corpus).
       val rows = out.collect()
       d.sparkSession.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
-    } finally lm.unpersist()
+    } finally { lm.unpersist(); docToks.unpersist() }
   }
 
   /** The LAZY scoring plan behind [[dsirRank]] — split out so the plan
@@ -4180,8 +4194,12 @@ object PipelineQueries {
     * is one hash aggregate on the matched postings (never the corpus);
     * both lists are k-bounded before the fusion join.
     */
-  def q134ChunkHybrid(spark: SparkSession, dir: String): DataFrame = {
-    val idx = chunkIndexOf(spark, dir)
+  def q134ChunkHybrid(spark: SparkSession, dir: String): DataFrame =
+    q134On(spark, dir, chunkIndexOf(spark, dir))
+
+  /** q134 over `idx` (the plan specs pass its distributed view). */
+  private[graft] def q134On(spark: SparkSession, dir: String,
+      idx: graft.operators.InvertedIndex): DataFrame = {
     // Batched lexical side: ONE posting scan for all five queries
     // (searchManyScores — per-qid scores bit-identical to sequential
     // probes), chunk→doc max-chunk fold keyed by (qid, doc), per-qid

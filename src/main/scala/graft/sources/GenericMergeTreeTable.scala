@@ -118,9 +118,11 @@ class GenericMergeTreeV2Table(
     }
     m
   }
+  // BATCH_WRITE: `DataFrameWriter.save` on a path takes the DSv2 write
+  // only for tables declaring it; V1_BATCH_WRITE then plans the V1Write.
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   /** SQL `DELETE FROM t WHERE …` — the standard-SQL face of
     * ColumnarMergeTree.deleteWhere (ClickHouse's ALTER TABLE … DELETE):

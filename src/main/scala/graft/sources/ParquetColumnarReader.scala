@@ -83,7 +83,7 @@ private[sources] class ParquetColumnarReader(
   * storage partition value's files). Empty file lists yield an empty
   * partition.
   */
-private[sources] class ChainedColumnarReader(
+private[graft] class ChainedColumnarReader(
     files: Array[String],
     required: StructType,
     filter: Option[FilterPredicate])

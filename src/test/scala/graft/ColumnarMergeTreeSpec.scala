@@ -342,6 +342,36 @@ class ColumnarMergeTreeSpec extends AnyFunSuite {
     assert(t2.scan().orderBy("o_orderkey").collect().toSeq == before)
   }
 
+  test("maintenance claims part ids in bin order: one op sequence, one manifest") {
+    // Partition "a" is 100× the others, so its two merge bins finish last
+    // — a claim in thread-completion order would hand b and c the lower
+    // ids. Every op below rewrites several bins concurrently.
+    def run(): (String, Seq[(Long, Option[String])]) = {
+      val dir = Files.createTempDirectory("cmt_ids_").toString
+      val rows = spark.range(0, 200000).select(col("id").as("k"),
+        when(col("id") < 198000, "a").when(col("id") < 199000, "b").otherwise("c").as("g"),
+        (col("id") % 13).as("v"))
+      val t = ColumnarMergeTree.create(spark, dir, rows.schema, orderBy = Seq("k"),
+        MergeTreeConfig(maxParts = 4), partitionBy = Some("g"))
+      (0 until 4).foreach(i => t.insertBatch(rows.filter(col("k") % 4 === i)))
+      t.optimize()
+      val merged = t.parts.map(p => (p.partId, p.partition)).sortBy(_._1)
+      t.deleteWhere(col("v") === 3)
+      t.updateWhere(col("v") === 5, Map("v" -> lit(50L)))
+      t.optimizeFinal()
+      val manifest = new String(Files.readAllBytes(Paths.get(dir, "gmanifest.json")))
+      t.shutdown()
+      // Clock fields aside, diskSize too: a rewrite's byte layout follows
+      // Spark's sampled range split of its input, which varies run to run.
+      (manifest.replaceAll("\"(creationTime|diskSize)\" : \\d+", "\"$1\" : 0"), merged)
+    }
+    val (m1, merged) = run()
+    assert(merged.map(_._2) == Seq("a", "a", "b", "c").map(Some(_)),
+      s"merge outputs must take ids in bin order: $merged")
+    val (m2, _) = run()
+    assert(m1 == m2, s"two runs wrote different manifests:\n$m1\n$m2")
+  }
+
   test("manifestLog table: full lifecycle (ingest, compact, reopen, time travel) on the log layout") {
     import graft.mergetree.ColumnarMergeTree.{GManifest, SnapshotLog}
     val orders = spark.read.parquet(s"$sf/orders.parquet")

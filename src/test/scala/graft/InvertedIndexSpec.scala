@@ -339,10 +339,17 @@ class InvertedIndexSpec extends AnyFunSuite {
     assert(jobsOf { mixed = InvertedIndex.queryTerms(
       spark, "spark 中文分词", InvertedIndex.Mixed) } == 0)
     assert(mixed == Seq("spark", "中文", "文分", "分词"))
+    // Probes within the table's localScanMaxRows are served on the driver
+    // and run none; the distributed plans (local path off) stay at ≤ 3.
+    val distributed = (c: graft.mergetree.MergeTreeConfig) => c.copy(localScanMaxRows = 0)
     val bm25 = jobsOf(idx.search(terms, k = 10).collect())
-    assert(bm25 <= 3, s"BM25 search ran $bm25 jobs")
+    assert(bm25 == 0, s"served BM25 search ran $bm25 jobs")
+    val bm25Dist = jobsOf(idx.withConfig(distributed(idx.table.config))
+      .search(terms, k = 10).collect())
+    assert(bm25Dist <= 3, s"distributed BM25 search ran $bm25Dist jobs")
     // IVF: the quantizer lives in the instance and a local query batch is
-    // ranked on the driver, so only the probed-list scoring runs jobs.
+    // ranked on the driver, so only the probed-list scoring of the
+    // distributed plan runs jobs.
     graft.functions.GraftFunctions.register(spark)
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -351,7 +358,10 @@ class InvertedIndexSpec extends AnyFunSuite {
     val qv = vecs.filter(col("vec_id") === 0).first().getSeq[Double](1)
     val q = Seq((0L, qv)).toDF("qid", "qv")
     val ann = jobsOf(ivf.search(q, k = 10, nprobe = 3, excludeSelf = false).collect())
-    assert(ann <= 3, s"IVF search ran $ann jobs")
+    assert(ann == 0, s"served IVF search ran $ann jobs")
+    val annDist = jobsOf(ivf.withConfig(distributed(ivf.table.config))
+      .search(q, k = 10, nprobe = 3, excludeSelf = false).collect())
+    assert(annDist <= 3, s"distributed IVF search ran $annDist jobs")
     ivf.table.shutdown()
   }
 

@@ -182,6 +182,35 @@ class MergeTreeDsv2Spec extends AnyFunSuite {
     spark.sql("DROP TABLE g_ins")
   }
 
+  test("generic table: DataFrame append/overwrite land what SQL INSERT INTO/OVERWRITE do") {
+    def table(name: String) = {
+      val dir = Files.createTempDirectory(s"mt_dfw_${name}_").toString
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"CREATE TABLE $name (k BIGINT, v BIGINT) USING mergetree " +
+        s"OPTIONS (orderBy 'k') LOCATION '$dir'")
+      spark.sql(s"INSERT INTO $name SELECT id, id FROM range(0, 10)")
+      (dir, ColumnarMergeTree.open(spark, dir))
+    }
+    def rows(name: String) = spark.sql(s"SELECT k, v FROM $name ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    val (_, sqlT) = table("g_dfw_sql")
+    val (dir, dfT) = table("g_dfw_df")
+    val batch = spark.range(20, 25).select(col("id").as("k"), (col("id") * 2).as("v"))
+    batch.createOrReplaceTempView("g_dfw_batch")
+    spark.sql("INSERT INTO g_dfw_sql SELECT * FROM g_dfw_batch")
+    batch.write.format("mergetree").mode("append").save(dir)
+    sqlT.refresh(); dfT.refresh()
+    assert(dfT.partCount == 2 && dfT.partCount == sqlT.partCount,
+      s"append lands one part: ${dfT.partCount} vs ${sqlT.partCount}")
+    assert(rows("g_dfw_df") == rows("g_dfw_sql") && rows("g_dfw_df").size == 15)
+    spark.sql("INSERT OVERWRITE TABLE g_dfw_sql SELECT * FROM g_dfw_batch")
+    batch.write.format("mergetree").mode("overwrite").save(dir)
+    sqlT.refresh(); dfT.refresh()
+    assert(dfT.partCount == sqlT.partCount, s"${dfT.partCount} vs ${sqlT.partCount}")
+    assert(rows("g_dfw_df") == rows("g_dfw_sql") && rows("g_dfw_df").size == 5)
+    spark.sql("DROP TABLE g_dfw_sql"); spark.sql("DROP TABLE g_dfw_df")
+  }
+
   test("generic table: SQL DELETE FROM rewrites only matching parts") {
     val (dir, t) = buildGeneric()
     spark.sql("DROP TABLE IF EXISTS g_del")

@@ -795,6 +795,16 @@ class PipelineQueriesSpec extends AnyFunSuite {
     val avg = out.map(t => t._2 -> t._3).toMap
     assert(avg(10L) > avg(12L) && avg(12L) > avg(11L),
       s"importance order violated: $avg")
+    // The LM aggregate and the scoring join share one tokenization: each
+    // document's text is read once per ranking (the repartition keeps the
+    // tap in the tasks — over a bare local relation the optimizer would
+    // evaluate it while planning).
+    import org.apache.spark.sql.functions.{col, udf}
+    val reads = spark.sparkContext.longAccumulator("dsir_text_reads")
+    val tap = udf((t: String) => { reads.add(1); t })
+    PipelineQueries.dsirRank(rows.repartition(2).withColumn("text", tap(col("text"))),
+      target = "tgt", topN = 5).collect()
+    assert(reads.value == rows.count(), s"corpus read ${reads.value} times per document set")
   }
 
   test("q129 RAG chunking: hand-computed spans, full coverage, exact overlap") {

@@ -281,8 +281,19 @@ class PlanAssertionsSpec extends AnyFunSuite {
     } finally perDoc.unpersist()
   }
 
+  /** `idx` reopened with the driver-local serve off: the plan pins below
+    * read the distributed search plans, which probes over the table's
+    * localScanMaxRows take (ServedSearchSpec pins local = distributed).
+    */
+  private def distributedView(idx: graft.operators.InvertedIndex) =
+    idx.withConfig(idx.table.config.copy(localScanMaxRows = 0))
+
   test("q111: term filter pushes into the postings scan; df is a window, no join") {
-    val p = plan(PipelineQueries.q111Bm25Index(spark, dir))
+    val served = plan(PipelineQueries.q111Bm25Index(spark, dir))
+    assert(served.startsWith("LocalTableScan [rk#"),
+      s"q111 within the budget is served as a LocalTableScan:\n$served")
+    val p = plan(distributedView(PipelineQueries.invIndexOf(spark, dir))
+      .search(PipelineQueries.bm25Terms, k = 15))
     assert(p.contains("In(term"),
       s"the term IN filter must reach the postings parquet scan:\n$p")
     // r16: per-term df is a whole-partition window count over the SAME
@@ -313,9 +324,19 @@ class PlanAssertionsSpec extends AnyFunSuite {
     // with the corpus. A sort-merge join here would shuffle corpus rows.
     // Centroids are ranked on the driver, so the broadcast probe is a
     // local (qid, qv, cid) relation and no query × centroid cross join is
-    // planned.
-    for (name <- Seq("q48_ivf_index", "q115_ivfadc")) {
-      val p = plan(SparkEntry.queries(name)(spark, dir))
+    // planned. q48's probe fits the index's localScanMaxRows, so the
+    // entry is served on the driver; its distributed plan is pinned on
+    // the same index reopened with the local path off.
+    val idx = PipelineQueries.q48Index(spark, dir)
+    val served = plan(SparkEntry.queries("q48_ivf_index")(spark, dir))
+    assert("""^LocalTableScan \[qid#\d+L?, rnk#\d+, vec_id#\d+L?, sim#""".r
+        .findFirstIn(served).isDefined,
+      s"q48: the served search must be a LocalTableScan:\n$served")
+    val q48Dist = PipelineQueries.q48Search(spark, dir,
+      idx.withConfig(idx.table.config.copy(localScanMaxRows = 0)))
+    for ((name, df) <- Seq("q48_ivf_index" -> q48Dist,
+        "q115_ivfadc" -> SparkEntry.queries("q115_ivfadc")(spark, dir))) {
+      val p = plan(df)
       assert(p.contains("BroadcastHashJoin"),
         s"$name: probe side must broadcast:\n$p")
       assert(!p.contains("SortMergeJoin"),
@@ -355,28 +376,48 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("q126: lexical side reads only pruned index buckets; fusion is WindowGroupLimit") {
+    // The entry as it runs: the lexical side fits the index's
+    // localScanMaxRows and is served as a local relation; the vector side
+    // and the fusion stay distributed.
     val p = plan(PipelineQueries.q126HybridRrf(spark, dir))
-    // The BM25 list must be served from the persisted index: term IN (...)
-    // pushed into the posting scan, each scanned file a bucket part.
-    assert(p.contains("In(term"), s"query terms must reach the posting scan:\n$p")
-    assert(p.contains("inv_idx_"), s"lexical side must read the persisted index:\n$p")
+    assert("""LocalTableScan \[qid#\d+L, doc_id#\d+L, lrk#""".r.findFirstIn(p).isDefined,
+      s"the served lexical side must be a LocalTableScan:\n$p")
     // Top-10-per-query fuses through WindowGroupLimit, never a full sort.
     assert(p.contains("WindowGroupLimit"), s"fusion top-k must group-limit:\n$p")
     assert(!p.contains("CartesianProduct"), s"no unbroadcast cartesian:\n$p")
+    // Over the budget, the BM25 list is served from the persisted index:
+    // term IN (...) pushed into the posting scan, each scanned file a
+    // bucket part.
+    val d = plan(PipelineQueries.q126On(spark, dir,
+      distributedView(PipelineQueries.invIndexOf(spark, dir))))
+    assert(d.contains("In(term"), s"query terms must reach the posting scan:\n$d")
+    assert(d.contains("inv_idx_"), s"lexical side must read the persisted index:\n$d")
+    assert(d.contains("WindowGroupLimit"), s"fusion top-k must group-limit:\n$d")
+    assert(!d.contains("CartesianProduct"), s"no unbroadcast cartesian:\n$d")
   }
 
   test("q134: chunk-lexical side reads only pruned chunk-index buckets; " +
     "chunk→doc fold is one hash aggregate; fusion group-limits") {
+    // The entry as it runs: the chunk-lexical side is served as a local
+    // relation (see q126); the fusion pins hold on it.
     val p = plan(PipelineQueries.q134ChunkHybrid(spark, dir))
-    assert(p.contains("In(term"), s"query terms must reach the posting scan:\n$p")
-    assert(p.contains("inv_chunks_"),
-      s"lexical side must read the persisted CHUNK index:\n$p")
+    assert("""LocalTableScan \[qid#\d+L, doc_id#\d+L, sk#""".r.findFirstIn(p).isDefined,
+      s"the served chunk-lexical side must be a LocalTableScan:\n$p")
     // Per-query top-10 through WindowGroupLimit, never a full sort.
     assert(p.contains("WindowGroupLimit"), s"fusion top-k must group-limit:\n$p")
     assert(!p.contains("CartesianProduct"), s"no unbroadcast cartesian:\n$p")
     // The chunk→doc max-chunk fold and the fusion never shuffle on text.
     assert(!"hashpartitioning\\(te?xt".r.findAllIn(p).hasNext,
       s"no text-keyed exchange:\n$p")
+    val d = plan(PipelineQueries.q134On(spark, dir,
+      distributedView(PipelineQueries.chunkIndexOf(spark, dir))))
+    assert(d.contains("In(term"), s"query terms must reach the posting scan:\n$d")
+    assert(d.contains("inv_chunks_"),
+      s"lexical side must read the persisted CHUNK index:\n$d")
+    assert(d.contains("WindowGroupLimit"), s"fusion top-k must group-limit:\n$d")
+    assert(!d.contains("CartesianProduct"), s"no unbroadcast cartesian:\n$d")
+    assert(!"hashpartitioning\\(te?xt".r.findAllIn(d).hasNext,
+      s"no text-keyed exchange:\n$d")
   }
 
   test("q127: LM table broadcasts into the token join; per-lang top-k group-limits") {
