@@ -848,20 +848,7 @@ final class ColumnarMergeTree private (
     * always writes the same manifest.
     */
   private def writeConcurrently[A](items: Seq[A])(stage: A => StagedPart): Seq[GPartMeta] = {
-    val staged =
-      if (items.size <= 1) items.map(stage)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(items.size, 8))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(items.map(i =>
-            scala.concurrent.Future(stage(i)))),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      }
-    staged.map(claim(_, register = false))
+    DriverPool.inParallel(items, threads = 8)(stage).map(claim(_, register = false))
   }
 
   /** Per-part row-group (lead-key min, lead-key max, rows) triples, cached
@@ -1224,14 +1211,14 @@ final class ColumnarMergeTree private (
           s"(available: ${snapshots.mkString(",")})")), lo, hi)
 
   /** The small-input serve of the lead-key ranges `rangeSets` (see
-    * `MergeTreeConfig.localScanMaxRows`): the parts they overlap, each read
-    * once on the driver through the DSv2 scan's columnar reader, as one
-    * frame per range set — `columns` (lead key first) over a local
-    * relation of the parts that set overlaps, carrying [[rangeScan]]'s
-    * row-level filter on the set's ranges. The optimizer folds any filter
-    * or projection over it, so collecting it runs no Spark job. `parts`
-    * None reads the live manifest (refreshed, like the scans); Some is a
-    * pinned list from [[snapshotPartsOption]].
+    * `MergeTreeConfig.localScanMaxRows`): the rows of the parts they
+    * overlap, read on the driver through the DSv2 scan's columnar reader,
+    * every file of every part once and in parallel, and returned per range
+    * set as the rows in the set's ranges ([[rangeScan]]'s row-level
+    * filter, evaluated here) — no Dataset is planned. A row's first fields
+    * are `columns` in order; the lead key may follow. `parts` None reads
+    * the live manifest (refreshed, like the scans); Some is a pinned list
+    * from [[snapshotPartsOption]].
     *
     * None — the caller plans the distributed scan — unless the table is
     * Plain (no merge-on-read collapse to replay), no part to read has
@@ -1247,7 +1234,8 @@ final class ColumnarMergeTree private (
     * twice but is read once. Nothing is cached.
     */
   private[graft] def localRangeScan(parts: Option[Seq[GPartMeta]],
-      rangeSets: Seq[Seq[(Any, Any)]], columns: Seq[String]): Option[Seq[DataFrame]] = {
+      rangeSets: Seq[Seq[(Any, Any)]],
+      columns: Seq[String]): Option[Seq[Seq[org.apache.spark.sql.catalyst.InternalRow]]] = {
     if (mode != MergeMode.Plain || config.localScanMaxRows <= 0) return None
     val all = parts.getOrElse { refresh(); manifest.parts }
     def overlapping(ranges: Seq[(Any, Any)]) =
@@ -1259,9 +1247,8 @@ final class ColumnarMergeTree private (
     if (setParts.map(_.map(_.rowCount).sum).sum > config.localScanMaxRows ||
         setParts.map(_.map(_.diskSize).sum).sum > spark.sessionState.conf.filesOpenCostInBytes ||
         surviving.exists(_.muts.nonEmpty)) return None
-    val read = StructType((leadKey +: columns).distinct.map(schema(_).copy(nullable = true)))
-    val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(read)
-    val rowsOf = surviving.map { p =>
+    val read = StructType((columns :+ leadKey).distinct.map(schema(_).copy(nullable = true)))
+    val files = surviving.flatMap { p =>
       // Row-group skip on the ranges this part overlaps (an OR of them),
       // when every one compiles to a parquet predicate.
       val preds = ranges.filter { case (l, h) => p.overlaps(l, h) }.map { case (l, h) =>
@@ -1271,22 +1258,28 @@ final class ColumnarMergeTree private (
       val filter =
         if (preds.exists(_.isEmpty)) None
         else preds.flatten.reduceOption(org.apache.parquet.filter2.predicate.FilterApi.or(_, _))
-      val files = PartStats.parquetFiles(Paths.get(path, p.dir)).map(_.toString).toArray
-      val reader = new graft.sources.ChainedColumnarReader(files, read, filter)
+      PartStats.parquetFiles(Paths.get(path, p.dir)).map(f => (p.partId, f.toString, filter))
+    }
+    val fileRows = DriverPool.inParallel(files) { case (_, file, filter) =>
+      val toRow = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(read)
+      val reader = new graft.sources.ChainedColumnarReader(Array(file), read, filter)
       val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.catalyst.InternalRow]
       try while (reader.next()) reader.get().rowIterator().asScala.foreach(r => out += toRow(r).copy())
       finally reader.close()
-      p.partId -> out
-    }.toMap
-    val attrs = read.fields.toSeq.map(f =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(f.name, f.dataType, f.nullable)())
+      out
+    }
+    val rowsOf = files.map(_._1).zip(fileRows).groupMap(_._1)(_._2)
+    // One predicate per distinct range, `leadKey >= lo AND leadKey <= hi`;
+    // a row is in a set when one of the set's predicates is true (the OR's
+    // SQL semantics: a NULL key is in no set). A row can only match a range
+    // its part overlaps, so only those are tried.
+    val inRange = ranges.zip(org.apache.spark.sql.graft.ColumnBridge.bound(spark, read,
+      ranges.map { case (l, h) => col(leadKey) >= lit(l) && col(leadKey) <= lit(h) }: _*)).toMap
     Some(rangeSets.zip(setParts).map { case (set, ps) =>
-      val inSet = set.map { case (l, h) => col(leadKey) >= lit(l) && col(leadKey) <= lit(h) }
-        .reduceOption(_ || _).getOrElse(lit(false))
-      org.apache.spark.sql.graft.PlanBridge.ofRows(spark,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(attrs,
-          ps.flatMap(p => rowsOf(p.partId)).toIndexedSeq))
-        .filter(inSet)
+      ps.flatMap { p =>
+        val preds = set.filter { case (l, h) => p.overlaps(l, h) }.distinct.map(inRange)
+        rowsOf.getOrElse(p.partId, Nil).flatten.filter(r => preds.exists(_.eval(r) == true))
+      }
     })
   }
 

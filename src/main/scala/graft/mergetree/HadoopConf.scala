@@ -1,15 +1,17 @@
 package graft.mergetree
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapred.JobConf
 
 /** Hadoop's default configuration, parsed once per JVM.
   *
   * A fresh `Configuration` scans and parses the XML default resources on
   * its first read (~7.5 ms); a copy of an already-loaded one clones its
   * properties (~0.16 ms). Every parquet reader, writer and footer read in
-  * the engine takes its conf from [[copy]], so a scan task pays the copy,
-  * not the parse. Callers that set keys (schema, filter predicate) set them
-  * on their own copy; nothing writes to the shared instance.
+  * the engine takes its conf from [[copy]] (the columnar reader from
+  * [[jobConf]]), so a scan task pays the copy, not the parse. Callers that
+  * set keys (schema, filter predicate) set them on their own copy; nothing
+  * writes to the shared instance.
   */
 object HadoopConf {
   private val defaults = new Configuration()
@@ -21,5 +23,13 @@ object HadoopConf {
     // again on its own.
     defaults.size()
     new Configuration(defaults)
+  }
+
+  /** [[copy]] as a `JobConf`, for a reader that builds a Hadoop task
+    * context on it: the context clones any other `Configuration` once more.
+    */
+  def jobConf(): JobConf = {
+    defaults.size()
+    new JobConf(defaults)
   }
 }

@@ -534,7 +534,7 @@ final class MergeTreeTable private (
       live.flatMap(p => partRowCache.get(p.partId, p.creationTime).map(p.partId -> _)).toMap
     val misses = live.filterNot(p => cachedRows.contains(p.partId))
     val missRows: Map[Long, Seq[KVRow]] =
-      misses.map(_.partId).zip(inParallel(misses)(p => readPartLocal(p, range))).toMap
+      misses.map(_.partId).zip(DriverPool.inParallel(misses)(p => readPartLocal(p, range))).toMap
     // One sorted RUN per source. Cached parts slice to exact, sorted runs;
     // miss reads and the memtable are range-filtered and sorted here (a
     // part dir's file iteration order isn't guaranteed to be its range
@@ -644,23 +644,6 @@ final class MergeTreeTable private (
       ks.keys.map(k => (k, p.rowCount.toDouble / math.max(1, ks.keys.size)))))
     if (all.exists(_.isEmpty)) None else Some(all.flatMap(_.get))
   }
-  /** Run `f` over `items` on a bounded pool, results in order — the
-    * driver-side parallel-I/O idiom the local part reads and the footer
-    * prefetch share (parquet-mr reader setup and footer reads are ~ms
-    * each; a serial walk puts O(parts) sequential latency on the query
-    * path).
-    */
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.sizeIs <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(items.size, Runtime.getRuntime.availableProcessors()))
-      try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = f(a)
-      })).map(_.get())
-      finally pool.shutdown()
-    }
-
   /** Warm the granule-bounds cache for `parts` in PARALLEL before a
     * serial consumer walks it (both the local-scan gate and the
     * range-exchange sizing consult this cache; on a fresh table it
@@ -668,7 +651,7 @@ final class MergeTreeTable private (
     */
   private def prefetchGranuleBounds(parts: Seq[PartMetadata]): Unit = {
     val missing = parts.filter(p => !granuleBoundsCache.containsKey(p.partId))
-    inParallel(missing)(p => { granuleBoundsOf(p.partId); () })
+    DriverPool.inParallel(missing)(p => { granuleBoundsOf(p.partId); () })
     ()
   }
 
@@ -903,17 +886,7 @@ final class MergeTreeTable private (
       val groups = binPack(live, nOut)
       val liveIdsPre = live.map(_.partId).toSet
       val attempts: Seq[scala.util.Try[PartMetadata]] =
-        if (groups.size <= 1) groups.map(g => scala.util.Try(mergeGroup(g)))
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(groups.size)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(groups.map(g =>
-              scala.concurrent.Future(scala.util.Try(mergeGroup(g))))),
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
-        }
+        DriverPool.inParallel(groups, groups.size)(g => scala.util.Try(mergeGroup(g)))
       // One failed bin must not leak the other bins' already-renamed
       // outputs (register=false parts live in no manifest and no GC list):
       // delete every NEW output and rethrow. Singleton pass-through bins
@@ -981,7 +954,7 @@ final class MergeTreeTable private (
       group.flatMap(p => partRowCache.get(p.partId, p.creationTime).map(p.partId -> _)).toMap
     val misses = group.filterNot(p => cached.contains(p.partId))
     val missRows: Map[Long, Seq[KVRow]] =
-      misses.map(_.partId).zip(inParallel(misses) { p =>
+      misses.map(_.partId).zip(DriverPool.inParallel(misses) { p =>
         scala.util.Try(LocalPartReader.read(partDir(p.partId), None)).getOrElse(Nil)
       }).toMap
     if (misses.exists(p => missRows(p.partId).size != p.rowCount)) return None

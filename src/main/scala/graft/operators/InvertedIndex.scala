@@ -3,9 +3,12 @@ package graft.operators
 import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig, MetaFiles}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -39,9 +42,10 @@ import scala.jdk.CollectionConverters._
   *     the pruned parts fit the table's local-read budget
   *     (`localScanMaxRows` rows and a file open's worth of bytes — see
   *     `ColumnarMergeTree.localRangeScan`), the search is served on the
-  *     driver: the parts are read locally, df is counted, the BM25
-  *     contributions are a projection over a local relation, and the
-  *     result is a local relation — no Spark job. Larger
+  *     driver: the parts are read locally and in parallel, df is counted,
+  *     the BM25 contribution expression is resolved once and evaluated per
+  *     posting row, and only the result becomes a local relation — no
+  *     Dataset is planned before the caller's own action. Larger
   *     probes plan one `rangeScan(b, b)` per bucket with the `term IN (…)`
   *     filter pushed into the parquet scan and df as a window count over
   *     the posting rows. Both paths return identical rows, order and
@@ -345,12 +349,15 @@ final class InvertedIndex private (
     * per-document (n_terms, score), or None when the table will not serve
     * the queries' bucket parts locally ([[ColumnarMergeTree.localRangeScan]]
     * — over budget, pending lightweight mutations) and the caller plans
-    * the distributed search. Same arithmetic as the distributed plan: df
-    * counts the matched posting rows per term, the contribution is
-    * [[bm25Micro]] as a projection over a local relation (the optimizer
-    * evaluates it on the driver, so no job runs), and the per-(qid, doc)
-    * sums are exact integer additions. Reads the same pinned-or-live part
-    * list as [[postingsOf]].
+    * the distributed search. Same arithmetic as the distributed plan, with
+    * no Dataset planned: the posting rows come back from the local read,
+    * `term IN (…)` keeps a row when its term's UTF-8 bytes equal a query
+    * term's (the In predicate's string equality), df counts the kept rows
+    * per term, the contribution is [[bm25Micro]] resolved once and
+    * evaluated per posting row (interpreted, as the optimizer evaluated it
+    * over a local relation before), and the per-(qid, doc) sums are exact
+    * integer additions. Reads the same pinned-or-live part list as
+    * [[postingsOf]].
     */
   private def servedScores(querySets: Seq[(Long, Seq[String])],
                            k1: Double, b: Double): Option[Seq[Scored]] = {
@@ -360,24 +367,22 @@ final class InvertedIndex private (
     val buckets = bucketsOf(spark, allTerms, st.nbuckets).map(bk => (bk: Any, bk: Any))
     table.localRangeScan(pinnedParts(st), Seq(buckets), Seq("term", "doc_id", "tf", "dl"))
       .map(_.head).map { postings =>
-        val rows = postings.filter(col("term").isin(allTerms: _*))
-          .select(col("term"), col("doc_id"), col("tf"), col("dl")).collect()
-        val df = rows.groupBy(_.getString(0)).map { case (t, rs) => t -> rs.length.toLong }
-        val contrib = spark.createDataFrame(
-            rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), df(r.getString(0)))).asJava,
-            postingSchema)
-          .select(col("term"), col("doc_id"),
-            bm25Micro(col("tf"), col("df"), col("dl"), st.n_docs, avgdl, k1, b).as("c"))
-          .collect()
-        val qidsOf = querySets.flatMap { case (q, ts) => ts.distinct.map(_ -> q) }
-          .groupBy(_._1).map { case (t, qs) => t -> qs.map(_._2) }
+        val wanted = allTerms.map(UTF8String.fromString).toSet
+        val rows = postings.filter(r => !r.isNullAt(0) && wanted(r.getUTF8String(0)))
+        val df = rows.groupMapReduce(_.getUTF8String(0))(_ => 1L)(_ + _)
+        val contrib = ColumnBridge.bound(spark, contribInput,
+          bm25Micro(col("tf"), col("df"), col("dl"), st.n_docs, avgdl, k1, b)).head
+        val qidsOf = querySets.flatMap { case (q, ts) => ts.distinct.map(UTF8String.fromString(_) -> q) }
+          .groupMap(_._1)(_._2)
         // (qid, doc) → (matched terms, Σ non-null c, any non-null c): sum()
         // skips NULL contributions and is NULL when all are.
         val acc = scala.collection.mutable.HashMap.empty[(Long, Long), (Long, Long, Boolean)]
-        contrib.foreach { r =>
+        rows.foreach { r =>
+          val term = r.getUTF8String(0)
           val doc = r.getLong(1)
-          val c = if (r.isNullAt(2)) None else Some(r.getLong(2))
-          qidsOf(r.getString(0)).foreach { q =>
+          val c = Option(contrib.eval(
+            InternalRow(r.get(2, LongType), df(term), r.get(3, LongType)))).map(_.asInstanceOf[Long])
+          qidsOf(term).foreach { q =>
             val (n, sum, any) = acc.getOrElse((q, doc), (0L, 0L, false))
             acc((q, doc)) = (n + 1, sum + c.getOrElse(0L), any || c.isDefined)
           }
@@ -762,9 +767,7 @@ object InvertedIndex {
     // without the two regex scans or the interpreted filter/transform
     // lambdas per row; this was the repo's costliest tokenizer (round-17
     // optimization; guide §1.2 step 2).
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.MixedTokensExpr(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text)))
+    ColumnBridge.column(graft.functions.MixedTokensExpr(ColumnBridge.expression(text)))
 
   /** The pre-r17 HOF spelling of [[mixedTokens]] — kept as the reference
     * face the codegen expression is equality-pinned against (and the
@@ -817,22 +820,19 @@ object InvertedIndex {
   /** Tokenize a raw query string with the given tokenizer, in array order
     * (split order for latin; per-run bigram order for Han — what
     * [[InvertedIndex.phraseSearch]] needs), evaluating the IDENTICAL
-    * Catalyst expressions the build used — see [[evalOnDriver]].
+    * Catalyst expressions the build used on the driver (resolved and
+    * evaluated directly, see `ColumnBridge.bound` — no Dataset, no job).
     */
   private[graft] def queryTerms(spark: SparkSession, query: String,
       tokenizer: String): Seq[String] = {
-    val toks = if (tokenizer == Mixed) mixedTokens(lit(query))
-      else filter(split(lower(lit(query)), "[^a-z]+"), t => length(t) >= 3)
-    evalOnDriver(spark, toks).getSeq[String](0).toList
+    val q = col("q")
+    val toks = if (tokenizer == Mixed) mixedTokens(q)
+      else filter(split(lower(q), "[^a-z]+"), t => length(t) >= 3)
+    val input = StructType(Seq(StructField("q", StringType)))
+    val arr = ColumnBridge.bound(spark, input, toks).head.eval(InternalRow(UTF8String.fromString(query)))
+    CatalystTypeConverters.convertToScala(arr, ArrayType(StringType))
+      .asInstanceOf[scala.collection.Seq[String]].toList
   }
-
-  /** `cols` evaluated over a one-row local relation. The optimizer folds a
-    * projection over a local relation on the driver, so this runs no
-    * Spark job.
-    */
-  private def evalOnDriver(spark: SparkSession, cols: Column*): Row =
-    spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil))
-      .select(cols: _*).first()
 
   /** Per-(doc,term) BM25 contribution in integer micro-units. Spelled
     * operation-for-operation like the q110 oracle SQL so both engines walk
@@ -847,22 +847,29 @@ object InvertedIndex {
 
   /** Distinct sorted bucket ids of `terms`, evaluating the identical
     * Catalyst xxhash64 the build hashed with (no driver-side
-    * reimplementation to drift) — see [[evalOnDriver]].
+    * reimplementation to drift), resolved once and evaluated per term on
+    * the driver (see `ColumnBridge.bound` — no Dataset, no job).
     */
   private[graft] def bucketsOf(spark: SparkSession, terms: Seq[String],
-      nb: Int): Seq[Long] =
-    evalOnDriver(spark, terms.map(t => pmod(xxhash64(lit(t)), lit(nb.toLong))): _*)
-      .toSeq.map(_.asInstanceOf[Long]).distinct.sorted
+      nb: Int): Seq[Long] = {
+    val input = StructType(Seq(StructField("t", StringType)))
+    val bucket = ColumnBridge.bound(spark, input, pmod(xxhash64(col("t")), lit(nb.toLong))).head
+    terms.map(t => bucket.eval(InternalRow(UTF8String.fromString(t))).asInstanceOf[Long])
+      .distinct.sorted
+  }
 
   /** One query's score for one matched document (served search). */
   private final case class Scored(qid: Long, doc: Long, nTerms: Long,
       score: java.lang.Long)
 
+  /** The served [[bm25Micro]]'s input row, typed like the distributed
+    * plan's posting columns and window count.
+    */
+  private val contribInput = StructType.fromDDL("tf BIGINT, df BIGINT, dl BIGINT")
+
   /** Served-search relations, typed like the distributed plans' outputs:
     * ids from a posting scan and sums are nullable, counts and ranks not.
     */
-  private val postingSchema = StructType.fromDDL(
-    "term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, df BIGINT")
   private val scoresSchema = StructType(Seq(StructField("doc_id", LongType),
     StructField("n_terms", LongType, nullable = false), StructField("score", LongType)))
   private val searchSchema =

@@ -6,7 +6,8 @@ import graft.queries.PipelineQueries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
@@ -33,8 +34,11 @@ import scala.jdk.CollectionConverters._
   *     queries, fit the table's local-read budget (`localScanMaxRows`
   *     rows and a file open's worth of bytes — see
   *     `ColumnarMergeTree.localRangeScan`), the search is served on the
-  *     driver: the parts are read locally and scored as a
-  *     projection over a local relation, with no Spark job. Larger
+  *     driver: the parts are read locally and in parallel, the same
+  *     self filter and cosine/r6 expressions are resolved once and
+  *     evaluated per row, and only the result becomes a local relation —
+  *     no Spark job, and no Dataset is planned besides the query batch's
+  *     collect and the caller's action. Larger
   *     searches broadcast the probe, a local (qid, qv, cid) relation, onto
   *     a `rangeScan` of the probed clusters. Both paths return identical
   *     rows, order and types. The driver holds |queries|·nlist values for
@@ -100,17 +104,17 @@ final class IvfIndex private (
   /** [[search]] served on the driver: the probed lists' rows read locally
     * ([[ColumnarMergeTree.localRangeScan]], one range set per query, so
     * the budget counts each query's probed rows and bytes), then per query
-    * the same self filter and `r6(cosine(qv, v))` projection as the
-    * distributed plan, with the query's qid and qv as literals, over the
-    * local relation of that query's own lists only (the optimizer
-    * evaluates it on the driver — no Spark job; no query × row pairs are
-    * materialized). Each query's rows rank in the distributed window's
-    * order, [[RankOrder]]'s `sim DESC NULLS LAST, vec_id`. None — the
-    * caller plans the distributed search — when the table will not serve
-    * the read, qid is not integral (qids order as longs), or a qid repeats
-    * in the batch.
+    * the same self filter and `r6(cosine(qv, v))` as the distributed plan,
+    * resolved once over (qid, qv, vec_id, v) and evaluated per row of that
+    * query's own lists only (interpreted, as the optimizer evaluated them
+    * over a local relation before; no Dataset, no job, no query × row
+    * pairs materialized). Each query's rows rank in the distributed
+    * window's order, [[RankOrder]]'s `sim DESC NULLS LAST, vec_id`. None —
+    * the caller plans the distributed search — when the table will not
+    * serve the read, qid is not integral (qids order as longs), or a qid
+    * repeats in the batch.
     */
-  private def servedSearch(q: DataFrame, probes: Seq[Row], k: Int,
+  private def servedSearch(q: Queries, probes: Seq[Row], k: Int,
                            excludeSelf: Boolean): Option[DataFrame] = {
     val qidField = q.schema("qid")
     if (!Seq(LongType, IntegerType, ShortType, ByteType).contains(qidField.dataType)) return None
@@ -121,19 +125,25 @@ final class IvfIndex private (
     table.localRangeScan(None,
         byQid.map(_._2.map(r => (r.getLong(2): Any, r.getLong(2): Any))), Seq("vec_id", "v"))
       .map { lists =>
-        def literal(v: Any, f: StructField) = ColumnBridge.column(Literal.create(v, f.dataType))
+        val input = StructType(Seq(qidField, q.schema("qv"),
+          table.schema("vec_id").copy(nullable = true), table.schema("v").copy(nullable = true)))
+        val Seq(sim, notSelf) = ColumnBridge.bound(spark, input,
+          r6(cosine(col("qv"), col("v"))), col("vec_id") =!= col("qid"))
+        val toQuery = CatalystTypeConverters.createToCatalystConverter(
+          StructType(input.take(2)))
         val order = RankOrder.scoreDescThenId(RankOrder.sqlDouble)
         def qidKey(qid: Any): Option[Long] = Option(qid).map(_.asInstanceOf[Number].longValue)
         val rows = byQid.zip(lists).sortBy(e => qidKey(e._1._1)).flatMap {
           case ((qid, ps), listed) =>
-            val qidLit = literal(qid, qidField)
-            listed.filter(if (excludeSelf) col("vec_id") =!= qidLit else lit(true))
-              .select(col("vec_id"),
-                r6(cosine(literal(ps.head.get(1), q.schema("qv")), col("v"))))
-              .collect().toSeq
-              .sortBy(r => (Option.when(!r.isNullAt(1))(r.getDouble(1)), r.getLong(0)))(order)
+            val joined = new JoinedRow(
+              toQuery(Row(qid, ps.head.get(1))).asInstanceOf[InternalRow], null)
+            listed.iterator.map(joined.withRight)
+              .filter(r => !excludeSelf || notSelf.eval(r) == true)
+              .map(r => (r.getLong(2), Option(sim.eval(r)).map(_.asInstanceOf[Double])))
+              .toSeq
+              .sortBy { case (vecId, s) => (s, vecId) }(order)
               .take(k).zipWithIndex
-              .map { case (r, i) => Row(qid, i + 1, r.get(0), r.get(1)) }
+              .map { case ((vecId, s), i) => Row(qid, i + 1, vecId, s.map(Double.box).orNull) }
         }
         spark.createDataFrame(rows.asJava, StructType(Seq(qidField,
           StructField("rnk", IntegerType, nullable = false),
@@ -141,44 +151,45 @@ final class IvfIndex private (
       }
   }
 
-  /** The query batch's (qid, qv) rows, collected once into a local
-    * relation: every later use (probe ranking, the broadcast probe, the
-    * ADC lookup tables) then reads driver memory, not the source again.
+  /** The query batch's (qid, qv) rows, collected once: every later use
+    * (probe ranking, the served scoring, the broadcast probe, the ADC
+    * lookup tables) then reads driver memory, not the source again.
     */
-  private def localQueries(queries: DataFrame): DataFrame = {
+  private def localQueries(queries: DataFrame): Queries = {
     val q = queries.select(col("qid"), col("qv"))
-    spark.createDataFrame(q.collect().toSeq.asJava, q.schema)
+    Queries(q.schema, q.collect().toSeq)
   }
 
   /** The probe of a local query batch, planned on the driver: each
     * query's `nprobe` best clusters by r6(cosine(qv, cv)) descending, ties
-    * to the lower cid, as (qid, qv, cid) rows. The pair scores are a
-    * projection over a local relation, which the optimizer evaluates on
-    * the driver, so ranking runs no Spark job. When every list is probed
-    * (nprobe ≥ nlist — exact mode) there is nothing to rank and each query
-    * probes every cid.
+    * to the lower cid, as (qid, qv, cid) rows. The pair scores are that
+    * expression resolved once and evaluated per (query, centroid) pair
+    * (see `ColumnBridge.bound`), so ranking plans no Dataset and runs no
+    * Spark job. When every list is probed (nprobe ≥ nlist — exact mode)
+    * there is nothing to rank and each query probes every cid.
     */
-  private def probeOf(q: DataFrame, nprobe: Int): Seq[Row] = {
-    val qs = q.collect().toSeq
+  private def probeOf(q: Queries, nprobe: Int): Seq[Row] =
     if (nprobe >= nlist)
-      for (r <- qs; c <- quantizer) yield Row(r.get(0), r.get(1), c.getLong(0))
+      for (r <- q.rows; c <- quantizer) yield Row(r.get(0), r.get(1), c.getLong(0))
     else {
-      val pairs = for (r <- qs; c <- quantizer)
-        yield Row(r.get(0), r.get(1), c.getLong(0), c.get(1))
-      val scored = spark.createDataFrame(pairs.asJava,
-          q.schema.add(probeCid).add(quantizerSchema("cv")))
-        .select(col("qid"), col("qv"), col("cid"),
-          r6(cosine(col("qv"), col("cv"))).as("psim"))
-        .collect().toSeq
+      val input = StructType(Seq(q.schema("qv"), quantizerSchema("cv")))
+      val psim = ColumnBridge.bound(spark, input, r6(cosine(col("qv"), col("cv")))).head
+      val toQv = CatalystTypeConverters.createToCatalystConverter(input("qv").dataType)
+      val toCv = CatalystTypeConverters.createToCatalystConverter(input("cv").dataType)
+      val cvs = quantizer.map(c => (c.getLong(0), toCv(c.get(1))))
+      val scored = q.rows.flatMap { r =>
+        val qv = toQv(r.get(1))
+        cvs.map { case (cid, cv) =>
+          (r, cid, Option(psim.eval(InternalRow(qv, cv))).map(_.asInstanceOf[Double])) }
+      }
       val order = RankOrder.scoreDescThenId(RankOrder.sqlDouble)
-      scored.groupBy(_.get(0)).valuesIterator.flatMap(_.sortBy(r =>
-          (Option.when(!r.isNullAt(3))(r.getDouble(3)), r.getLong(2)))(order).take(nprobe))
-        .map(r => Row(r.get(0), r.get(1), r.getLong(2))).toSeq
+      scored.groupBy(_._1.get(0)).valuesIterator
+        .flatMap(_.sortBy { case (_, cid, s) => (s, cid) }(order).take(nprobe))
+        .map { case (r, cid, _) => Row(r.get(0), r.get(1), cid) }.toSeq
     }
-  }
 
   /** The probe rows as a local (qid, qv, cid) relation — the broadcast side. */
-  private def probeFrame(q: DataFrame, probes: Seq[Row]): DataFrame =
+  private def probeFrame(q: Queries, probes: Seq[Row]): DataFrame =
     spark.createDataFrame(probes.asJava, q.schema.add(probeCid))
 
   /** The sorted distinct probed cids. */
@@ -270,7 +281,7 @@ final class IvfIndex private (
     // The query's m×k lookup table is computed ONCE, on the driver (a
     // projection over the local query relation); per probed row the
     // approximate score is m array lookups (pq_adc).
-    val qlut = q.select(col("qid"),
+    val qlut = spark.createDataFrame(q.rows.asJava, q.schema).select(col("qid"),
       call_function("pq_lut", col("qv"), typedLit(cb.cb)).as("lut"))
     val scored = probedScan(cidsOf(probes)).join(broadcast(probeFrame(q, probes)), Seq("cid"))
       .join(broadcast(qlut), Seq("qid"))
@@ -558,6 +569,9 @@ object IvfIndex {
   /** The centroid sidecar's layout: (cid, cv), one row per list. */
   private val quantizerSchema = StructType(Seq(
     StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+
+  /** A query batch collected once: its (qid, qv) schema and rows. */
+  private final case class Queries(schema: StructType, rows: Seq[Row])
 
   /** The probe relation's cluster column. */
   private val probeCid = StructField("cid", LongType, nullable = false)

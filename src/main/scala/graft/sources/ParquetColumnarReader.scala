@@ -31,7 +31,7 @@ private[sources] class ParquetColumnarReader(
     extends PartitionReader[ColumnarBatch] {
 
   // Own copy of the JVM-wide defaults: the keys below are per file.
-  private val conf = HadoopConf.copy()
+  private val conf = HadoopConf.jobConf()
   locally {
     // The two schema keys Spark's ParquetReadSupport contract requires
     // (requested projection + full row schema used for name resolution).

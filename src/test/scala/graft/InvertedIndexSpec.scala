@@ -325,7 +325,7 @@ class InvertedIndexSpec extends AnyFunSuite {
     val terms = Seq("dup", "vector", "merge")
     val nb = idx.nbuckets
     // Query-sized inputs are evaluated on the driver: the same Catalyst
-    // expressions the build used, over a one-row local relation.
+    // expressions the build used, resolved once and evaluated directly.
     var buckets = Seq.empty[Long]
     assert(jobsOf { buckets = InvertedIndex.bucketsOf(spark, terms, nb) } == 0)
     val hashed = terms.map(t => Seq(t).toDF("t")

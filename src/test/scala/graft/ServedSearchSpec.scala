@@ -2,10 +2,12 @@ package graft
 
 import graft.mergetree.{ColumnarMergeTree, MergeTreeConfig}
 import graft.operators.{InvertedIndex, IvfIndex}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -76,6 +78,121 @@ class ServedSearchSpec extends AnyFunSuite {
     assert(idx.search(Seq("zzqxv"), k = 3).collect().isEmpty)
     val ties = idx.searchScores(Seq("merge")).collect().groupBy(_.getLong(2))
     assert(ties.exists(_._2.length > 1), "fixture must carry score ties")
+    idx.table.shutdown()
+  }
+
+  /** Dataset actions (this session's QueryExecutionListener events) that
+    * `f` runs. Events post asynchronously but in order, so a sentinel
+    * action run after `f` marks where its events end.
+    */
+  private def actionsOf(f: => Any): Int = {
+    val sentinel = s"served-actions-${java.util.UUID.randomUUID()}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.analyzed.toString); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = {
+        plans.add(qe.analyzed.toString); ()
+      }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).select(lit(sentinel)).collect()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.contains(sentinel)) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(plans.asScala.exists(_.contains(sentinel)), "sentinel action not seen within 10 s")
+      plans.asScala.takeWhile(!_.contains(sentinel)).size
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("served probes plan no Dataset: actions per probe, query hashing and tokenizing") {
+    val idx = InvertedIndex.build(spark, docs,
+      Files.createTempDirectory("served_inv_act_").toString)
+    val terms = Seq("dup", "vector", "merge")
+    idx.search(terms, k = 10).collect() // warm
+    val bm25 = actionsOf(idx.search(terms, k = 10).collect())
+    assert(bm25 == 1, s"served BM25 search(...).collect() ran $bm25 actions (the caller's is 1)")
+    assert(actionsOf(InvertedIndex.bucketsOf(spark, terms, idx.nbuckets)) == 0)
+    assert(actionsOf(InvertedIndex.queryTerms(spark, "Dup, vector of MERGE", InvertedIndex.Latin)) == 0)
+    assert(actionsOf(InvertedIndex.queryTerms(spark, "spark 中文分词", InvertedIndex.Mixed)) == 0)
+    val ivf = IvfIndex.build(spark, vectors,
+      Files.createTempDirectory("served_ivf_act_").toString, nlist = 8)
+    val q = queriesOf(vectors, Seq(0L, 1L))
+    for (nprobe <- Seq(3, ivf.nlist)) {
+      val s = ivf.search(q, k = 10, nprobe = nprobe, excludeSelf = false)
+      assert(isLocal(s))
+      val ann = actionsOf(ivf.search(q, k = 10, nprobe = nprobe, excludeSelf = false).collect())
+      assert(ann <= 2, s"served IVF search(nprobe=$nprobe).collect() ran $ann actions " +
+        "(the query batch's and the caller's are 2)")
+    }
+    idx.table.shutdown(); ivf.table.shutdown()
+  }
+
+  /** `cols` over a one-row local relation: the DataFrame spelling the
+    * driver-side query hashing and tokenizing replaced.
+    */
+  private def frameEval(cols: Column*): Row =
+    spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil)).select(cols: _*).first()
+
+  test("query hashing and tokenizing equal their DataFrame spellings") {
+    val inputs = Seq(
+      "Dup, vector of MERGE",                 // latin
+      "spark 中文分词 and 很好 mixed 中 text", // mixed scripts, a one-char Han run
+      "",                                     // empty
+      "naïve café — Ünïcödé straße ÀÉÎ",      // non-ASCII latin letters
+      "日本語のテキスト 😀 emoji ½ ｆｕｌｌ")  // non-BMP and full-width input
+    for (q <- inputs) {
+      val latin = InvertedIndex.queryTerms(spark, q, InvertedIndex.Latin)
+      assert(latin == frameEval(filter(split(lower(lit(q)), "[^a-z]+"), t => length(t) >= 3))
+        .getSeq[String](0), s"latin terms of '$q'")
+      val mixed = InvertedIndex.queryTerms(spark, q, InvertedIndex.Mixed)
+      assert(mixed == frameEval(InvertedIndex.mixedTokens(lit(q))).getSeq[String](0),
+        s"mixed terms of '$q'")
+      val terms = (latin ++ mixed :+ q).distinct
+      for (nb <- Seq(1, 8, 97)) {
+        val frame = frameEval(terms.map(t => pmod(xxhash64(lit(t)), lit(nb.toLong))): _*)
+          .toSeq.map(_.asInstanceOf[Long]).distinct.sorted
+        assert(InvertedIndex.bucketsOf(spark, terms, nb) == frame, s"buckets of $terms mod $nb")
+      }
+    }
+    assert(InvertedIndex.bucketsOf(spark, Nil, 8).isEmpty)
+  }
+
+  test("BM25: searchText on a mixed-tokenizer index; searchMany with shared and unmatched terms") {
+    import spark.implicits._
+    val extra = Seq(
+      (5001L, "中文分词是基础 merge table"),
+      (5002L, "我们做分词处理"),
+      (5003L, "中文 分词 vector"),
+      (5004L, "混合 mixed doc 中文分词 here"),
+      (5005L, "naïve café merge")).toDF("doc_id", "text")
+    val corpus = docs.select(col("doc_id"), col("text")).unionByName(extra)
+    val idx = InvertedIndex.build(spark, corpus,
+      Files.createTempDirectory("served_inv_mixed_").toString, tokenizer = InvertedIndex.Mixed)
+    val dist = idx.withConfig(distributed(idx.table.config))
+    for (text <- Seq("中文分词", "spark 中文分词 merge", "Merge the TABLE scan", "café naïve")) {
+      val s = idx.searchText(text, k = 7)
+      assert(isLocal(s), s"searchText($text) served")
+      same(s, dist.searchText(text, k = 7), ordered = true, s"searchText($text)")
+      same(idx.searchScoresText(text), dist.searchScoresText(text), ordered = false,
+        s"searchScoresText($text)")
+    }
+    // "merge" is shared by three queries; "zzqxv" matches nothing, alone
+    // and beside matching terms.
+    val many = Seq(
+      3L -> Seq("merge", "zzqxv"),
+      1L -> Seq("merge", "分词", "table"),
+      2L -> Seq("zzqxv"),
+      7L -> Seq("table", "merge", "merge"))
+    val m = idx.searchMany(many, k = 5)
+    assert(isLocal(m))
+    same(m, dist.searchMany(many, k = 5), ordered = true, "searchMany")
+    same(idx.searchManyScores(many), dist.searchManyScores(many), ordered = false,
+      "searchManyScores")
+    assert(m.collect().map(_.getLong(0)).distinct.sorted.toSeq == Seq(1L, 3L, 7L))
     idx.table.shutdown()
   }
 
