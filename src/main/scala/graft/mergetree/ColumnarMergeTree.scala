@@ -1244,8 +1244,8 @@ final class ColumnarMergeTree private (
     val ranges = rangeSets.flatten.distinct
     val surviving = overlapping(ranges)
     lastPruning = (surviving.size, all.size)
-    if (setParts.map(_.map(_.rowCount).sum).sum > config.localScanMaxRows ||
-        setParts.map(_.map(_.diskSize).sum).sum > spark.sessionState.conf.filesOpenCostInBytes ||
+    if (!config.fitsLocalRead(spark, setParts.map(_.map(_.rowCount).sum).sum,
+          setParts.map(_.map(_.diskSize).sum).sum) ||
         surviving.exists(_.muts.nonEmpty)) return None
     val read = StructType((columns :+ leadKey).distinct.map(schema(_).copy(nullable = true)))
     val files = surviving.flatMap { p =>

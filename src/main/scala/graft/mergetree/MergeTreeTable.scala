@@ -56,6 +56,11 @@ case class MergeTreeConfig(
       *     `InvertedIndex` search faces count the parts of the query
       *     terms' buckets once per search (one set), `IvfIndex.search`
       *     counts each query's probed lists (one set per query).
+      *   - The SQL faces of both tables (the DSv2 scans of
+      *     `format("mergetree")` and the catalog): the statically pruned
+      *     parts, against [[fitsLocalRead]] of the DEFAULT config (the scan
+      *     knows no table config); a scan that fits plans one split and no
+      *     exchange (`graft.sources.SingleSplitScan`).
       * At 100 TB almost every query exceeds this and takes the distributed
       * path; the ones that don't are exactly the ones a job launch would
       * dominate.
@@ -184,7 +189,17 @@ case class MergeTreeConfig(
       * object-store posture; see GManifest's log-mode docs. Existing
       * tables migrate via GManifest.enableLogLayout.
       */
-    manifestLog: Boolean = false)
+    manifestLog: Boolean = false) {
+
+  /** The local-read budget (see [[localScanMaxRows]]): `rows` manifest
+    * rows and `bytes` of manifest `diskSize` fit when `rows` is at most
+    * `localScanMaxRows` and `bytes` at most `spark.sql.files.openCostInBytes`.
+    * The index searches' driver serve and the SQL scans' one-split plan
+    * both decide with this.
+    */
+  def fitsLocalRead(spark: SparkSession, rows: Long, bytes: Long): Boolean =
+    rows <= localScanMaxRows && bytes <= spark.sessionState.conf.filesOpenCostInBytes
+}
 
 /** Per-part metadata, mirroring `PartMetadata` (reference: src/part.h:12-26).
   * Persisted in the table manifest; used for driver-side part pruning

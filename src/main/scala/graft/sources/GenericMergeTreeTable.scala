@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.mergetree.{ColumnarMergeTree, KeyOrder}
+import graft.mergetree.{ColumnarMergeTree, KeyOrder, MergeTreeConfig}
 import graft.mergetree.ColumnarMergeTree.{GManifest, GPartMeta}
 
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
@@ -28,10 +28,13 @@ import scala.jdk.CollectionConverters._
   *
   * Reads are vectorized (ParquetColumnarReader) with both pruning layers:
   * driver-side part pruning from gmanifest leading-key bounds (O8) and
-  * parquet row-group skip via a pushed FilterPredicate (O7). The surviving
-  * part files are packed, in manifest order, into splits of Spark's own
-  * file-split size (MergeTreePartition.pack), so a scan over many small
-  * parts launches as many tasks as `spark.read.parquet` would. Reads are RAW
+  * parquet row-group skip via a pushed FilterPredicate (O7). A scan whose
+  * pruned parts fit `MergeTreeConfig.fitsLocalRead` plans ONE split that reports
+  * `SinglePartition` (see [[SingleSplitScan]]): no exchange above it, one
+  * Spark job per small read. A larger scan packs the surviving part files,
+  * in manifest order, into splits of Spark's own file-split size
+  * (MergeTreePartition.pack), so it launches as many tasks as
+  * `spark.read.parquet` would. Reads are RAW
   * part rows — Replacing/Summing collapse is a read-time VIEW concern, like
   * ClickHouse SELECT without FINAL; `ColumnarMergeTree.scan()` is the
   * FINAL-applying API.
@@ -538,7 +541,7 @@ class GenericMergeTreeScanImpl(
     setEquals: Map[String, Set[String]] = Map.empty,
     spjSpec: Option[SpjSpec] = None,
     rtCols: Map[String, (RtKind, org.apache.spark.sql.types.DataType)] = Map.empty)
-    extends Scan with Batch with SupportsReportStatistics
+    extends SingleSplitScan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeFiltering {
 
   override def readSchema(): StructType = required
@@ -651,25 +654,25 @@ class GenericMergeTreeScanImpl(
       m.parts
   }
 
-  private def surviving(parts: List[GPartMeta]): List[GPartMeta] = {
-    val s = survivingStatic(parts)
+  private def surviving: List[GPartMeta] =
     // Runtime (join-driven) filters last — empty until Spark's dynamic
     // pruning calls filter(), so planning-time callers (statistics) see
     // the static pruning only.
-    if (rtValues.isEmpty) s else rtSurviving(s)
-  }
+    if (rtValues.isEmpty) staticParts else rtSurviving(staticParts)
 
   /** Static (planning-time) pruning only — the basis for SPJ group
     * identity, which must not depend on WHEN a runtime filter arrived
     * (groups formed after filter() would drop whole key groups; the
-    * key-grouped contract prunes within groups instead).
+    * key-grouped contract prunes within groups instead). Computed once per
+    * scan, like manifestParts: statistics, the split decision, the SPJ
+    * groups and the splits all start from it.
     */
-  private def survivingStatic(parts: List[GPartMeta]): List[GPartMeta] = {
+  private lazy val staticParts: List[GPartMeta] = {
     // Partition pruning first (exact on the stored value; untagged parts are
     // conservatively kept), then leading-key range pruning.
     val inPartition = wantedPartitions match {
-      case None         => parts
-      case Some(wanted) => parts.filter(_.partition.forall(wanted))
+      case None         => manifestParts
+      case Some(wanted) => manifestParts.filter(_.partition.forall(wanted))
     }
     val inKeyRange = (lo, hi) match {
       case (None, None) => inPartition
@@ -698,7 +701,7 @@ class GenericMergeTreeScanImpl(
   }
 
   override def estimateStatistics(): Statistics = {
-    val parts = surviving(manifestParts)
+    val parts = surviving
     val bytes = parts.map(_.diskSize).sum
     val rows = parts.map(_.rowCount).sum
     new Statistics {
@@ -717,8 +720,18 @@ class GenericMergeTreeScanImpl(
       else colBounds.toSeq.sortBy(_._1).map { case (c, (l, h)) =>
         s"$c=[${l.getOrElse("-inf")}, ${h.getOrElse("+inf")}]"
       }.mkString(" minmax=", ",", "")
-    s"mergetree-generic $path$snap $leadKey=$range$mm cols=${required.fieldNames.mkString(",")}"
+    s"mergetree-generic $path$snap $leadKey=$range$mm cols=${required.fieldNames.mkString(",")}" +
+      MergeTreePartition.splitsNote(singleSplit)
   }
+
+  /** See [[SingleSplitScan]]: taken from the STATIC pruning, like the SPJ
+    * groups, so a runtime filter arriving later narrows the one split's
+    * files but never changes the layout the plan was built on.
+    */
+  override lazy val singleSplit: Boolean =
+    spjGroups.isEmpty && staticParts.forall(_.muts.isEmpty) &&
+      MergeTreeConfig().fitsLocalRead(SparkSession.active,
+        staticParts.map(_.rowCount).sum, staticParts.map(_.diskSize).sum)
 
   /** Storage-partitioned-join groups: one (typed key, parts) bucket per
     * live partition value — computed ONCE (outputPartitioning and
@@ -747,7 +760,7 @@ class GenericMergeTreeScanImpl(
         // STATIC pruning only: group identity must not depend on when a
         // runtime filter arrived — runtime values prune within the groups
         // at planInputPartitions time.
-        val keep = survivingStatic(manifestParts)
+        val keep = staticParts
         // Pending lightweight mutations disable SPJ grouping for the scan:
         // the mut program runs row-based per part and correctness must
         // never wait on a marker/rule — the join shuffles until the next
@@ -831,11 +844,10 @@ class GenericMergeTreeScanImpl(
             : InputPartition
         }.toArray
       case None =>
-        val live = manifestParts
-        val keep = surviving(live)
-        GenericMergeTreeScan.lastPruning.set((keep.size, live.size))
+        val keep = surviving
+        GenericMergeTreeScan.lastPruning.set((keep.size, manifestParts.size))
         if (keep.forall(_.muts.isEmpty))
-          MergeTreePartition.pack(keep.flatMap(parquetFiles))
+          MergeTreePartition.plan(keep.flatMap(parquetFiles), singleSplit)
         else {
           // Pending lightweight mutations: the scan applies them ITSELF —
           // `format("mergetree")` needs no analyzer rule, and snapshot/

@@ -14,9 +14,10 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * via `spark.sql.extensions=graft.sources.GraftExtensions` by GraftSession
   * and the test session.
   *
-  * Three injections: the FINAL-applying SQL read (MergeTreeFinalRule), the
+  * Four injections: the FINAL-applying SQL read (MergeTreeFinalRule), the
   * ClickHouse maintenance-verb parser (GraftSqlParser — OPTIMIZE TABLE,
-  * DETACH/ATTACH/DROP/REPLACE PARTITION, MATERIALIZE TTL), and the
+  * DETACH/ATTACH/DROP/REPLACE PARTITION, MATERIALIZE TTL), the one-split
+  * planning of small scans (graft.plans.SingleSplitScanStrategy), and the
   * metadata table functions (`uniq_meta` family below).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -28,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new MergeTreeFinalRule(session)
     }
     e.injectParser((session, delegate) => new GraftSqlParser(session, delegate))
+    e.injectPlannerStrategy(graft.plans.SingleSplitScanStrategy(_))
     GraftExtensions.MetaFunctions.foreach { case (kind, fname) =>
       e.injectTableFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(fname),

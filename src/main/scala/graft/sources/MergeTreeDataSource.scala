@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.mergetree.{KVRow, KeyOrder, Manifest, MergeTreeTable, PartStats}
+import graft.mergetree.{KVRow, KeyOrder, Manifest, MergeTreeConfig, MergeTreeTable, PartStats}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -372,22 +372,30 @@ class MergeTreeScan(
     required: StructType,
     lo: Option[String],
     hi: Option[String])
-    extends Scan with Batch with SupportsReportStatistics {
+    extends SingleSplitScan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  // One manifest load per scan: statistics, the split decision and
+  // planInputPartitions describe the same part list.
+  private lazy val live = Manifest.load(path).getOrElse(Manifest(0L, Nil)).parts
+
+  /** O8: driver-side part pruning from manifest min/max. */
+  private lazy val surviving = (lo, hi) match {
+    case (None, None) => live
+    case _ => live.filter(p =>
+      p.overlapsRange(lo.getOrElse(p.minKey), hi.getOrElse(p.maxKey)))
+  }
+
+  override lazy val singleSplit: Boolean = MergeTreeConfig().fitsLocalRead(
+    SparkSession.active, surviving.map(_.rowCount).sum, surviving.map(_.diskSize).sum)
 
   /** Manifest-derived statistics for the pruned scan, so Catalyst can size
     * joins (broadcast vs shuffle) over mergetree tables without listing
     * files — the metadata-only stats path of O24.
     */
   override def estimateStatistics(): Statistics = {
-    val manifest = Manifest.load(path).getOrElse(Manifest(0L, Nil))
-    val surviving = (lo, hi) match {
-      case (None, None) => manifest.parts
-      case _ => manifest.parts.filter(p =>
-        p.overlapsRange(lo.getOrElse(p.minKey), hi.getOrElse(p.maxKey)))
-    }
     val bytes = surviving.map(_.diskSize).sum
     val rows = surviving.map(_.rowCount).sum
     new Statistics {
@@ -401,26 +409,34 @@ class MergeTreeScan(
       case (None, None) => "full"
       case _            => s"[${lo.getOrElse("-inf")}, ${hi.getOrElse("+inf")}]"
     }
-    s"mergetree $path range=$range cols=${required.fieldNames.mkString(",")}"
+    s"mergetree $path range=$range cols=${required.fieldNames.mkString(",")}" +
+      MergeTreePartition.splitsNote(singleSplit)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val manifest = Manifest.load(path).getOrElse(Manifest(0L, Nil))
-    val live = manifest.parts
-    // O8: driver-side part pruning from manifest min/max.
-    val surviving = (lo, hi) match {
-      case (None, None) => live
-      case _ => live.filter(p =>
-        p.overlapsRange(lo.getOrElse(p.minKey), hi.getOrElse(p.maxKey)))
-    }
     MergeTreeScan.lastPruning.set((surviving.size, live.size))
-    MergeTreePartition.pack(surviving.flatMap(p =>
-      MergeTreePartition.parquetFiles(Paths.get(path, s"part_${p.partId}"))))
+    MergeTreePartition.plan(surviving.flatMap(p =>
+      MergeTreePartition.parquetFiles(Paths.get(path, s"part_${p.partId}"))), singleSplit)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GenericReaderFactory(required,
       GenericReaderFactory.rangePredicate("key", StringType, lo, hi))
+}
+
+/** A mergetree DSv2 scan that may plan as ONE split. When its statically
+  * pruned parts fit `MergeTreeConfig().fitsLocalRead` (the default config:
+  * the scan knows no table config), carry no
+  * pending lightweight mutations and form no storage-partitioned groups,
+  * it plans exactly one [[MergeTreePartition]] holding every surviving file
+  * in manifest order, never zero, even when a runtime filter empties it.
+  * `graft.plans.SingleSplitScanStrategy` reports that split as Spark's
+  * `SinglePartition`, so no exchange is planned above it: a small SQL read
+  * runs as one Spark job instead of one per stage.
+  */
+trait SingleSplitScan extends Scan {
+  /** The decision, taken once per scan from its static pruning. */
+  def singleSplit: Boolean
 }
 
 /** One scan split: consecutive part files, read in order by a
@@ -436,8 +452,19 @@ object MergeTreePartition {
   private[sources] def parquetFiles(dir: java.nio.file.Path): List[String] =
     PartStats.parquetFiles(dir).map(_.toString)
 
+  /** A plain (mutation-free, ungrouped) scan's splits: one holding every
+    * file when the scan decided [[SingleSplitScan.singleSplit]], else [[pack]].
+    */
+  private[sources] def plan(files: Seq[String], single: Boolean): Array[InputPartition] =
+    if (single) Array(MergeTreePartition(files.toArray)) else pack(files)
+
+  /** The decision as the scans' `description()` (and so EXPLAIN) names it. */
+  private[sources] def splitsNote(single: Boolean): String =
+    if (single) " splits=1 (local budget)" else ""
+
   /** Packs part files into splits by Spark's own file-split rule, the one
-    * `spark.read.parquet` plans with: each file costs its length plus
+    * `spark.read.parquet` plans with, for scans over the one-split budget
+    * ([[SingleSplitScan]]): each file costs its length plus
     * `spark.sql.files.openCostInBytes`, and a split closes when the next
     * file would push it past `FilePartition.maxSplitBytes` (derived from
     * `spark.sql.files.maxPartitionBytes` and `minPartitionNum`). Unlike

@@ -44,13 +44,17 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
       val expect = (0 until 200).flatMap(i => (0 until 100)
         .filter(_ % 4 == i % 4).map(j => (i % 4, i, j))).toSet
 
-      // Default (conf off): plans shuffle exchanges, stays correct.
+      // Default (conf off): plans shuffle exchanges, stays correct. The
+      // tables fit the one-split budget, whose scans need no exchange at
+      // all, so a 1-byte open cost keeps the distributed shape under test.
+      spark.conf.set("spark.sql.files.openCostInBytes", "1")
       val off = spark.sql(q)
       val offRows = off.collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2).toInt)).toSet
       assert(offRows == expect)
       assert(off.queryExecution.executedPlan.toString.contains("Exchange"),
         "without the preserve-data-grouping opt-in the join shuffles as before")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
 
       spark.conf.set("spark.graft.preserveDataGrouping", "true")
       val on = spark.sql(q)
@@ -64,6 +68,7 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
         s"a real join must still be planned:\n$p")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
       spark.conf.unset("spark.graft.preserveDataGrouping")
       spark.sql("DROP TABLE IF EXISTS spj_a")
       spark.sql("DROP TABLE IF EXISTS spj_b")
@@ -141,11 +146,14 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
       val q = "SELECT a.k, b.w FROM spj_bkt.ba a JOIN spj_bkt.bb b ON a.k = b.k"
       val expect = (0 until 100).map(i => (i.toLong, i * 2.0)).toSet
 
-      // Default: preserveDataGrouping off → ordinary shuffled join.
+      // Default: preserveDataGrouping off → ordinary shuffled join (over
+      // the one-split budget, as in the identity-partitioned case above).
+      spark.conf.set("spark.sql.files.openCostInBytes", "1")
       val off = spark.sql(q)
       assert(off.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet == expect)
       assert(off.queryExecution.executedPlan.toString.contains("Exchange"),
         "bucket SPJ must stay opt-in")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
 
       spark.conf.set("spark.graft.preserveDataGrouping", "true")
       val on = spark.sql(q)
@@ -158,6 +166,7 @@ class StoragePartitionJoinSpec extends AnyFunSuite {
         s"a real join must still be planned:\n$p")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.files.openCostInBytes")
       spark.conf.unset("spark.sql.sources.v2.bucketing.pushPartValues.enabled")
       spark.conf.unset("spark.graft.preserveDataGrouping")
     }
