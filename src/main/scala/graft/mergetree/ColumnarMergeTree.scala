@@ -1198,18 +1198,6 @@ final class ColumnarMergeTree private (
       .filter(col(leadKey) >= lit(lo) && col(leadKey) <= lit(hi)))
   }
 
-  /** [[rangeScan]] AS OF snapshot `seq`: plans against the manifest
-    * committed then, with the same driver-side lead-key part pruning as
-    * the live scan (and [[scanAt]]'s loud-failure contract for purged
-    * parts). Multi-scan callers should load once via
-    * [[snapshotPartsOption]] + [[rangeScanOf]] instead.
-    */
-  def rangeScanAt(seq: Long, lo: Any, hi: Any): DataFrame =
-    rangeScanOf(snapshotPartsOption(seq).getOrElse(
-      throw new IllegalArgumentException(
-        s"snapshot $seq is unavailable or no longer readable " +
-          s"(available: ${snapshots.mkString(",")})")), lo, hi)
-
   /** The small-input serve of the lead-key ranges `rangeSets` (see
     * `MergeTreeConfig.localScanMaxRows`): the rows of the parts they
     * overlap, read on the driver through the DSv2 scan's columnar reader,
@@ -2325,27 +2313,6 @@ final class ColumnarMergeTree private (
             p.copy(pendingMuts = Some(p.muts :+ mut))))
         }
       }
-    }
-
-  /** Raw part rows with pending lightweight mutations applied, file paths
-    * baked from ONE manifest (or snapshot) load so the per-predicate union
-    * is self-consistent under concurrent deletes. An engine-face utility:
-    * the SQL/DSv2 face no longer routes through it — the connector scan
-    * applies mutations itself (MutProgram) and keeps part pruning.
-    */
-  private[graft] def visibleRawScan(snapshotSeq: Option[Long]): DataFrame =
-    snapshotSeq match {
-      case None => refresh(); readParts(manifest.parts)
-      case Some(seq) =>
-        val m = SnapshotLog.load(path, seq).getOrElse(
-          throw new IllegalArgumentException(s"no snapshot $seq at $path " +
-            s"(available: ${SnapshotLog.list(path).mkString(",")})"))
-        val missing = m.parts.filterNot(p =>
-          Files.isDirectory(Paths.get(path, p.dir)))
-        require(missing.isEmpty,
-          s"snapshot $seq is no longer readable: parts " +
-            s"${missing.map(_.partId).mkString(",")} were purged (GC grace passed)")
-        readParts(m.parts)
     }
 
   /** Remove the lightweight-delete marker once no part carries a pending

@@ -60,7 +60,8 @@ case class MergeTreeConfig(
       *     `format("mergetree")` and the catalog): the statically pruned
       *     parts, against [[fitsLocalRead]] of the DEFAULT config (the scan
       *     knows no table config); a scan that fits plans one split and no
-      *     exchange (`graft.sources.SingleSplitScan`).
+      *     exchange (`graft.sources.SingleSplitScan`), and a query of such
+      *     scans runs on the driver (`graft.plans.DriverLocalStrategy`).
       * At 100 TB almost every query exceeds this and takes the distributed
       * path; the ones that don't are exactly the ones a job launch would
       * dominate.

@@ -22,8 +22,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * `UnknownPartitioning(0)` even for one split, so without the wrapper
   * `EnsureRequirements` puts an exchange under every aggregate, sort,
   * window and join above a small read. Runtime filters stay on the inner
-  * `BatchScanExec`; any other scan falls through to Spark's planning.
-  * Injected by `GraftExtensions`.
+  * `BatchScanExec`; any other scan falls through to Spark's planning. A
+  * query whose every scan is wrapped so then runs on the driver with no
+  * Spark job ([[DriverLocalStrategy]]). Injected by `GraftExtensions`.
   */
 case class SingleSplitScanStrategy(session: SparkSession) extends SparkStrategy {
 

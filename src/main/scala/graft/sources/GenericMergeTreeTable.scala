@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
   * driver-side part pruning from gmanifest leading-key bounds (O8) and
   * parquet row-group skip via a pushed FilterPredicate (O7). A scan whose
   * pruned parts fit `MergeTreeConfig.fitsLocalRead` plans ONE split that reports
-  * `SinglePartition` (see [[SingleSplitScan]]): no exchange above it, one
-  * Spark job per small read. A larger scan packs the surviving part files,
+  * `SinglePartition` (see [[SingleSplitScan]]): no exchange above it, and
+  * no Spark job for a small read. A larger scan packs the surviving part files,
   * in manifest order, into splits of Spark's own file-split size
   * (MergeTreePartition.pack), so it launches as many tasks as
   * `spark.read.parquet` would. Reads are RAW

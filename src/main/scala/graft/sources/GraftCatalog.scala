@@ -59,13 +59,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     Files.createDirectories(warehouse)
   }
 
-  /** The init-time warehouse — the catalog's layout root for its whole
-    * lifetime (re-pointing the conf after instantiation does NOT move a
-    * cached catalog; resolveDir in GraftSqlParser reads this, not the conf,
-    * so the SQL maintenance verbs can never disagree with name resolution).
-    */
-  private[sources] def warehousePath: Path = warehouse
-
   /** Segment-validated resolve under the warehouse — EVERY identifier and
     * namespace path goes through here, so neither a table name nor a
     * namespace like `..` can traverse outside the warehouse (dropNamespace

@@ -14,11 +14,14 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * via `spark.sql.extensions=graft.sources.GraftExtensions` by GraftSession
   * and the test session.
   *
-  * Four injections: the FINAL-applying SQL read (MergeTreeFinalRule), the
+  * Its injections: the FINAL-applying SQL read (MergeTreeFinalRule), the
   * ClickHouse maintenance-verb parser (GraftSqlParser — OPTIMIZE TABLE,
   * DETACH/ATTACH/DROP/REPLACE PARTITION, MATERIALIZE TTL), the one-split
-  * planning of small scans (graft.plans.SingleSplitScanStrategy), and the
-  * metadata table functions (`uniq_meta` family below).
+  * planning of small scans (graft.plans.SingleSplitScanStrategy), the
+  * driver-run execution of queries over such scans
+  * (graft.plans.DriverLocalStrategy), and the table functions (the
+  * `uniq_meta` metadata family, the search faces, `mergetree_final` and
+  * `query_log` below).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -30,6 +33,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     e.injectParser((session, delegate) => new GraftSqlParser(session, delegate))
     e.injectPlannerStrategy(graft.plans.SingleSplitScanStrategy(_))
+    e.injectPlannerStrategy(graft.plans.DriverLocalStrategy(_))
     GraftExtensions.MetaFunctions.foreach { case (kind, fname) =>
       e.injectTableFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(fname),

@@ -431,8 +431,9 @@ class MergeTreeScan(
   * it plans exactly one [[MergeTreePartition]] holding every surviving file
   * in manifest order, never zero, even when a runtime filter empties it.
   * `graft.plans.SingleSplitScanStrategy` reports that split as Spark's
-  * `SinglePartition`, so no exchange is planned above it: a small SQL read
-  * runs as one Spark job instead of one per stage.
+  * `SinglePartition`, so no exchange is planned above it, and a query
+  * whose every scan decided so runs on the driver with no Spark job
+  * (`graft.plans.DriverLocalStrategy`).
   */
 trait SingleSplitScan extends Scan {
   /** The decision, taken once per scan from its static pruning. */
